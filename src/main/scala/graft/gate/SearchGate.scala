@@ -540,7 +540,11 @@ object SearchGate {
 
   /** RealTimeGet view HANDLE over the (static) two-snapshot fixture —
     * the per-query snapshot listing + schema inference repeated nothing
-    * but driver work; the rows still come off the snapshot parquets at
+    * but driver work. What an action then reads depends on realTimeGet's
+    * branch: on the driver-local branch (every snapshot's docs store
+    * under its byte gate) the view is a LocalRelation built from rows
+    * already cached on the driver, so no parquet is read at action time;
+    * on the distributed branch the rows come off the snapshot parquets at
     * every action. Keyed by (sfDir, ids) to stay general.
     */
   private val rtgDfCache =

@@ -57,15 +57,18 @@ object Deletes {
   }
 
   /** All tombstoned docIds of an index, sorted distinct; empty when the
-    * index has no deletes dir.
+    * index has no deletes dir. One Spark job however many batches: one
+    * read of every batch with the schema `deleteIds` writes (no
+    * per-batch schema-inference job), deduplicated on the driver, where
+    * the array lives anyway.
     */
   def load(spark: SparkSession, dir: String): Array[Long] = {
     val f = new java.io.File(s"$dir/deletes")
     if (!f.isDirectory) return Array.empty
     val batches = f.listFiles().filter(_.isDirectory).map(_.getPath)
     if (batches.isEmpty) return Array.empty
-    batches.toSeq.map(b => spark.read.parquet(b)).reduce(_ unionByName _)
-      .select("docId").distinct().collect().map(_.getLong(0)).sorted
+    spark.read.schema("docId LONG").parquet(batches.toSeq: _*)
+      .collect().map(_.getLong(0)).distinct.sorted
   }
 
   /** Binary-search membership over the sorted tombstone array. */

@@ -174,6 +174,8 @@ object Merge {
       .withColumn("snapshotId", lit(snapshotId))
       .write.mode("overwrite").parquet(s"$outDir/lineage/grp=0")
 
+    carryDeletes(dirs, outDir)
+
     val manifest = Manifest(snapshotId,
       manifests.map(_.docCount).sum,
       manifests.map(_.sumTotalTermFreq).sum,
@@ -185,6 +187,27 @@ object Merge {
       bloom = manifests.exists(_.bloom))
     IndexBuilder.commitManifest(outDir, manifest)
     manifest
+  }
+
+  /** Carry every input's tombstone batches into `outDir/deletes/`: the
+    * merge is a plain docs union over disjoint docId spaces, so a
+    * tombstoned docId names the same doc after it, and deletes stay
+    * pending until `Deletes.expunge` (Lucene keeps deleted docs in merged
+    * stats the same way until forceMergeDeletes). Batches are write-once
+    * directories with unique names, so this is a driver-side file copy
+    * (no Spark job) that replaces whatever `outDir/deletes` held before,
+    * like every other artifact the merge overwrites.
+    */
+  private def carryDeletes(dirs: Seq[String], outDir: String): Unit = {
+    val out = new java.io.File(s"$outDir/deletes")
+    org.apache.commons.io.FileUtils.deleteQuietly(out)
+    for {
+      d <- dirs
+      batches <- Option(new java.io.File(s"$d/deletes").listFiles()).toSeq
+      b <- batches if b.isDirectory
+      target = new java.io.File(out, b.getName)
+      if !target.exists()
+    } org.apache.commons.io.FileUtils.copyDirectory(b, target)
   }
 
   /** Stream consecutive (term, salt) groups; merge each group's decoded

@@ -1,5 +1,6 @@
 package graft.search
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Hit
@@ -303,6 +304,9 @@ object SegmentSearcher {
       after: Option[(Double, Long)] = None, useWand: Boolean = true): Array[Hit] =
     new Searcher(spark, ix, cacheSegments = false).search(q0, k, after, useWand)
 
+  /** Entry cap of a Searcher's `localMatchScores` memo. */
+  val LocalScoresEntries = 32
+
   /** Shared daemon pool for driver-local shard execution — the
     * IndexSearcher leaf-slice executor analog (`IndexSearcher.java:605-615`).
     * Size defaults to the host's processors; `graft.search.localPoolSize`
@@ -325,8 +329,8 @@ object SegmentSearcher {
   /** Blob map of one shard group's rows (markers — salt == -2 — skipped).
     * Lives on the OBJECT so executor closures stay Searcher-free.
     */
-  private[search] def blobsOf(it: Iterator[(Int, SegRow)]): Map[String, SegRow] =
-    it.map(_._2).filter(_.salt != -2).map(r => r.term -> r).toMap
+  private[search] def blobsOf(it: Iterator[SegRow]): Map[String, SegRow] =
+    it.filter(_.salt != -2).map(r => r.term -> r).toMap
 
   /** Exhaustively count a shard's matches (TotalHitCountCollector body). */
   private[search] def countShard(shard: Int, blobs: Map[String, SegRow],
@@ -1190,9 +1194,11 @@ object SegmentSearcher {
   *    leaf-slice executor of `IndexSearcher.java:605-615`. This removes
   *    the per-query shuffle: sub-10ms queries instead of Spark-job
   *    latency.
-  *  - DISTRIBUTED (groupByKey over shards) when the blobs are large —
-  *    hot salted terms at 100 TB scale — so no single node ever holds a
-  *    full posting list.
+  *  - DISTRIBUTED when the blobs are large — hot salted terms at 100 TB
+  *    scale — so no single node ever holds a full posting list: ONE Spark
+  *    job per query (`shardTasks`), reading per-bucket scans planned once
+  *    per Searcher, or — without `cacheSegments` — a per-query pruned
+  *    read that keeps the parquet `term` pushdown.
   */
 final class Searcher(private[search] val spark: SparkSession,
     val index: SegmentSearcher.SegmentIndex,
@@ -2016,50 +2022,74 @@ final class Searcher(private[search] val spark: SparkSession,
     }
   }
 
-  /** (shard, SegRow) pairs for the distributed shard tasks: salted rows go
-    * to their shard, cold rows replicate to every shard. When the query
-    * tree is backed by a MatchAllQ (or `forceAllShards`), zero-byte MARKER
-    * rows (salt == -2, skipped when building the blob map) seed every
-    * shard key — otherwise a shard with no segment rows would produce no
-    * groupByKey group and its MatchAll-derived matches would be silently
-    * lost.
+  /** Per-bucket scans of the cached segments table, planned ONCE per
+    * Searcher (≤ numBuckets entries, dropped in `close()`).
     */
-  private def shardRows(present: Set[String], plan: Plan,
-      forceAllShards: Boolean): Dataset[(Int, SegRow)] = {
-    import spark.implicits._
-    val rows: Dataset[SegRow] =
-      if (present.isEmpty) spark.emptyDataset[SegRow] else prunedRows(present)
+  private val bucketRdds = scala.collection.concurrent.TrieMap
+    .empty[Int, RDD[SegRow]]
+  private def bucketRdd(b: Int): RDD[SegRow] =
+    bucketRdds.getOrElseUpdate(b, {
+      import spark.implicits._
+      segmentsDf.filter(col("bucket") === b)
+        .select("term", "salt", "docBlocks", "skipData", "posBlocks",
+          "payBlocks")
+        .as[SegRow].rdd
+    })
+
+  /** The distributed shard path (hot posting lists never centralize) as
+    * ONE Spark job of two stages, with no per-query Catalyst planning:
+    * the terms' rows (memoized bucket scans filtered by term, or
+    * `prunedRows` without `cacheSegments`) are keyed by shard — salted
+    * rows to their shard, cold rows to every shard — RDD-grouped, and
+    * `f(shard, blobs, plan)` runs per group on the broadcast Plan (shard
+    * -1 when unsharded). For a MatchAll-backed tree (or `forceAllShards`)
+    * zero-byte MARKER rows (salt == -2, skipped by `blobsOf`) seed every
+    * shard, or a shard without rows would form no group and lose its
+    * MatchAll-derived matches.
+    */
+  private def shardTasks[T: scala.reflect.ClassTag](present: Set[String],
+      plan: Plan, forceAllShards: Boolean)(
+      f: (Int, Map[String, SegRow], Plan) => Iterator[T])
+      : RDD[T] = {
+    val sc = spark.sparkContext
+    val rows: RDD[SegRow] =
+      if (present.isEmpty) sc.emptyRDD[SegRow]
+      else if (cacheSegments)
+        sc.union(present.map(t => IndexBuilder.bucketOf(t, m.numBuckets))
+          .toSeq.sorted.map(bucketRdd)).filter(r => present(r.term))
+      else prunedRows(present).rdd
     val S = plan.numShards
     val sharded = plan.sharded
-    val shardOf: SegRow => Seq[(Int, SegRow)] =
-      if (!sharded) r => Seq((0, r))
-      else r =>
-        if (r.salt >= 0) Seq((r.salt, r))
-        else (0 until S).map(s => (s, r))
-    val base = rows.flatMap(shardOf)
-    if (!forceAllShards && !Query.containsMatchAll(plan.query)) base
-    else {
-      val empty = Array.empty[Byte]
-      val markers = (0 until (if (sharded) S else 1))
-        .map(s => (s, SegRow("", -2, empty, empty, empty, empty)))
-      base.union(markers.toDS())
+    val keyed = rows.flatMap { r =>
+      if (!sharded) Iterator.single((0, r))
+      else if (r.salt >= 0) Iterator.single((r.salt, r))
+      else Iterator.tabulate(S)(s => (s, r))
     }
+    val nKeys = if (sharded) S else 1
+    val all =
+      if (!forceAllShards && !Query.containsMatchAll(plan.query)) keyed
+      else {
+        val empty = Array.empty[Byte]
+        keyed.union(sc.parallelize(Seq.tabulate(nKeys)(s =>
+          (s, SegRow("", -2, empty, empty, empty, empty))), 1))
+      }
+    val bPlan = sc.broadcast(plan)
+    all.groupByKey(new org.apache.spark.HashPartitioner(
+        math.max(1, math.min(nKeys, sc.defaultParallelism))))
+      .flatMap { case (shard, it) =>
+        val p = bPlan.value
+        f(if (p.sharded) shard else -1, blobsOf(it.iterator), p)
+      }
   }
 
-  /** Shuffle blobs to shard tasks (the 100 TB path: hot posting lists
-    * never centralize).
+  /** Top-k per shard inside the shard tasks, partials collected: one
+    * Spark job per query, no per-query Catalyst planning (see
+    * [[shardTasks]]).
     */
-  private def execDistributed(present: Set[String], plan: Plan): Seq[Array[Hit]] = {
-    import spark.implicits._
-    val bPlan = spark.sparkContext.broadcast(plan)
-    shardRows(present, plan, forceAllShards = false)
-      .groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val p = bPlan.value
-        execShard(if (p.sharded) shard else -1, blobsOf(it), p)
-      }
-      .collect().toSeq
-  }
+  private def execDistributed(present: Set[String], plan: Plan): Seq[Array[Hit]] =
+    shardTasks(present, plan, forceAllShards = false) { (s, blobs, p) =>
+      Iterator.single(execShard(s, blobs, p))
+    }.collect().toSeq
 
   private[search] def prunedRows(present: Set[String]): Dataset[SegRow] = {
     import spark.implicits._
@@ -2118,18 +2148,10 @@ final class Searcher(private[search] val spark: SparkSession,
           .map(r => r.term -> r).toMap
         if (blobs.isEmpty) 0L else SegmentSearcher.countShard(s, blobs, plan)
       }.sum
-    } else {
-      import spark.implicits._
-      val bPlan = spark.sparkContext.broadcast(plan)
-      shardRows(present, plan, forceAllShards = false)
-        .groupByKey(_._1)
-        .mapGroups { (shard, it) =>
-          val p = bPlan.value
-          SegmentSearcher.countShard(if (p.sharded) shard else -1,
-            SegmentSearcher.blobsOf(it), p)
-        }
-        .collect().sum
-    }
+    } else
+      shardTasks(present, plan, forceAllShards = false) { (s, blobs, p) =>
+        Iterator.single(SegmentSearcher.countShard(s, blobs, p))
+      }.collect().sum
   }
 
   // ---------- collector protocol ----------
@@ -2227,18 +2249,11 @@ final class Searcher(private[search] val spark: SparkSession,
               }
               futs.map(_.get())
             }
-          } else {
-            import spark.implicits._
-            val bPlan = spark.sparkContext.broadcast(plan)
-            shardRows(present, plan, forceAllShards = false)
-              .groupByKey(_._1)
-              .mapGroups { (shard, it) =>
-                val p = bPlan.value
-                SegmentSearcher.topkCountShard(if (p.sharded) shard else -1,
-                  SegmentSearcher.blobsOf(it), p)
-              }
-              .collect().toSeq
-          }
+          } else
+            shardTasks(present, plan, forceAllShards = false) {
+              (s, blobs, p) =>
+                Iterator.single(SegmentSearcher.topkCountShard(s, blobs, p))
+            }.collect().toSeq
         (TopK.merge(partials.map(_._1), k), partials.map(_._2).sum)
     }
   }
@@ -2757,23 +2772,16 @@ final class Searcher(private[search] val spark: SparkSession,
       // distributed: first-pass hits broadcast to the shard tasks, blobs
       // stay executor-side; forceAllShards seeds a group even for shards
       // whose rescore-query blobs are empty (their hits keep firstScore)
-      import spark.implicits._
-      val bPlan = spark.sparkContext.broadcast(plan)
       val byShard: Map[Int, Array[Hit]] =
-        if (!sharded) Map(0 -> first)
+        if (!sharded) Map(-1 -> first)
         else first.groupBy(h => (h.docId % plan.numShards).toInt)
       val bHits = spark.sparkContext.broadcast(byShard)
       val w = weight
-      shardRows(present, plan, forceAllShards = true)
-        .groupByKey(_._1)
-        .flatMapGroups { (shard, it) =>
-          val p = bPlan.value
-          val hits = bHits.value.getOrElse(shard, Array.empty[Hit])
-          if (hits.isEmpty) Iterator.empty
-          else SegmentSearcher.rescoreShard(if (p.sharded) shard else -1,
-            SegmentSearcher.blobsOf(it), p, hits, w)
-        }
-        .collect()
+      shardTasks(present, plan, forceAllShards = true) { (s, blobs, p) =>
+        val hits = bHits.value.getOrElse(s, Array.empty[Hit])
+        if (hits.isEmpty) Iterator.empty
+        else SegmentSearcher.rescoreShard(s, blobs, p, hits, w).iterator
+      }.collect()
         .foreach(h => queue.insert(h.docId, h.score))
     }
     queue.sortedHits
@@ -3662,23 +3670,17 @@ final class Searcher(private[search] val spark: SparkSession,
     val matches: DataFrame = liveDf(
       if (present.isEmpty) dv.select("docId")
       else {
-        val bPlan = spark.sparkContext.broadcast(plan)
         // index-sorted + asc: per-shard docId order IS field order, so
         // each shard task emits only its first k matches — the join +
         // global top-k below sees numShards·k rows instead of every match
         val earlyK = if (asc && m.indexSort.contains(field)) k else Int.MaxValue
-        shardRows(present, plan, forceAllShards = false)
-          .groupByKey(_._1)
-          .flatMapGroups { (shard, it) =>
-            val p = bPlan.value
-            val scorer = SegmentSearcher.buildScorer(p.query,
-              if (p.sharded) shard else -1, SegmentSearcher.blobsOf(it), p, 1f)
-            Iterator.continually(scorer.nextDoc())
-              .takeWhile(_ != DocScorer.NO_MORE)
-              .filterNot(graft.index.Deletes.contains(p.deletes, _))
-              .take(earlyK)
-          }
-          .toDF("docId")
+        shardTasks(present, plan, forceAllShards = false) { (s, blobs, p) =>
+          val scorer = SegmentSearcher.buildScorer(p.query, s, blobs, p, 1f)
+          Iterator.continually(scorer.nextDoc())
+            .takeWhile(_ != DocScorer.NO_MORE)
+            .filterNot(graft.index.Deletes.contains(p.deletes, _))
+            .take(earlyK)
+        }.toDF("docId")
       })
     matches.join(dv, "docId")
       .orderBy(if (asc) col("sortv").asc else col("sortv").desc,
@@ -3963,18 +3965,13 @@ final class Searcher(private[search] val spark: SparkSession,
       keyField: String, maxPerKey: Int, k: Int): Array[Hit] = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val bPlan = spark.sparkContext.broadcast(plan)
-    val matches = shardRows(present, plan, forceAllShards = false)
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, it) =>
-        val p = bPlan.value
-        val scorer = SegmentSearcher.buildScorer(p.query,
-          if (p.sharded) shard else -1, SegmentSearcher.blobsOf(it), p, 1f)
+    val matches = shardTasks(present, plan, forceAllShards = false) {
+      (s, blobs, p) =>
+        val scorer = SegmentSearcher.buildScorer(p.query, s, blobs, p, 1f)
         Iterator.continually(scorer.nextDoc())
           .takeWhile(_ != DocScorer.NO_MORE)
           .map(d => (d, scorer.score.toDouble))
-      }
-      .toDF("docId", "score")
+    }.toDF("docId", "score")
     val dv = docsDf.select(col("docId"), col(keyField).cast("string").as("dkey"))
     val w = Window.partitionBy("dkey")
       .orderBy(col("score").desc, col("docId").asc)
@@ -4188,19 +4185,14 @@ final class Searcher(private[search] val spark: SparkSession,
   private def dvFilteredDistributed(plan: Plan, present: Set[String],
       field: String, pred: DvPred, k: Int): Array[Hit] = {
     import spark.implicits._
-    val bPlan = spark.sparkContext.broadcast(plan)
-    val matches = shardRows(present, plan, forceAllShards = false)
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, it) =>
-        val p = bPlan.value
-        val scorer = SegmentSearcher.buildScorer(p.query,
-          if (p.sharded) shard else -1, SegmentSearcher.blobsOf(it), p, 1f)
+    val matches = shardTasks(present, plan, forceAllShards = false) {
+      (s, blobs, p) =>
+        val scorer = SegmentSearcher.buildScorer(p.query, s, blobs, p, 1f)
         Iterator.continually(scorer.nextDoc())
           .takeWhile(_ != DocScorer.NO_MORE)
           .filterNot(graft.index.Deletes.contains(p.deletes, _))
           .map(d => (d, scorer.score.toDouble))
-      }
-      .toDF("docId", "score")
+    }.toDF("docId", "score")
     val dv = dvDocsDf.filter(dvPredCol(field, pred)).select(col("docId"))
     matches.join(dv, "docId")
       .orderBy(col("score").desc, col("docId").asc)
@@ -4467,18 +4459,12 @@ final class Searcher(private[search] val spark: SparkSession,
       m.docCount, params, useWand = false))
     val present = terms.filter(st.contains)
     if (present.isEmpty && !hasAll) return emptyDf
-    val bPlan = spark.sparkContext.broadcast(plan)
-    shardRows(present, plan, forceAllShards = false)
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, it) =>
-        val p = bPlan.value
-        val scorer = SegmentSearcher.buildScorer(p.query,
-          if (p.sharded) shard else -1, SegmentSearcher.blobsOf(it), p, 1f)
-        Iterator.continually(scorer.nextDoc())
-          .takeWhile(_ != DocScorer.NO_MORE)
-          .map(d => (d, scorer.score))
-      }
-      .toDF("docId", "ms")
+    shardTasks(present, plan, forceAllShards = false) { (s, blobs, p) =>
+      val scorer = SegmentSearcher.buildScorer(p.query, s, blobs, p, 1f)
+      Iterator.continually(scorer.nextDoc())
+        .takeWhile(_ != DocScorer.NO_MORE)
+        .map(d => (d, scorer.score))
+    }.toDF("docId", "ms")
   }
 
   /** The value source evaluated over the whole corpus: (docId, v float).
@@ -4837,15 +4823,22 @@ final class Searcher(private[search] val spark: SparkSession,
   /** All matches of `q` with scores via the DRIVER-LOCAL scorer walk —
     * the zero-job twin of [[matchScoresDf]] (same rewrite, same Plan,
     * same buildScorer per shard, same blob pruning), for callers already
-    * inside the `maxLocalBytes` regime. Memoized per rewritten query:
+    * inside the `maxLocalBytes` regime. Memoized per query in an LRU of
+    * `LocalScoresEntries` match-count-sized maps, cleared in `close()`:
     * one function tree re-resolves the same QueryV several times
     * (exists + value), and re-walking postings for each is pure waste.
     */
-  private val localScoresCache = scala.collection.concurrent.TrieMap
-    .empty[Query, scala.collection.mutable.LongMap[Float]]
-  private[search] def localMatchScores(
+  private val localScoresCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[Query, scala.collection.mutable.LongMap[Float]](
+        16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Query,
+          scala.collection.mutable.LongMap[Float]]): Boolean =
+        this.size() > SegmentSearcher.LocalScoresEntries
+    })
+  private[graft] def localScoresCacheSize: Int = localScoresCache.size()
+  private[graft] def localMatchScores(
       q0: Query): scala.collection.mutable.LongMap[Float] =
-    localScoresCache.getOrElseUpdate(q0, {
+    Option(localScoresCache.get(q0)).getOrElse {
       val out = new scala.collection.mutable.LongMap[Float]()
       var q = Query.rewrite(q0)
       q = Query.rewrite(expandMultiTerm(q))
@@ -4880,8 +4873,9 @@ final class Searcher(private[search] val spark: SparkSession,
           }
         }
       }
+      localScoresCache.put(q0, out) // walked outside the map's lock
       out
-    })
+    }
 
   /** Decoded classic norm per doc, loaded once per Searcher (docCount-
     * sized — callers sit behind the dvBytes gate).
@@ -4975,6 +4969,8 @@ final class Searcher(private[search] val spark: SparkSession,
   }
 
   def close(): Unit = {
+    bucketRdds.clear()
+    localScoresCache.clear()
     if (cacheSegments) {
       segmentsDf.unpersist()
       termStatsDf.unpersist()

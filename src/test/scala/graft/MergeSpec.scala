@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.index.{IndexBuilder, Merge}
+import graft.index.{Deletes, IndexBuilder, Merge}
 import graft.index.IndexBuilder.BuildConfig
 import graft.search._
 import graft.streaming.StreamingIndex
@@ -239,5 +239,45 @@ class MergeSpec extends AnyFunSuite {
       build(numbered, s"$tmp/full")
     for (q <- queries)
       assert(hits(snaps.head, q) === hits(s"$tmp/full", q), s"q=$q")
+  }
+
+  test("tiered compaction carries deletes: tombstoned docs stay deleted") {
+    val idx = s"$tmp/tiered-del"
+    val slices = Seq(150, 100, 150)
+    var off = 0
+    slices.zipWithIndex.foreach { case (n, i) =>
+      build(numbered.slice(off, off + n), f"$idx/snap=$i%03d")
+      off += n
+    }
+    // tombstone the two best 'def' hits of the first and the last snapshot
+    val snaps0 = StreamingIndex.snapshots(idx)
+    val del = Seq(snaps0.head, snaps0.last).flatMap { p =>
+      val ids = SegmentSearcher.search(spark, SegmentSearcher.load(p),
+        TermQ("def"), 2).map(_.docId).toSeq
+      Deletes.deleteIds(spark, p, ids)
+      ids
+    }.toSet
+    assert(del.size === 4)
+    // 3 → (merge the 2 smallest) → 2 → 1: the first snapshot's batch
+    // rides through an intermediate merge
+    assert(StreamingIndex.compactTiered(spark, idx,
+      maxMergeAtOnce = 2, segsPerTier = 1) === 2)
+    val merged = StreamingIndex.snapshots(idx)
+    assert(merged.size === 1)
+    assert(Deletes.load(spark, merged.head).toSet === del)
+    if (!new java.io.File(s"$tmp/full/manifest.json").exists())
+      build(numbered, s"$tmp/full")
+    val s = new Searcher(spark, SegmentSearcher.load(merged.head))
+    val ref = new Searcher(spark, SegmentSearcher.load(s"$tmp/full"))
+    for (q <- queries) {
+      val got = s.search(q, 20).map(h => (h.docId, h.score)).toSeq
+      assert(got.forall { case (d, _) => !del(d) }, s"q=$q")
+      // merged stats still count the deleted docs (Lucene's law until
+      // expunge), so scores equal the full build's minus the tombstones
+      val all = ref.search(q, numbered.size).map(h => (h.docId, h.score))
+      assert(got === all.filterNot(h => del(h._1)).take(20).toSeq, s"q=$q")
+      assert(s.count(q) === all.count(h => !del(h._1)), s"q=$q")
+    }
+    s.close(); ref.close()
   }
 }
