@@ -1,7 +1,9 @@
 package graft.search
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
 import graft.core.Hit
 import graft.index.{IndexBuilder, PostingsCodec}
@@ -325,6 +327,49 @@ object SegmentSearcher {
   }
 
   // ---------- per-shard execution ----------
+
+  /** A table pinned in memory by a `cacheSegments` Searcher: `rows`, ONE
+    * scan of its query columns planned once per Searcher, and the buckets
+    * each cached partition (each partition of `rows`) holds.
+    */
+  private[search] final case class Pinned(df: DataFrame,
+      rows: RDD[InternalRow], parts: Array[java.util.BitSet]) {
+    /** `rows` of the cached partitions that hold any of `buckets`: Spark
+      * schedules no task that would read nothing.
+      */
+    def over(buckets: Set[Int]): RDD[InternalRow] = {
+      val keep = parts.map(p => buckets.exists(b => p.get(b)))
+      PartitionPruningRDD.create(rows, i => keep(i))
+    }
+  }
+
+  /** Columns of a pinned segments scan, in [[segRowsOf]]'s order. */
+  private[search] val SegCols =
+    Seq("term", "salt", "docBlocks", "skipData", "posBlocks", "payBlocks")
+
+  /** The rows of `terms` in a pinned segments scan. The term is matched
+    * on the scan's own bytes, so other rows' blobs are never copied out.
+    */
+  private[search] def segRowsOf(rows: RDD[InternalRow],
+      terms: Set[String]): RDD[SegRow] = {
+    val want = terms.map(UTF8String.fromString)
+    rows.flatMap { r =>
+      if (!want(r.getUTF8String(0))) None
+      else Some(SegRow(r.getString(0), r.getInt(1), r.getBinary(2),
+        r.getBinary(3), r.getBinary(4), r.getBinary(5)))
+    }
+  }
+
+  /** One record of a cold stats lookup: a term's (df, ttf), or one of its
+    * segment rows — None when the row is over its byte share.
+    */
+  private[search] type ColdRec =
+    Either[(String, (Long, Long)), (String, Option[SegRow])]
+
+  /** Blob bytes of one segment row. */
+  private[search] def rowBytes(r: SegRow): Long =
+    r.docBlocks.length.toLong + r.skipData.length + r.posBlocks.length +
+      r.payBlocks.length
 
   /** Blob map of one shard group's rows (markers — salt == -2 — skipped).
     * Lives on the OBJECT so executor closures stay Searcher-free.
@@ -1183,22 +1228,29 @@ object SegmentSearcher {
 
 }
 
-/** Reusable query handle over one index: caches the segments / termstats
-  * DataFrames (optionally pinned in memory), memoizes term stats, and
-  * picks the execution mode per query:
+/** Reusable query handle over one index: pins the segments / termstats
+  * tables in memory (`cacheSegments`, on first use, each by one job that
+  * also maps which buckets each cached partition holds, over a scan
+  * planned once per Searcher), memoizes term stats, and picks the
+  * execution mode per query:
   *
+  *  - COLD TERMS cost one Spark job with no per-query Catalyst planning:
+  *    `stats` reads both pinned scans, run only on the partitions holding
+  *    the terms' buckets, and the same job prefetches the terms' posting
+  *    rows into the blob cache — at most `maxLocalBytes` per call, none
+  *    when it is 0.
   *  - DRIVER-LOCAL when the estimated posting bytes for the query terms
-  *    fit `maxLocalBytes`: collect the pruned blobs once and run the
-  *    per-shard scorer trees on a thread pool — the coordinator-side
-  *    merge of SolrCloud (`QueryComponent.mergeIds`) fused with the
-  *    leaf-slice executor of `IndexSearcher.java:605-615`. This removes
-  *    the per-query shuffle: sub-10ms queries instead of Spark-job
-  *    latency.
+  *    fit `maxLocalBytes`: the blobs (prefetched, cached, or read once)
+  *    feed per-shard scorer trees on a thread pool — the
+  *    coordinator-side merge of SolrCloud (`QueryComponent.mergeIds`)
+  *    fused with the leaf-slice executor of `IndexSearcher.java:605-615`.
+  *    A warm query starts no Spark job; a cold one only the stats job.
   *  - DISTRIBUTED when the blobs are large — hot salted terms at 100 TB
   *    scale — so no single node ever holds a full posting list: ONE Spark
-  *    job per query (`shardTasks`), reading per-bucket scans planned once
-  *    per Searcher, or — without `cacheSegments` — a per-query pruned
-  *    read that keeps the parquet `term` pushdown.
+  *    job per query (`shardTasks`) over the same pinned scan.
+  *
+  * Without `cacheSegments` nothing is pinned: stats and rows are per-query
+  * pruned parquet reads that keep the `term` pushdown.
   */
 final class Searcher(private[search] val spark: SparkSession,
     val index: SegmentSearcher.SegmentIndex,
@@ -1244,7 +1296,39 @@ final class Searcher(private[search] val spark: SparkSession,
       df.filter(live(col("docId")))
     }
 
-  lazy val segmentsDf: DataFrame = {
+  /** Tables this Searcher pinned in memory, unpersisted by `close()`. */
+  private val pinned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+
+  /** Persist `df`, plan its scan of `cols` (then `bucket`) once, and
+    * materialise it with ONE job over that scan that returns the buckets
+    * each cached partition holds, so a lookup runs only the partitions
+    * holding its buckets.
+    */
+  private def pin(df: DataFrame, cols: Seq[String]): Pinned = {
+    val p = df.persist()
+    pinned.add(p)
+    val rows = p.select((cols :+ "bucket").map(col): _*).queryExecution.toRdd
+    val bi = cols.size
+    val parts = rows.mapPartitions { it =>
+      val bs = new java.util.BitSet
+      it.foreach(r => bs.set(r.getInt(bi)))
+      Iterator.single(bs)
+    }.collect()
+    Pinned(p, rows, parts)
+  }
+
+  private lazy val pinnedSegments: Pinned = pin(segmentsRead, SegCols)
+  private lazy val pinnedStats: Pinned =
+    pin(spark.read.parquet(s"${index.dir}/termstats"), Seq("term", "df", "ttf"))
+
+  lazy val segmentsDf: DataFrame =
+    if (cacheSegments) pinnedSegments.df else segmentsRead
+
+  lazy val termStatsDf: DataFrame =
+    if (cacheSegments) pinnedStats.df
+    else spark.read.parquet(s"${index.dir}/termstats")
+
+  private def segmentsRead: DataFrame = {
     val raw = spark.read
       .option("basePath", s"${index.dir}/segments")
       .parquet(index.segmentPaths: _*)
@@ -1257,15 +1341,8 @@ final class Searcher(private[search] val spark: SparkSession,
     val withPay =
       if (withPos.columns.contains("payBlocks")) withPos
       else withPos.withColumn("payBlocks", lit(Array.empty[Byte]))
-    val df = withPay
-      .select("bucket", "term", "salt", "docBlocks", "skipData", "posBlocks",
-        "payBlocks")
-    if (cacheSegments) { val p = df.persist(); p.count(); p } else df
-  }
-
-  lazy val termStatsDf: DataFrame = {
-    val df = spark.read.parquet(s"${index.dir}/termstats")
-    if (cacheSegments) { val p = df.persist(); p.count(); p } else df
+    withPay.select("bucket", "term", "salt", "docBlocks", "skipData",
+      "posBlocks", "payBlocks")
   }
 
   /** term → (df, ttf); None memoized for absent terms. */
@@ -1421,6 +1498,13 @@ final class Searcher(private[search] val spark: SparkSession,
       present: Set[String]): Long =
     present.toSeq.map(t => st(t)._1 * 4L + 64L).sum
 
+  /** term → (df, ttf) for the present terms, memoized per Searcher (absent
+    * terms too). A cold lookup on a `cacheSegments` Searcher is ONE Spark
+    * job with no per-query Catalyst planning ([[coldLookup]]); when
+    * `maxLocalBytes > 0` that same job prefetches the terms' posting rows
+    * into the blob cache, never more than `maxLocalBytes` per call.
+    * Without `cacheSegments` it is a pruned parquet read.
+    */
   def stats(terms: Set[String]): Map[String, (Long, Long)] = {
     val missing0 = terms.filterNot(statsCache.contains)
     // bloom fail-fast (`BloomFilteringPostingsFormat.java:83-120`
@@ -1437,15 +1521,52 @@ final class Searcher(private[search] val spark: SparkSession,
         maybe
       }
     if (missing.nonEmpty) {
-      val buckets = missing.map(t => IndexBuilder.bucketOf(t, m.numBuckets)).toSeq
-      val got = termStatsDf
-        .filter(col("bucket").isin(buckets: _*) &&
-          col("term").isin(missing.toSeq: _*))
-        .select("term", "df", "ttf").collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val got =
+        if (cacheSegments) coldLookup(missing)
+        else termStatsDf
+          .filter(col("bucket").isin(bucketsOf(missing).toSeq: _*) &&
+            col("term").isin(missing.toSeq: _*))
+          .select("term", "df", "ttf").collect()
+          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       missing.foreach(t => statsCache.put(t, got.get(t)))
     }
     terms.flatMap(t => statsCache(t).map(t -> _)).toMap
+  }
+
+  /** The cold stats of `missing` in ONE Spark job over the pinned scans,
+    * with no per-query Catalyst planning. When `maxLocalBytes > 0` the job also brings back the terms' segment
+    * rows whose blob bytes fit a per-row share of
+    * `maxLocalBytes / (terms × numDocShards)`, so one call never ships
+    * more than `maxLocalBytes`; a row over its share comes back as a stub
+    * (None). A term goes into the blob cache only when every one of its
+    * rows came back whole; `fetchRows` then finds it with no second job,
+    * and any other term falls back to `fetchRows`' own read.
+    */
+  private def coldLookup(missing: Set[String]): Map[String, (Long, Long)] = {
+    val buckets = bucketsOf(missing)
+    val share =
+      if (maxLocalBytes <= 0) 0L
+      else maxLocalBytes / (missing.size.toLong * m.numDocShards)
+    val want = missing.map(UTF8String.fromString)
+    val stats = pinnedStats.over(buckets).flatMap[ColdRec] { r =>
+      if (!want(r.getUTF8String(0))) None
+      else Some(Left(r.getString(0) -> (r.getLong(1), r.getLong(2))))
+    }
+    val all =
+      if (share <= 0) stats
+      else stats.union(segRowsOf(pinnedSegments.over(buckets), missing)
+        .map[ColdRec](r =>
+          Right(r.term -> Some(r).filter(rowBytes(_) <= share))))
+    val got = all.collect()
+    val st = got.collect { case Left(s) => s }.toMap
+    if (share > 0) {
+      val rows = got.collect { case Right(r) => r }.groupMap(_._1)(_._2)
+      st.keys.foreach { t =>
+        val rs = rows.getOrElse(t, Array.empty[Option[SegRow]])
+        if (rs.forall(_.isDefined)) blobCache.putSized(t, rs.flatten.toArray)
+      }
+    }
+    st
   }
 
   /** CommonTermsQuery (`queries/CommonTermsQuery.java:64-214`): splits
@@ -1987,12 +2108,23 @@ final class Searcher(private[search] val spark: SparkSession,
     Some((plan, terms.filter(st.contains), st))
   }
 
-  /** Pruned read of the query terms' blobs, through the driver cache. */
+  /** The segment rows of `terms`: the pinned scan pruned to their buckets
+    * (no per-query Catalyst planning), or without `cacheSegments` a pruned
+    * parquet read.
+    */
+  private def termRows(terms: Set[String]): RDD[SegRow] =
+    if (cacheSegments) segRowsOf(pinnedSegments.over(bucketsOf(terms)), terms)
+    else prunedRows(terms).rdd
+
+  private def bucketsOf(terms: Set[String]): Set[Int] =
+    terms.map(t => IndexBuilder.bucketOf(t, m.numBuckets))
+
+  /** The query terms' blobs, through the driver cache. */
   private[search] def fetchRows(present: Set[String]): Array[SegRow] = {
     val cached = present.toSeq.map(t => t -> blobCache.getSync(t))
     val missing = cached.collect { case (t, None) => t }.toSet
     if (missing.nonEmpty) {
-      val fetched = prunedRows(missing).collect().groupBy(_.term)
+      val fetched = termRows(missing).collect().groupBy(_.term)
       missing.foreach(t =>
         blobCache.putSized(t, fetched.getOrElse(t, Array.empty[SegRow])))
     }
@@ -2000,46 +2132,48 @@ final class Searcher(private[search] val spark: SparkSession,
       Array.empty[SegRow])).toArray
   }
 
+  /** The driver-local shard split: the query terms' rows (through the
+    * blob cache) grouped by doc shard — salted rows to their shard, cold
+    * rows to every shard — or one group, shard -1, when unsharded. A
+    * shard without rows is kept when the tree is MatchAll-backed, as the
+    * distributed path's marker rows keep it.
+    */
+  private def localShards(present: Set[String],
+      plan: Plan): Seq[(Int, Map[String, SegRow])] = {
+    val hasAll = Query.containsMatchAll(plan.query)
+    val rows = if (present.isEmpty) Array.empty[SegRow] else fetchRows(present)
+    val groups =
+      if (!plan.sharded) Seq(-1 -> rows.map(r => r.term -> r).toMap)
+      else (0 until plan.numShards).map { s =>
+        s -> rows.filter(r => r.salt == s || r.salt < 0)
+          .map(r => r.term -> r).toMap
+      }
+    groups.filter { case (_, blobs) => blobs.nonEmpty || hasAll }
+  }
+
+  /** `f` over the local shard groups, on the driver's thread pool when
+    * there are several.
+    */
+  private def onLocalPool[T](present: Set[String], plan: Plan)(
+      f: (Int, Map[String, SegRow]) => T): Seq[T] =
+    localShards(present, plan) match {
+      case Seq((s, blobs)) => Seq(f(s, blobs))
+      case shards =>
+        shards.map { case (s, blobs) =>
+          SegmentSearcher.localPool.submit(
+            new java.util.concurrent.Callable[T] { def call(): T = f(s, blobs) })
+        }.map(_.get())
+    }
+
   /** Pruned read (through the blob cache) → thread-pool over shards on
     * the driver.
     */
-  private def execLocal(present: Set[String], plan: Plan): Seq[Array[Hit]] = {
-    val rows = fetchRows(present)
-    if (rows.isEmpty) return Nil
-    if (!plan.sharded) Seq(execShard(-1, rows.map(r => r.term -> r).toMap, plan))
-    else {
-      val byShard = (0 until plan.numShards).map { s =>
-        s -> rows.filter(r => r.salt == s || r.salt < 0)
-          .map(r => r.term -> r).toMap
-      }.filter(_._2.nonEmpty)
-      val futs = byShard.map { case (s, blobs) =>
-        SegmentSearcher.localPool.submit(
-          new java.util.concurrent.Callable[Array[Hit]] {
-            def call(): Array[Hit] = execShard(s, blobs, plan)
-          })
-      }
-      futs.map(_.get())
-    }
-  }
-
-  /** Per-bucket scans of the cached segments table, planned ONCE per
-    * Searcher (≤ numBuckets entries, dropped in `close()`).
-    */
-  private val bucketRdds = scala.collection.concurrent.TrieMap
-    .empty[Int, RDD[SegRow]]
-  private def bucketRdd(b: Int): RDD[SegRow] =
-    bucketRdds.getOrElseUpdate(b, {
-      import spark.implicits._
-      segmentsDf.filter(col("bucket") === b)
-        .select("term", "salt", "docBlocks", "skipData", "posBlocks",
-          "payBlocks")
-        .as[SegRow].rdd
-    })
+  private def execLocal(present: Set[String], plan: Plan): Seq[Array[Hit]] =
+    onLocalPool(present, plan)(execShard(_, _, plan))
 
   /** The distributed shard path (hot posting lists never centralize) as
     * ONE Spark job of two stages, with no per-query Catalyst planning:
-    * the terms' rows (memoized bucket scans filtered by term, or
-    * `prunedRows` without `cacheSegments`) are keyed by shard — salted
+    * the terms' rows ([[termRows]]) are keyed by shard — salted
     * rows to their shard, cold rows to every shard — RDD-grouped, and
     * `f(shard, blobs, plan)` runs per group on the broadcast Plan (shard
     * -1 when unsharded). For a MatchAll-backed tree (or `forceAllShards`)
@@ -2052,12 +2186,8 @@ final class Searcher(private[search] val spark: SparkSession,
       f: (Int, Map[String, SegRow], Plan) => Iterator[T])
       : RDD[T] = {
     val sc = spark.sparkContext
-    val rows: RDD[SegRow] =
-      if (present.isEmpty) sc.emptyRDD[SegRow]
-      else if (cacheSegments)
-        sc.union(present.map(t => IndexBuilder.bucketOf(t, m.numBuckets))
-          .toSeq.sorted.map(bucketRdd)).filter(r => present(r.term))
-      else prunedRows(present).rdd
+    val rows =
+      if (present.isEmpty) sc.emptyRDD[SegRow] else termRows(present)
     val S = plan.numShards
     val sharded = plan.sharded
     val keyed = rows.flatMap { r =>
@@ -2093,9 +2223,8 @@ final class Searcher(private[search] val spark: SparkSession,
 
   private[search] def prunedRows(present: Set[String]): Dataset[SegRow] = {
     import spark.implicits._
-    val buckets = present.map(t => IndexBuilder.bucketOf(t, m.numBuckets)).toSeq
     segmentsDf
-      .filter(col("bucket").isin(buckets: _*) &&
+      .filter(col("bucket").isin(bucketsOf(present).toSeq: _*) &&
         col("term").isin(present.toSeq: _*))
       .select("term", "salt", "docBlocks", "skipData", "posBlocks",
         "payBlocks")
@@ -2138,17 +2267,11 @@ final class Searcher(private[search] val spark: SparkSession,
     val plan = withDeletes(Plan(q, 1, None, weights, cache, m.numDocShards, sharded,
       m.docCount, params, useWand = false))
     if (present.isEmpty) SegmentSearcher.countShard(-1, Map.empty, plan)
-    else if (estPostingBytes(st, present) <= maxLocalBytes) {
-      val rows = fetchRows(present)
-      if (rows.isEmpty) 0L
-      else if (!sharded)
-        SegmentSearcher.countShard(-1, rows.map(r => r.term -> r).toMap, plan)
-      else (0 until plan.numShards).map { s =>
-        val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-          .map(r => r.term -> r).toMap
-        if (blobs.isEmpty) 0L else SegmentSearcher.countShard(s, blobs, plan)
+    else if (estPostingBytes(st, present) <= maxLocalBytes)
+      localShards(present, plan).map { case (s, b) =>
+        SegmentSearcher.countShard(s, b, plan)
       }.sum
-    } else
+    else
       shardTasks(present, plan, forceAllShards = false) { (s, blobs, p) =>
         Iterator.single(SegmentSearcher.countShard(s, blobs, p))
       }.collect().sum
@@ -2195,13 +2318,7 @@ final class Searcher(private[search] val spark: SparkSession,
               "collector protocol is driver-local: postings exceed " +
                 "maxLocalBytes — use searchWithCount (fused shard " +
                 "partials) or raise maxLocalBytes")
-            val rows = fetchRows(present)
-            if (rows.isEmpty) Nil
-            else if (!plan.sharded) Seq((-1, rows.map(r => r.term -> r).toMap))
-            else (0 until plan.numShards).map { s =>
-              s -> rows.filter(r => r.salt == s || r.salt < 0)
-                .map(r => r.term -> r).toMap
-            }.filter(_._2.nonEmpty)
+            localShards(present, plan)
           }
         // sequential, shard-ascending: collectors are stateful and the
         // reference's leaf order is likewise deterministic
@@ -2229,27 +2346,10 @@ final class Searcher(private[search] val spark: SparkSession,
         val partials: Seq[(Array[Hit], Long)] =
           if (present.isEmpty)
             Seq(SegmentSearcher.topkCountShard(-1, Map.empty, plan))
-          else if (estPostingBytes(st, present) <= maxLocalBytes) {
-            val rows = fetchRows(present)
-            if (rows.isEmpty) Nil
-            else if (!plan.sharded)
-              Seq(SegmentSearcher.topkCountShard(-1,
-                rows.map(r => r.term -> r).toMap, plan))
-            else {
-              val byShard = (0 until plan.numShards).map { s =>
-                s -> rows.filter(r => r.salt == s || r.salt < 0)
-                  .map(r => r.term -> r).toMap
-              }.filter(_._2.nonEmpty)
-              val futs = byShard.map { case (s, blobs) =>
-                SegmentSearcher.localPool.submit(
-                  new java.util.concurrent.Callable[(Array[Hit], Long)] {
-                    def call(): (Array[Hit], Long) =
-                      SegmentSearcher.topkCountShard(s, blobs, plan)
-                  })
-              }
-              futs.map(_.get())
-            }
-          } else
+          else if (estPostingBytes(st, present) <= maxLocalBytes)
+            onLocalPool(present, plan)(
+              SegmentSearcher.topkCountShard(_, _, plan))
+          else
             shardTasks(present, plan, forceAllShards = false) {
               (s, blobs, p) =>
                 Iterator.single(SegmentSearcher.topkCountShard(s, blobs, p))
@@ -3561,18 +3661,7 @@ final class Searcher(private[search] val spark: SparkSession,
         pq.dequeueAll.toSeq
       }
       val partials: Seq[(Long, Array[Long])] =
-        if (present.isEmpty) collectShard(-1, Map.empty)
-        else {
-          val rows = fetchRows(present)
-          if (rows.isEmpty) Nil
-          else if (!plan.sharded)
-            collectShard(-1, rows.map(r => r.term -> r).toMap)
-          else (0 until plan.numShards).flatMap { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            if (blobs.isEmpty) Nil else collectShard(s, blobs)
-          }
-        }
+        localShards(present, plan).flatMap { case (s, b) => collectShard(s, b) }
       partials.sorted(ord).take(k).toArray
     } else {
       import org.apache.spark.sql.functions.col
@@ -3648,17 +3737,7 @@ final class Searcher(private[search] val spark: SparkSession,
       queue.sortedHits
     }
     val partials: Seq[Array[Hit]] =
-      if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-      else {
-        val rows = fetchRows(present)
-        if (rows.isEmpty) Nil
-        else if (!plan.sharded) Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-        else (0 until plan.numShards).flatMap { s =>
-          val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-            .map(r => r.term -> r).toMap
-          if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-        }
-      }
+      localShards(present, plan).map { case (s, b) => collectShard(s, b) }
     lastFieldScanDocs = visited
     TopK.merge(partials, k).map(h => (h.docId, (sign * h.score).toLong))
   }
@@ -3770,18 +3849,7 @@ final class Searcher(private[search] val spark: SparkSession,
         queue.sortedHits
       }
       val partials: Seq[Array[Hit]] =
-        if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-        else {
-          val rows = fetchRows(present)
-          if (rows.isEmpty) Nil
-          else if (!plan.sharded)
-            Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-          else (0 until plan.numShards).flatMap { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-          }
-        }
+        localShards(present, plan).map { case (s, b) => collectShard(s, b) }
       TopK.merge(partials, k).map(h => (h.docId, sign * h.score))
     } else {
       val dv = dvDocsDf.select(
@@ -3939,18 +4007,7 @@ final class Searcher(private[search] val spark: SparkSession,
       out.toArray
     }
     val partials: Seq[Array[Hit]] =
-      if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-      else {
-        val rows = fetchRows(present)
-        if (rows.isEmpty) Nil
-        else if (!plan.sharded)
-          Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-        else (0 until plan.numShards).flatMap { s =>
-          val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-            .map(r => r.term -> r).toMap
-          if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-        }
-      }
+      localShards(present, plan).map { case (s, b) => collectShard(s, b) }
     // shards keep maxPerKey per key EACH — re-apply the within-key rank
     // filter globally, then the plain top-k
     val queue = new BoundedHitQueue(k)
@@ -4167,18 +4224,7 @@ final class Searcher(private[search] val spark: SparkSession,
       queue.sortedHits
     }
     val partials: Seq[Array[Hit]] =
-      if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-      else {
-        val rows = fetchRows(present)
-        if (rows.isEmpty) Nil
-        else if (!plan.sharded)
-          Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-        else (0 until plan.numShards).flatMap { s =>
-          val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-            .map(r => r.term -> r).toMap
-          if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-        }
-      }
+      localShards(present, plan).map { case (s, b) => collectShard(s, b) }
     TopK.merge(partials, k)
   }
 
@@ -4703,18 +4749,7 @@ final class Searcher(private[search] val spark: SparkSession,
         queue.sortedHits
       }
       val partials: Seq[Array[Hit]] =
-        if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-        else {
-          val rows = fetchRows(present)
-          if (rows.isEmpty) Nil
-          else if (!plan.sharded)
-            Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-          else (0 until plan.numShards).flatMap { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-          }
-        }
+        localShards(present, plan).map { case (s, b) => collectShard(s, b) }
       TopK.merge(partials, k)
     } else {
       import org.apache.spark.sql.functions.col
@@ -4787,18 +4822,7 @@ final class Searcher(private[search] val spark: SparkSession,
         queue.sortedHits
       }
       val partials: Seq[Array[Hit]] =
-        if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-        else {
-          val rows = fetchRows(present)
-          if (rows.isEmpty) Nil
-          else if (!plan.sharded)
-            Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-          else (0 until plan.numShards).flatMap { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-          }
-        }
+        localShards(present, plan).map { case (s, b) => collectShard(s, b) }
       TopK.merge(partials, k)
     } else {
       import org.apache.spark.sql.functions.{col, lit}
@@ -4860,17 +4884,7 @@ final class Searcher(private[search] val spark: SparkSession,
               out(d) = scorer.score; d = scorer.nextDoc()
             }
           }
-          val rows =
-            if (present.isEmpty) Array.empty[SegRow] else fetchRows(present)
-          if (!plan.sharded) {
-            if (rows.nonEmpty || hasAll)
-              walk(-1, rows.map(r => r.term -> r).toMap)
-          } else (0 until plan.numShards).foreach { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            // hasAll mirrors matchScoresDf's marker rows on every shard
-            if (blobs.nonEmpty || hasAll) walk(s, blobs)
-          }
+          localShards(present, plan).foreach { case (s, b) => walk(s, b) }
         }
       }
       localScoresCache.put(q0, out) // walked outside the map's lock
@@ -4968,12 +4982,12 @@ final class Searcher(private[search] val spark: SparkSession,
       .toDF("docId", "tfv")
   }
 
+  /** Drops the memoized caches and unpersists what this Searcher pinned;
+    * a table it never read stays unread.
+    */
   def close(): Unit = {
-    bucketRdds.clear()
     localScoresCache.clear()
-    if (cacheSegments) {
-      segmentsDf.unpersist()
-      termStatsDf.unpersist()
-    }
+    var p = pinned.poll()
+    while (p != null) { p.unpersist(); p = pinned.poll() }
   }
 }

@@ -1,0 +1,210 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
+import graft.core._
+import graft.index.{Deletes, IndexBuilder}
+import graft.index.IndexBuilder.BuildConfig
+import graft.search._
+
+/** The cold term-stats lookup of a `cacheSegments` Searcher: one Spark job
+  * over per-bucket scans planned once per Searcher, which also prefetches
+  * the terms' posting rows under a byte cap; hits stay bit-identical to the
+  * pruned-read (`cacheSegments = false`) and distributed
+  * (`maxLocalBytes = 0`) Searchers, and a bucket scan runs only the cached
+  * partitions that hold its bucket.
+  */
+class ColdLookupSpec extends AnyFunSuite {
+
+  lazy val spark = TestSpark.spark
+  private val tmp =
+    java.nio.file.Files.createTempDirectory("graft-coldlookup").toString
+  private val cfg = BuildConfig(numBuckets = 8, numDocShards = 4,
+    saltThreshold = 100L)
+
+  private def build(dir: String, seed: Long): SegmentSearcher.SegmentIndex = {
+    import spark.implicits._
+    val df = Corpus.generate(400, seed)
+      .sortBy(f => (f.repo, f.path, f.commit)).zipWithIndex
+      .map { case (f, i) => (i.toLong, f.repo, f.path, f.commit, f.lang, f.content) }
+      .toDF("docId", "repo", "path", "commit", "lang", "content")
+    val ix = IndexBuilder.buildLogical(df, "content", Some("docId"), Nil, cfg)
+    IndexBuilder.writeIndex(ix, dir, s"snap-${dir.takeRight(8)}", numGroups = 1)
+    ix.unpersistCached(); ix.postings.unpersist()
+    SegmentSearcher.load(dir)
+  }
+
+  private lazy val plain = build(s"$tmp/plain", 53L)
+  private lazy val deleted = {
+    val ix = build(s"$tmp/deleted", 59L)
+    Deletes.deleteIds(spark, ix.dir, Seq(1L, 2L, 3L, 50L, 51L, 200L, 399L))
+    ix
+  }
+
+  /** (term, df) of the index, df descending then term. */
+  private def termDfs(ix: SegmentSearcher.SegmentIndex): Seq[(String, Long)] =
+    spark.read.parquet(s"${ix.dir}/termstats")
+      .orderBy(col("df").desc, col("term")).select("term", "df")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+
+  private def hitsOf(hs: Array[Hit]): Seq[(Long, Long)] =
+    hs.toSeq.map(h => (h.docId, java.lang.Double.doubleToLongBits(h.score)))
+
+  /** Spark jobs started by `f`, and the task count of each of their stages
+    * (stage id order).
+    */
+  private def jobsOf(f: => Unit): (Int, Seq[Seq[Int]]) = {
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        stages.add(e.stageInfos.sortBy(_.stageId).map(_.numTasks)); ()
+      }
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { f; org.apache.spark.TestBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    val all = stages.toArray(Array.empty[Seq[Int]]).toSeq
+    (all.size, all)
+  }
+
+  /** Buckets held by each cached partition of a pinned table, read apart
+    * from the Searcher's own map.
+    */
+  private def partBuckets(df: org.apache.spark.sql.DataFrame): Array[Set[Int]] =
+    df.select("bucket").rdd
+      .mapPartitions(it => Iterator.single(it.map(_.getInt(0)).toSet))
+      .collect()
+
+  test("a cold search, and stats then search, are each one Spark job after open") {
+    val terms = termDfs(plain).map(_._1)
+    val s = new Searcher(spark, plain)
+    s.search(TermQ(terms.head), 5) // open: pins both tables
+    val fresh = terms.drop(1).iterator
+    def t(): TermQ = TermQ(fresh.next())
+    val cold: Seq[Query] = Seq(t(), Query.and(t(), t()),
+      Query.orMin(2, t(), t(), t()), PhraseQ(Seq("public", "void")),
+      BoolQ(must = Seq(MatchAllQ), mustNot = Seq(t())))
+    for (q <- cold) assert(jobsOf(s.search(q, 10))._1 === 1, s"search q=$q")
+    val next = Seq(Query.not(t(), t()), t())
+    for (q <- next) {
+      val n = jobsOf {
+        s.stats(Query.literalTerms(Query.rewrite(q)))
+        s.search(q, 10)
+      }._1
+      assert(n === 1, s"stats + search q=$q")
+    }
+    assert(jobsOf(s.count(t()))._1 === 1)
+    s.close()
+  }
+
+  private def parity(ix: SegmentSearcher.SegmentIndex): Unit = {
+    val dfs = termDfs(ix)
+    val hot = dfs.filter(_._2 >= cfg.saltThreshold).map(_._1)
+    val unsalted = dfs.filter(_._2 < cfg.saltThreshold).map(_._1)
+    assert(hot.size >= 3 && unsalted.size >= 8)
+    val mid = unsalted.take(6)
+    val rare = unsalted.takeRight(2)
+    val queries: Seq[Query] = Seq(
+      TermQ(hot(0)), TermQ(mid(0)), TermQ(rare(0)), TermQ("absentterm"),
+      Query.and(TermQ(hot(1)), TermQ(mid(1))),
+      Query.orMin(2, TermQ(hot(2)), TermQ(mid(2)), TermQ(rare(1))),
+      Query.not(TermQ(mid(3)), TermQ(hot(0))),
+      PhraseQ(Seq("public", "void")),
+      BoolQ(must = Seq(MatchAllQ), mustNot = Seq(TermQ(hot(1)))),
+      BoolQ(must = Seq(MatchAllQ), should = Seq(TermQ(mid(4)))),
+      ConstScoreQ(MatchAllQ))
+    val pruned = new Searcher(spark, ix, cacheSegments = false)
+    val dist = new Searcher(spark, ix, maxLocalBytes = 0L)
+    // a fresh default Searcher per query: every lookup is cold
+    for (q <- queries) {
+      val s = new Searcher(spark, ix)
+      val hits = hitsOf(s.search(q, 15))
+      val (wh, wn) = s.searchWithCount(q, 15)
+      for (ref <- Seq(pruned, dist)) {
+        assert(hits === hitsOf(ref.search(q, 15)), s"q=$q")
+        val (rh, rn) = ref.searchWithCount(q, 15)
+        assert(hitsOf(wh) === hitsOf(rh), s"q=$q")
+        assert(wn === rn, s"q=$q")
+      }
+      assert(s.count(q) === pruned.count(q), s"q=$q")
+      s.close()
+    }
+    pruned.close(); dist.close()
+  }
+
+  test("cold lookups answer bit-identically to the pruned-read and distributed Searchers") {
+    parity(plain)
+  }
+
+  test("... and over an index with deletes") {
+    assert(Deletes.load(spark, deleted.dir).length === 7)
+    parity(deleted)
+  }
+
+  test("a row over its byte share falls back to fetchRows with unchanged results") {
+    // a term under the salt threshold with one row, and a budget that
+    // admits it at the gate (df·4 + 64) while its row exceeds the share
+    // budget / (1 term × numDocShards)
+    val (t, df) = termDfs(plain).find { case (_, d) => d >= 20 && d < 100 }.get
+    val budget = df * 4 + 64
+    val share = budget / cfg.numDocShards
+    val bytes = spark.read.parquet(s"${plain.dir}/segments")
+      .filter(col("term") === t)
+      .selectExpr("length(docBlocks) + length(skipData) + " +
+        "length(posBlocks) + length(payBlocks)")
+      .collect().map(_.getInt(0).toLong)
+    assert(bytes.length === 1 && bytes.head > share, s"row bytes $bytes, share $share")
+    val s = new Searcher(spark, plain, maxLocalBytes = budget)
+    val ref = new Searcher(spark, plain, cacheSegments = false)
+    s.stats(Set("score")) // open
+    assert(jobsOf(s.stats(Set(t)))._1 === 1)
+    var hits = Array.empty[Hit]
+    // the stub keeps the term out of the blob cache: the local tier reads it
+    assert(jobsOf { hits = s.search(TermQ(t), 10) }._1 === 1)
+    assert(hits.nonEmpty)
+    assert(hitsOf(hits) === hitsOf(ref.search(TermQ(t), 10)))
+    assert(jobsOf(s.search(TermQ(t), 10))._1 === 0) // now cached
+    s.close(); ref.close()
+  }
+
+  test("a one-bucket query schedules only the cached partitions that hold its bucket") {
+    val conf = spark.conf
+    val keys = Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.files.openCostInBytes")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    val terms = termDfs(plain).filter(_._2 < cfg.saltThreshold).map(_._1)
+    val s = new Searcher(spark, plain, maxLocalBytes = 0L)
+    // one small file per cached partition, so the tables span many
+    // partitions; planned while the settings hold, then restored
+    keys.foreach(conf.set(_, "1024"))
+    try {
+      s.search(TermQ(terms.head), 5)
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+    val statParts = partBuckets(s.termStatsDf)
+    val segParts = partBuckets(s.segmentsDf)
+    val t = terms(1)
+    val b = IndexBuilder.bucketOf(t, cfg.numBuckets)
+    val statHolding = statParts.count(_(b))
+    val segHolding = segParts.count(_(b))
+    assert(statHolding < statParts.length && segHolding < segParts.length,
+      s"every partition holds bucket $b: nothing to prune")
+    // cold stats on a maxLocalBytes = 0 Searcher: termstats scan alone
+    val (n1, st1) = jobsOf(s.stats(Set(t)))
+    assert(n1 === 1 && st1.head === Seq(statHolding))
+    // distributed search: the map stage reads the segments scan
+    val (n2, st2) = jobsOf(s.search(TermQ(t), 5))
+    assert(n2 === 1 && st2.head.head === segHolding)
+    s.close()
+  }
+
+  test("a Searcher opened and closed with no query starts no Spark job") {
+    val (n, _) = jobsOf { new Searcher(spark, plain).close() }
+    assert(n === 0)
+  }
+}

@@ -114,7 +114,8 @@ class DistShardPathSpec extends AnyFunSuite {
 
   test("marker rows: a shard without segment rows keeps its MatchAll matches") {
     // 'alpha' is salted (df 300 ≥ 100) and absent from shard 3 (docId % 4
-    // == 3), so only the marker row forms shard 3's group
+    // == 3), so only the marker row forms shard 3's group on the
+    // distributed path, and the driver-local tier must keep shard 3 too
     import spark.implicits._
     val dir = s"$tmp/markers"
     val df = (0L until 400L).map { i =>
@@ -127,15 +128,16 @@ class DistShardPathSpec extends AnyFunSuite {
     val ix = SegmentSearcher.load(dir)
     val notAlpha = BoolQ(must = Seq(MatchAllQ), mustNot = Seq(TermQ("alpha")))
     val allOrAlpha = BoolQ(must = Seq(MatchAllQ), should = Seq(TermQ("alpha")))
-    for (cached <- Seq(true, false)) {
-      val dist = new Searcher(spark, ix, cacheSegments = cached,
-        maxLocalBytes = 0L)
-      val hits = dist.search(notAlpha, 200)
+    val searchers = Seq(true, false).map(cached =>
+      new Searcher(spark, ix, cacheSegments = cached, maxLocalBytes = 0L)) :+
+      new Searcher(spark, ix)
+    for (s <- searchers) {
+      val hits = s.search(notAlpha, 200)
       assert(hits.map(_.docId).toSeq === (3L until 400L by 4L))
-      assert(dist.count(notAlpha) === 100L)
-      assert(dist.count(allOrAlpha) === 400L)
-      assert(dist.searchWithCount(notAlpha, 5)._2 === 100L)
-      dist.close()
+      assert(s.count(notAlpha) === 100L)
+      assert(s.count(allOrAlpha) === 400L)
+      assert(s.searchWithCount(notAlpha, 5)._2 === 100L)
+      s.close()
     }
   }
 
