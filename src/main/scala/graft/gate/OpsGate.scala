@@ -93,31 +93,16 @@ object OpsGate {
     s.read.parquet(s"$d/embeddings.parquet")
 
   /** Persisted sign-LSH ANN index per sf dir: embeddings written once
-    * partitioned by sig; queries are partition-pruned probe reads.
+    * partitioned by sig; queries are partition-pruned probe reads. A gate
+    * fixture (SearchGate.fixtureDir), like the IVF index below.
     */
-  private val annIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def annIndexDir(s: SparkSession, d: String): String =
-    annIndexCache.getOrElseUpdate(d, {
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-ann-index-" +
-        Integer.toHexString(d.hashCode)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      Similarity.writeLshIndex(emb(s, d), "embedding", "vec_id", dir,
-        planes = 10, seed = 42L)
-      dir
-    })
+    SearchGate.fixtureDir(d, "ann")(dir => Similarity.writeLshIndex(
+      emb(s, d), "embedding", "vec_id", dir, planes = 10, seed = 42L))
 
-  private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def ivfIndexDir(s: SparkSession, d: String): String =
-    ivfIndexCache.getOrElseUpdate(d, {
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-ivf-index-" +
-        Integer.toHexString(d.hashCode)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      Similarity.writeIvfIndex(emb(s, d), "embedding", "vec_id", dir,
-        nlist = 16, seed = 4242L)
-      dir
-    })
+    SearchGate.fixtureDir(d, "ivf")(dir => Similarity.writeIvfIndex(
+      emb(s, d), "embedding", "vec_id", dir, nlist = 16, seed = 4242L))
 
   /** (word, published stem) — every 235th pair of the canonical Porter
     * test vocabulary (Porter's voc.txt/output.txt, shipped by the

@@ -255,7 +255,7 @@ object Oracles {
   // ---- Porter-analyzed field ----
 
   /** Planted inflected docs for the porter gate — identical literals on
-    * the engine side (SearchGate.porterSearcher).
+    * the engine side (the "porter" SearchGate.specSearcher).
     */
   val porterPlanted: Seq[(Long, String)] = Seq(
     900001L -> "queries merged tables",
@@ -476,7 +476,7 @@ object Oracles {
   // ---- Phonetic (Soundex) field ----
 
   /** Planted sound-alike docs for the phonetic gates — identical
-    * literals on the engine side (SearchGate.phoneticSearcher).
+    * literals on the engine side (the "phonetic" SearchGate.specSearcher).
     */
   val phoneticPlanted: Seq[(Long, String)] = Seq(
     910001L -> "mirage sord kwery table",
@@ -3435,7 +3435,8 @@ ORDER BY doc_id, frank"""
 )""" + finish("res", k)
 
   /** Planted suffix-family docs for the reversed-wildcard gate —
-    * identical literals on the engine side (SearchGate.revwildSearcher).
+    * identical literals on the engine side (the "revwild"
+    * SearchGate.specSearcher).
     */
   val revwildPlanted: Seq[(Long, String)] = Seq(
     910001L -> "aardvark landmark in the network",

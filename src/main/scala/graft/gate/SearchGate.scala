@@ -34,61 +34,74 @@ object SearchGate {
 
   private val logicalCache =
     scala.collection.concurrent.TrieMap.empty[String, LogicalIndex]
-  private val segmentCache =
-    scala.collection.concurrent.TrieMap.empty[String, SegmentSearcher.SegmentIndex]
-  private val searcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
 
-  /** Dirs this gate created under java.io.tmpdir — deleted on
-    * clearCaches so repeated gate runs in one JVM don't accumulate
-    * tmp indexes (round-3 advisor finding).
+  /** Every gate fixture (the base index, its variants, the rtg snapshots,
+    * OpsGate's ANN/IVF dirs) by (sfDir, fixture key): its dir under
+    * java.io.tmpdir, and the Searcher open over it when it is an index.
+    * clearCaches frees them all.
     */
-  private val createdDirs =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-  private[gate] def trackDir(dir: String): String = {
-    createdDirs.put(dir, ()); dir
-  }
+  private val fixtureDirs =
+    scala.collection.concurrent.TrieMap.empty[(String, Any), String]
+  private val fixtures =
+    scala.collection.concurrent.TrieMap.empty[(String, Any), Searcher]
+
+  /** The dir of fixture `key` over `sfDir`, filled once by `write`. The
+    * key must determine the build: the dir is named by a digest of it,
+    * made fresh (tmp may hold a stale one from an earlier JVM), and
+    * deleted by clearCaches — or at once if `write` fails.
+    */
+  private[gate] def fixtureDir(sfDir: String, key: Any)(
+      write: String => Unit): String =
+    fixtureDirs.getOrElseUpdate((sfDir, key), {
+      val dir = s"${sys.props("java.io.tmpdir")}/graft-gate-" +
+        java.util.UUID.nameUUIDFromBytes(s"$sfDir#$key".getBytes("UTF-8"))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      try write(dir)
+      catch { case e: Throwable =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+        throw e
+      }
+      dir
+    })
+
+  /** A default Searcher over fixture index `key` ([[fixtureDir]]). */
+  private def fixture(spark: SparkSession, sfDir: String, key: Any)(
+      write: String => Unit): Searcher =
+    fixtures.getOrElseUpdate((sfDir, key),
+      new Searcher(spark, SegmentSearcher.load(fixtureDir(sfDir, key)(write))))
+
+  /** Snapshot id of the index written into fixture dir `dir`. */
+  private def snapshotOf(dir: String): String = new java.io.File(dir).getName
+
+  /** Fixture dirs built and not yet deleted, and the Searchers open
+    * over them.
+    */
+  private[graft] def trackedDirs: Seq[String] = fixtureDirs.values.toSeq
+  private[graft] def openFixtures: Seq[Searcher] = fixtures.values.toSeq
 
   /** Drop cached plans (needed when a new SparkSession replaces the one
-    * the cached DataFrames were bound to, e.g. between bench phases).
-    * Also unpersists the cached segment/stat RDDs and deletes the tmp
-    * index dirs this gate created — clearing only the maps leaked both.
+    * the cached DataFrames were bound to, e.g. between bench phases):
+    * closes the fixture Searchers, unpersists the cached logical indexes
+    * and deletes every fixture dir.
     */
   def clearCaches(): Unit = {
     def quietly(f: => Unit): Unit =
       try f catch { case _: Exception => } // session may already be stopped
-    (searcherCache.values ++ fieldSearcherCache.values ++
-      sweetSearcherCache.values ++ shingleSearcherCache.values ++
-      cgSearcherCache.values ++ porterSearcherCache.values ++
-      synSearcherCache.values ++ reshardSearcherCache.values ++
-      cfSearcherCache.values ++ delSearcherCache.values ++
-      updSearcherCache.values ++ phoneticSearcherCache.values ++
-      porterInjSearcherCache.values ++ ngramSearcherCache.values ++
-      synGraphSearcherCache.values ++ revwildSearcherCache.values ++
-      specSearcherCache.values)
-      .foreach(s => quietly(s.close()))
+    fixtures.values.foreach(s => quietly(s.close()))
+    fixtures.clear()
     freeTextCache.values.foreach(m => quietly(m.unpersist()))
     freeTextCache.clear()
     logicalCache.values.foreach(ix => quietly {
       ix.unpersistCached(); ix.postings.unpersist()
     })
-    logicalCache.clear(); segmentCache.clear(); searcherCache.clear()
+    logicalCache.clear()
     docsDfCache.clear()
-    fieldSearcherCache.clear(); sweetSearcherCache.clear()
-    shingleSearcherCache.clear(); cgSearcherCache.clear()
-    reshardSearcherCache.clear(); cfSearcherCache.clear()
-    delSearcherCache.clear(); updSearcherCache.clear()
-    porterSearcherCache.clear(); synSearcherCache.clear()
-    phoneticSearcherCache.clear()
-    porterInjSearcherCache.clear(); ngramSearcherCache.clear()
-    synGraphSearcherCache.clear(); revwildSearcherCache.clear()
-    specSearcherCache.clear()
-    // the rtg fixture dir is deleted below with the other tracked dirs —
-    // a surviving path cache would dangle into the next gate run
-    rtgCache.clear(); rtgDfCache.clear()
-    createdDirs.keys.foreach(d =>
+    // views over the fixture dirs deleted below would dangle into the
+    // next gate run
+    rtgDfCache.clear()
+    fixtureDirs.values.foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-    createdDirs.clear()
+    fixtureDirs.clear()
   }
 
   /** Per-sfDir documents DataFrame HANDLE (plan, not data): re-running
@@ -102,27 +115,6 @@ object SearchGate {
     docsDfCache.getOrElseUpdate(sfDir,
       spark.read.parquet(s"$sfDir/documents.parquet"))
 
-  def searcher(spark: SparkSession, sfDir: String): Searcher =
-    searcherCache.getOrElseUpdate(sfDir,
-      new Searcher(spark, segment(spark, sfDir), cacheSegments = true))
-
-  /** Term-hash-resharded copy of the gate index (Reshard.reshard, the
-    * IndexSplitter operation class): 8 → 5 buckets, blobs verbatim. The
-    * q_reshard_* gates pin its results against the UNSHARDED oracles.
-    */
-  private val reshardSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def reshardSearcher(spark: SparkSession, sfDir: String): Searcher =
-    reshardSearcherCache.getOrElseUpdate(sfDir, {
-      val base = segment(spark, sfDir) // ensures the base index exists
-      val dirHash = Integer.toHexString(s"$sfDir#reshard".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-reshard-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      graft.index.Reshard.reshard(spark, base.dir, dir, 5,
-        s"gate-reshard-$dirHash")
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
   def logical(spark: SparkSession, sfDir: String): LogicalIndex =
     logicalCache.getOrElseUpdate(sfDir, {
       val docs = docsDf(spark, sfDir)
@@ -131,154 +123,113 @@ object SearchGate {
       IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil, gateConfig)
     })
 
-  /** Per-(sfDir, column) field indexes for the edismax qf surface — each
-    * field is its own inverted index over the SAME doc_id space.
+  /** The gate index: `logical` written as two groups. */
+  def searcher(spark: SparkSession, sfDir: String): Searcher =
+    fixture(spark, sfDir, "base")(dir => IndexBuilder.writeIndex(
+      logical(spark, sfDir), dir, snapshotOf(dir), numGroups = 2))
+
+  /** Analyzed-field fixture, the shared shape of every variant index:
+    * `column` of `documents` (∪ `planted` rows when non-empty) under
+    * `config` of the gate config with tokenizer `spec` and no offsets or
+    * payloads sidecars. `project` indexes (doc_id, column) alone; false
+    * indexes the whole documents frame.
     */
-  private val fieldSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Searcher]
-  def fieldSearcher(spark: SparkSession, sfDir: String,
-      fieldCol: String): Searcher =
-    fieldSearcherCache.getOrElseUpdate((sfDir, fieldCol), {
-      val dirHash = Integer.toHexString(s"$sfDir#$fieldCol".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-field-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-      val ix = IndexBuilder.buildLogical(docs, fieldCol, Some("doc_id"), Nil,
-        gateConfig)
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-field-$dirHash",
-        numGroups = 1)
+  def specSearcher(spark: SparkSession, sfDir: String, spec: String,
+      planted: Seq[(Long, String)] = Nil,
+      config: BuildConfig => BuildConfig = identity,
+      column: String = "text", project: Boolean = true): Searcher = {
+    val cfg = config(
+      gateConfig.copy(tokenizer = spec, offsets = false, payloads = None))
+    fixture(spark, sfDir, (cfg, planted, column, project)) { dir =>
+      import spark.implicits._
+      val all = docsDf(spark, sfDir)
+      val base = if (project) all.select(col("doc_id"), col(column)) else all
+      val docs = if (planted.isEmpty) base
+        else base.unionByName(planted.toDF("doc_id", column))
+      val ix = IndexBuilder.buildLogical(docs, column, Some("doc_id"), Nil, cfg)
+      IndexBuilder.writeIndex(ix, dir, snapshotOf(dir), numGroups = 1)
       ix.unpersistCached()
       ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
+    }
+  }
+
+  /** Term-hash-resharded copy of the gate index (Reshard.reshard, the
+    * IndexSplitter operation class): 8 → 5 buckets, blobs verbatim. The
+    * q_reshard_* gates pin its results against the UNSHARDED oracles.
+    */
+  private def reshardSearcher(spark: SparkSession, sfDir: String): Searcher =
+    fixture(spark, sfDir, "reshard")(dir => graft.index.Reshard.reshard(
+      spark, searcher(spark, sfDir).index.dir, dir, 5, snapshotOf(dir)))
+
+  /** Tombstoned copy of the gate index (Deletes, the liveDocs law):
+    * replicated via Replicator.sync, then deleteByTerm("dup") — every
+    * doc containing 'dup' is masked at collection while stats still
+    * count it (Lucene: deletes influence scores until expunge). The
+    * q_deleted_* oracles replay exactly that: full-corpus stats, the
+    * tombstoned docs excluded from output.
+    */
+  private def delSearcher(spark: SparkSession, sfDir: String): Searcher =
+    fixture(spark, sfDir, "del") { dir =>
+      graft.index.Replicator.sync(searcher(spark, sfDir).index.dir, dir)
+      graft.index.Deletes.deleteByTerm(spark, dir, "dup")
+    }
+
+  /** DV-updated copy of the gate index (DvUpdates, the
+    * updateNumericDocValue law): replicated, then n_chars overridden to 1
+    * for doc_ids 5/6/7 — the q_dvupdate_sort oracle replays the same
+    * override with a CASE over the raw column.
+    */
+  val DvUpdatedIds = Seq(5L, 6L, 7L)
+  private def updSearcher(spark: SparkSession, sfDir: String): Searcher =
+    fixture(spark, sfDir, "upd") { dir =>
+      graft.index.Replicator.sync(searcher(spark, sfDir).index.dir, dir)
+      graft.index.DvUpdates.updateNumeric(spark, dir, "n_chars",
+        DvUpdatedIds.map(_ -> 1L))
+    }
+
+  /** Per-(sfDir, column) field indexes for the edismax qf surface — each
+    * field is its own inverted index over the SAME doc_id space, built
+    * with the full gate config.
+    */
+  private def fieldSearcher(spark: SparkSession, sfDir: String,
+      fieldCol: String): Searcher =
+    specSearcher(spark, sfDir, gateConfig.tokenizer, config = _ => gateConfig,
+      column = fieldCol, project = false)
 
   /** SweetSpot-normed index (the index-time Similarity determines the
     * stored norm byte): same corpus, norm byte = byte315(SweetSpot
     * plateau lengthNorm) — scores ONLY under SimSweetSpot.
     */
   val SweetSpotNormSim = "sweetspot:8:40:0.5"
-  private val sweetSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def sweetSearcher(spark: SparkSession, sfDir: String): Searcher =
-    sweetSearcherCache.getOrElseUpdate(sfDir, {
-      val dirHash = Integer.toHexString(s"$sfDir#sweet".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-sweet-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(offsets = false, payloads = None,
-          normSim = SweetSpotNormSim))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-sweet-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
+  private def sweetSearcher(spark: SparkSession, sfDir: String): Searcher =
+    specSearcher(spark, sfDir, gateConfig.tokenizer,
+      config = _.copy(normSim = SweetSpotNormSim), project = false)
 
   /** Shingled (word-bigram) index per sfDir — ShingleFilter
     * outputUnigrams=false: phrase-as-term fields. At 100 TB this is the
     * trade that removes positions from the phrase hot path entirely.
     */
-  private val shingleSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def shingleSearcher(spark: SparkSession, sfDir: String): Searcher =
-    shingleSearcherCache.getOrElseUpdate(sfDir, {
-      val dirHash = Integer.toHexString(s"$sfDir#shingle".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-shingle-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = "shingle:2", offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-shingle-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
+  private def shingleSearcher(spark: SparkSession, sfDir: String): Searcher =
+    specSearcher(spark, sfDir, "shingle:2", project = false)
 
   /** CommonGrams index (CommonGramsFilter overlay, common = the
     * reference StandardAnalyzer English stop set): unigrams at their
     * positions plus `prev_cur` grams at the first word's position.
     */
-  private val cgSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def cgSearcher(spark: SparkSession, sfDir: String): Searcher =
-    cgSearcherCache.getOrElseUpdate(sfDir, {
-      val dirHash = Integer.toHexString(s"$sfDir#commongrams".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-cg-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = "commongrams", offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-cg-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
+  private def cgSearcher(spark: SparkSession, sfDir: String): Searcher =
+    specSearcher(spark, sfDir, "commongrams", project = false)
 
-  /** Porter-stemmed index (PorterStemFilter over the simple chain,
-    * `analysis/en/PorterStemFilter.java`) over documents ∪ planted
-    * inflected docs — the planted rows make stems CONFLATE (query/
-    * queries/querying → queri), so df, norms, and scores all shift vs
-    * the unstemmed field and the oracle has teeth.
+  /** Index-time SynonymFilter field (`synonym/SynonymFilter.java`):
+    * expansion group {fast, rapid} (originals kept + posInc-0 overlays)
+    * and directed rule column=>col (replacement). Overlays share the
+    * source token's position, so phrases match THROUGH synonyms.
     */
-  private val porterSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def porterSearcher(spark: SparkSession, sfDir: String): Searcher =
-    porterSearcherCache.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dirHash = Integer.toHexString(s"$sfDir#porter".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-porter-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = docsDf(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-      val docs = base.unionByName(
-        Oracles.porterPlanted.toDF("doc_id", "text"))
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = "porter", offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-porter-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
-  /** CharFilter-chained field (`analysis/common/.../charfilter/`):
-    * digits → space (PatternReplaceCharFilter), then a → 4
-    * (MappingCharFilter), then the simple chain. The query term "b4tch"
-    * can ONLY exist if both stages ran — a broken chain yields zero rows
-    * against the oracle's ten.
-    */
-  /** Generic analyzed-field fixture: one index per (sfDir, tokenizer
-    * spec) over `documents` (∪ `planted` rows when non-empty) — the
-    * shared shape of every single-filter gate family (keepword / length /
-    * truncate / limittok / stemoverride / …).
-    */
-  private val specSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Searcher]
-  def specSearcher(spark: SparkSession, sfDir: String, spec: String,
-      planted: Seq[(Long, String)] = Nil): Searcher =
-    specSearcherCache.getOrElseUpdate((sfDir, spec), {
-      import spark.implicits._
-      val dirHash = Integer.toHexString(s"$sfDir#$spec".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-spec-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = docsDf(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-      val docs = if (planted.isEmpty) base
-        else base.unionByName(planted.toDF("doc_id", "text"))
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = spec, offsets = false, payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-spec-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
+  val SynonymSpec = "fast,rapid;column=>col"
+  val SynonymExpandPairs: Seq[(String, String)] =
+    Seq("fast" -> "rapid", "rapid" -> "fast")
+  val SynonymDirectedPairs: Seq[(String, String)] = Seq("column" -> "col")
+  private def synSearcher(spark: SparkSession, sfDir: String): Searcher =
+    specSearcher(spark, sfDir, s"synonym:$SynonymSpec", project = false)
 
   /** Boolean function-family value trees, shared by gate and oracle. */
   private val IfExistsVs = ValueSources.parseFunc(
@@ -301,229 +252,21 @@ object SearchGate {
   val StemOverrideSpec: String = "stemoverride:" +
     StemOverrides.map { case (w, s) => s"$w=>$s" }.mkString(";")
 
+  /** CharFilter-chained field (`analysis/common/.../charfilter/`):
+    * digits → space (PatternReplaceCharFilter), then a → 4
+    * (MappingCharFilter), then the simple chain. The query term "b4tch"
+    * can ONLY exist if both stages ran — a broken chain yields zero rows
+    * against the oracle's ten.
+    */
   val CharFilterChain = "replace=[0-9]+=> !mapping=a=>4!simple"
-  private val cfSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def cfSearcher(spark: SparkSession, sfDir: String): Searcher =
-    cfSearcherCache.getOrElseUpdate(sfDir, {
-      val dirHash = Integer.toHexString(s"$sfDir#charfilter".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-cf-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = CharFilterChain, offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-cf-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
-  /** Soundex-analyzed fields (PhoneticFilter over commons-codec Soundex,
-    * exactly the reference factory's delegation): replace mode
-    * (inject=false) and inject mode (original + code at the same
-    * position). Corpus ∪ planted sound-alike docs, so the codes
-    * conflate real variant groups (merge/mirage/murge, sort/sord/sorte).
-    */
-  private val phoneticSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean), Searcher]
-  def phoneticSearcher(spark: SparkSession, sfDir: String,
-      inject: Boolean): Searcher =
-    phoneticSearcherCache.getOrElseUpdate((sfDir, inject), {
-      import spark.implicits._
-      val mode = if (inject) "phonetic_inject" else "phonetic"
-      val dirHash = Integer.toHexString(s"$sfDir#$mode".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-ph-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-        .unionByName(Oracles.phoneticPlanted.toDF("doc_id", "text"))
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = s"$mode:soundex", offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-ph-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
-  /** KeywordRepeat + Porter + RemoveDuplicates field (stem overlays the
-    * original at posInc 0) over corpus ∪ planted inflections.
-    */
-  private val porterInjSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def porterInjSearcher(spark: SparkSession, sfDir: String): Searcher =
-    porterInjSearcherCache.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dirHash = Integer.toHexString(s"$sfDir#porterinj".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-pinj-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-        .unionByName(Oracles.porterPlanted.toDF("doc_id", "text"))
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = "porter_inject", offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-pinj-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
-  /** NGramTokenFilter(2, 3) field — every 2- and 3-gram of each token. */
-  private val ngramSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def ngramSearcher(spark: SparkSession, sfDir: String): Searcher =
-    ngramSearcherCache.getOrElseUpdate(sfDir, {
-      val dirHash = Integer.toHexString(s"$sfDir#ngram23".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-ng-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = "ngram:2:3", offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-ng-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
-  /** ReversedWildcardFilter field (withOriginal=true) over corpus ∪
-    * planted suffix-family docs: reversed marker-prefixed terms ride the
-    * same dictionary, leading wildcards reverse into prefix scans, and
-    * unreversed patterns must subtract the marker terms.
-    */
-  private val revwildSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def revwildSearcher(spark: SparkSession, sfDir: String): Searcher =
-    revwildSearcherCache.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dirHash = Integer.toHexString(s"$sfDir#revwild".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-rw-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-        .unionByName(Oracles.revwildPlanted.toDF("doc_id", "text"))
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = "revwild", offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-rw-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
-  /** Multi-word synonym (sausage) fields — one per rule set, over the
-    * plain corpus: a replace rule ("sort merge=>sortmerge", positions
-    * compact) and an expansion group ("key,primary key", output spills
-    * onto the following slot / past the end).
-    */
-  private val synGraphSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Searcher]
-  def synGraphSearcher(spark: SparkSession, sfDir: String,
-      rules: String): Searcher =
-    synGraphSearcherCache.getOrElseUpdate((sfDir, rules), {
-      val dirHash = Integer.toHexString(s"$sfDir#syngraph#$rules".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-sg-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = s"syngraph:$rules", offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-sg-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
-  /** Tombstoned copy of the gate index (Deletes, the liveDocs law):
-    * replicated via Replicator.sync, then deleteByTerm("dup") — every
-    * doc containing 'dup' is masked at collection while stats still
-    * count it (Lucene: deletes influence scores until expunge). The
-    * q_deleted_* oracles replay exactly that: full-corpus stats, the
-    * tombstoned docs excluded from output.
-    */
-  private val delSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def delSearcher(spark: SparkSession, sfDir: String): Searcher =
-    delSearcherCache.getOrElseUpdate(sfDir, {
-      val base = segment(spark, sfDir)
-      val dirHash = Integer.toHexString(s"$sfDir#deleted".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-del-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      graft.index.Replicator.sync(base.dir, dir)
-      graft.index.Deletes.deleteByTerm(spark, dir, "dup")
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
-  /** DV-updated copy of the gate index (DvUpdates, the
-    * updateNumericDocValue law): replicated, then n_chars overridden to 1
-    * for doc_ids 5/6/7 — the q_dvupdate_sort oracle replays the same
-    * override with a CASE over the raw column.
-    */
-  val DvUpdatedIds = Seq(5L, 6L, 7L)
-  private val updSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def updSearcher(spark: SparkSession, sfDir: String): Searcher =
-    updSearcherCache.getOrElseUpdate(sfDir, {
-      val base = segment(spark, sfDir)
-      val dirHash = Integer.toHexString(s"$sfDir#dvupd".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-dvu-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      graft.index.Replicator.sync(base.dir, dir)
-      graft.index.DvUpdates.updateNumeric(spark, dir, "n_chars",
-        DvUpdatedIds.map(_ -> 1L))
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
-
-  /** Index-time SynonymFilter field (`synonym/SynonymFilter.java`):
-    * expansion group {fast, rapid} (originals kept + posInc-0 overlays)
-    * and directed rule column=>col (replacement). Overlays share the
-    * source token's position, so phrases match THROUGH synonyms.
-    */
-  val SynonymSpec = "fast,rapid;column=>col"
-  val SynonymExpandPairs: Seq[(String, String)] =
-    Seq("fast" -> "rapid", "rapid" -> "fast")
-  val SynonymDirectedPairs: Seq[(String, String)] = Seq("column" -> "col")
-  private val synSearcherCache =
-    scala.collection.concurrent.TrieMap.empty[String, Searcher]
-  def synSearcher(spark: SparkSession, sfDir: String): Searcher =
-    synSearcherCache.getOrElseUpdate(sfDir, {
-      val dirHash = Integer.toHexString(s"$sfDir#synonym".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-syn-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val docs = docsDf(spark, sfDir)
-      val ix = IndexBuilder.buildLogical(docs, "text", Some("doc_id"), Nil,
-        gateConfig.copy(tokenizer = s"synonym:$SynonymSpec", offsets = false,
-          payloads = None))
-      IndexBuilder.writeIndex(ix, dir, snapshotId = s"gate-syn-$dirHash",
-        numGroups = 1)
-      ix.unpersistCached()
-      ix.postings.unpersist()
-      new Searcher(spark, SegmentSearcher.load(dir), cacheSegments = true)
-    })
 
   /** Two-snapshot streaming index per sfDir for the RealTimeGet gate:
     * snap=0 = every document, snap=1 = docs with doc_id % 7 == 0
     * re-indexed with ' updated' appended — the /get view must return the
     * batch-1 version for those ids and batch-0 for the rest.
     */
-  private val rtgCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def rtgIndex(spark: SparkSession, sfDir: String): String =
-    rtgCache.getOrElseUpdate(sfDir, {
-      val dirHash = Integer.toHexString(s"$sfDir#rtg".hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-rtg-$dirHash")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    fixtureDir(sfDir, "rtg") { dir =>
       val docs = docsDf(spark, sfDir)
       val cfgRtg = gateConfig.copy(offsets = false, payloads = None)
       def writeSnap(batch: org.apache.spark.sql.DataFrame, id: Int): Unit = {
@@ -535,8 +278,7 @@ object SearchGate {
       writeSnap(docs, 0)
       writeSnap(docs.filter(col("doc_id") % 7 === 0)
         .withColumn("text", concat(col("text"), lit(" updated"))), 1)
-      dir
-    })
+    }
 
   /** RealTimeGet view HANDLE over the (static) two-snapshot fixture —
     * the per-query snapshot listing + schema inference repeated nothing
@@ -564,16 +306,6 @@ object SearchGate {
     freeTextCache.getOrElseUpdate(sfDir,
       graft.ops.FreeText.build(logical(spark, sfDir).postings))
 
-  def segment(spark: SparkSession, sfDir: String): SegmentSearcher.SegmentIndex =
-    segmentCache.getOrElseUpdate(sfDir, {
-      val dirHash = Integer.toHexString(sfDir.hashCode)
-      val dir = trackDir(s"${sys.props("java.io.tmpdir")}/graft-gate-index-$dirHash")
-      // rebuild fresh each JVM run (tmp may hold stale indexes)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      IndexBuilder.writeIndex(logical(spark, sfDir), dir,
-        snapshotId = s"gate-$dirHash", numGroups = 2)
-      SegmentSearcher.load(dir)
-    })
 
   private def hitsDf(spark: SparkSession, hits: Array[Hit]): DataFrame = {
     import spark.implicits._
@@ -976,9 +708,10 @@ object SearchGate {
     // CharFilter chain (PatternReplace digits→space, Mapping a→4, simple):
     // "b4tch"/"sp4rk" exist ONLY post-chain — zero rows if a stage breaks
     "q_charfilter_term" -> ((spark, sfDir) =>
-      hitsDf(spark, cfSearcher(spark, sfDir).search(TermQ("b4tch"), K))),
+      hitsDf(spark, specSearcher(spark, sfDir, CharFilterChain)
+        .search(TermQ("b4tch"), K))),
     "q_charfilter_or2" -> ((spark, sfDir) =>
-      hitsDf(spark, cfSearcher(spark, sfDir)
+      hitsDf(spark, specSearcher(spark, sfDir, CharFilterChain)
         .search(Query.or(TermQ("sp4rk"), TermQ("dup")), K))),
     // search-result clustering (ClusteringComponent surface): top-20 hits
     // labeled by their max in-results RSJ-odds term, singletons to 'other'
@@ -1319,7 +1052,8 @@ object SearchGate {
     // Porter-stemmed field: "queri" hits query/queries/querying docs with
     // the conflated df; the OR adds the tabl stem (table/tables)
     "q_bm25_porter" -> ((spark, sfDir) => hitsDf(spark,
-      porterSearcher(spark, sfDir).search(TermQ("queri"), K))),
+      specSearcher(spark, sfDir, "porter", Oracles.porterPlanted)
+        .search(TermQ("queri"), K))),
     // PhoneticFilter/Soundex fields (the factory's commons-codec
     // delegation): replace mode conflates merge/mirage/murge and
     // sort/sord/sorte under one code; inject mode keeps originals at
@@ -1330,55 +1064,61 @@ object SearchGate {
     // "queri" reaches every inflected doc, while the exact original
     // "queries" still matches (a pure-porter field would lose it)
     "q_porter_inject_stem" -> ((spark, sfDir) => hitsDf(spark,
-      porterInjSearcher(spark, sfDir).search(TermQ("queri"), K))),
+      specSearcher(spark, sfDir, "porter_inject", Oracles.porterPlanted)
+        .search(TermQ("queri"), K))),
     "q_porter_inject_orig" -> ((spark, sfDir) => hitsDf(spark,
-      porterInjSearcher(spark, sfDir).search(TermQ("queries"), K))),
+      specSearcher(spark, sfDir, "porter_inject", Oracles.porterPlanted)
+        .search(TermQ("queries"), K))),
     // NGramTokenFilter(2,3) field: partial-match grams
     "q_ngram_term" -> ((spark, sfDir) => hitsDf(spark,
-      ngramSearcher(spark, sfDir).search(TermQ("rge"), K))),
+      specSearcher(spark, sfDir, "ngram:2:3").search(TermQ("rge"), K))),
     "q_ngram_short" -> ((spark, sfDir) => hitsDf(spark,
-      ngramSearcher(spark, sfDir).search(TermQ("so"), K))),
+      specSearcher(spark, sfDir, "ngram:2:3").search(TermQ("so"), K))),
     // multi-word SynonymFilter sausage: the replace rule fuses adjacent
     // "sort merge" into one token (and one POSITION — compaction shifts
     // every later norm); the expansion group stacks "primary key" onto
     // a "key" match, spilling onto the next slot (or a new end slot)
     "q_syngraph_replace" -> ((spark, sfDir) => hitsDf(spark,
-      synGraphSearcher(spark, sfDir, "sort merge=>sortmerge")
+      specSearcher(spark, sfDir, "syngraph:sort merge=>sortmerge")
         .search(TermQ("sortmerge"), K))),
     "q_syngraph_expand" -> ((spark, sfDir) => hitsDf(spark,
-      synGraphSearcher(spark, sfDir, "key,primary key")
+      specSearcher(spark, sfDir, "syngraph:key,primary key")
         .search(TermQ("primary"), K))),
     "q_syngraph_expand_key" -> ((spark, sfDir) => hitsDf(spark,
-      synGraphSearcher(spark, sfDir, "key,primary key")
+      specSearcher(spark, sfDir, "syngraph:key,primary key")
         .search(TermQ("key"), K))),
     "q_phonetic_term" -> ((spark, sfDir) => hitsDf(spark,
-      phoneticSearcher(spark, sfDir, inject = false)
+      specSearcher(spark, sfDir, "phonetic:soundex", Oracles.phoneticPlanted)
         .search(TermQ(graft.core.Phonetic.replaced("soundex", "merge")), K))),
     "q_phonetic_sort" -> ((spark, sfDir) => hitsDf(spark,
-      phoneticSearcher(spark, sfDir, inject = false)
+      specSearcher(spark, sfDir, "phonetic:soundex", Oracles.phoneticPlanted)
         .search(TermQ(graft.core.Phonetic.replaced("soundex", "sort")), K))),
     "q_phonetic_inject_orig" -> ((spark, sfDir) => hitsDf(spark,
-      phoneticSearcher(spark, sfDir, inject = true)
-        .search(TermQ("merge"), K))),
+      specSearcher(spark, sfDir, "phonetic_inject:soundex",
+        Oracles.phoneticPlanted).search(TermQ("merge"), K))),
     "q_phonetic_inject_code" -> ((spark, sfDir) => hitsDf(spark,
-      phoneticSearcher(spark, sfDir, inject = true)
+      specSearcher(spark, sfDir, "phonetic_inject:soundex",
+        Oracles.phoneticPlanted)
         .search(TermQ(graft.core.Phonetic.replaced("soundex", "sort")), K))),
     "q_bm25_porter_or2" -> ((spark, sfDir) => hitsDf(spark,
-      porterSearcher(spark, sfDir).search(
+      specSearcher(spark, sfDir, "porter", Oracles.porterPlanted).search(
         BoolQ(should = Seq(TermQ("queri"), TermQ("tabl"))), K))),
     // ReversedWildcardFilter field: a leading '*' reverses into a
     // marker-prefixed prefix scan ("*ark" → "kra*")
     "q_wild_leading" -> ((spark, sfDir) => hitsDf(spark,
-      revwildSearcher(spark, sfDir).search(WildcardQ("*ark"), K))),
+      specSearcher(spark, sfDir, "revwild", Oracles.revwildPlanted)
+        .search(WildcardQ("*ark"), K))),
     // leading '?' (posQ = 0 < maxPosQuestion) also reverses
     "q_wild_leading_q" -> ((spark, sfDir) => hitsDf(spark,
-      revwildSearcher(spark, sfDir).search(WildcardQ("?art"), K))),
+      specSearcher(spark, sfDir, "revwild", Oracles.revwildPlanted)
+        .search(WildcardQ("?art"), K))),
     // "*kra*" ends in a wildcard (len - lastPos = 1 < minTrailing 2)
     // -> NOT reversed; the marker-exclusion must keep it from matching
     // reversed terms (reverse("spark") = "kraps" contains "kra" - only
     // the planted "okra" doc may hit)
     "q_wild_noreverse" -> ((spark, sfDir) => hitsDf(spark,
-      revwildSearcher(spark, sfDir).search(WildcardQ("*kra*"), K))),
+      specSearcher(spark, sfDir, "revwild", Oracles.revwildPlanted)
+        .search(WildcardQ("*kra*"), K))),
     // distributed phrase statistics: count-sorted bigram enumeration
     "q_shingle_terms" -> ((spark, sfDir) => {
       import spark.implicits._

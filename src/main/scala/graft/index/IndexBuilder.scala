@@ -1132,8 +1132,11 @@ object IndexBuilder {
         .withColumn("snapshotId", lit(snapshotId))
         .write.mode("overwrite").parquet(s"$dir/lineage/docs"))
       }, scala.concurrent.Future {
+      // one file per bucket: without the repartition every input
+      // partition writes a file into every bucket it touches
       timed("termstats.write")(ix.termStats
         .withColumn("bucket", udf((t: String) => bucketOf(t, cfg.numBuckets)).apply(col("term")))
+        .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/termstats"))
       // sorted term dictionary for beyond-driver vocabularies (the
       // BlockTree terms-dict analog): directory-partitioned by first

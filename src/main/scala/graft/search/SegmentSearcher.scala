@@ -343,6 +343,30 @@ object SegmentSearcher {
     }
   }
 
+  /** Searchers holding each pinned table, by (CacheManager, paths the
+    * table reads). Spark caches ONE entry per plan, so Searchers over one
+    * index share it: only the first pin persists, only the last release
+    * unpersists.
+    */
+  private val pinCounts =
+    scala.collection.mutable.HashMap.empty[(AnyRef, Seq[String]), Int]
+
+  private[search] def acquirePin(df: DataFrame, paths: Seq[String]): Unit =
+    pinCounts.synchronized {
+      val k = (df.sparkSession.sharedState.cacheManager, paths)
+      val n = pinCounts.getOrElse(k, 0)
+      if (n == 0) df.persist()
+      pinCounts(k) = n + 1
+    }
+
+  private[search] def releasePin(df: DataFrame, paths: Seq[String]): Unit =
+    pinCounts.synchronized {
+      val k = (df.sparkSession.sharedState.cacheManager, paths)
+      val n = pinCounts.getOrElse(k, 0) - 1
+      if (n > 0) pinCounts(k) = n
+      else { pinCounts.remove(k); df.unpersist() }
+    }
+
   /** Columns of a pinned segments scan, in [[segRowsOf]]'s order. */
   private[search] val SegCols =
     Seq("term", "salt", "docBlocks", "skipData", "posBlocks", "payBlocks")
@@ -1296,30 +1320,35 @@ final class Searcher(private[search] val spark: SparkSession,
       df.filter(live(col("docId")))
     }
 
-  /** Tables this Searcher pinned in memory, unpersisted by `close()`. */
-  private val pinned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
-  /** Persist `df`, plan its scan of `cols` (then `bucket`) once, and
-    * materialise it with ONE job over that scan that returns the buckets
-    * each cached partition holds, so a lookup runs only the partitions
-    * holding its buckets.
+  /** Tables this Searcher pinned in memory, with the paths they read;
+    * released by `close()`.
     */
-  private def pin(df: DataFrame, cols: Seq[String]): Pinned = {
-    val p = df.persist()
-    pinned.add(p)
-    val rows = p.select((cols :+ "bucket").map(col): _*).queryExecution.toRdd
+  private val pinned =
+    new java.util.concurrent.ConcurrentLinkedQueue[(DataFrame, Seq[String])]
+
+  /** Pin `df` (which reads `paths`), plan its scan of `cols` (then
+    * `bucket`) once, and materialise it with ONE job over that scan that
+    * returns the buckets each cached partition holds, so a lookup runs
+    * only the partitions holding its buckets.
+    */
+  private def pin(df: DataFrame, paths: Seq[String], cols: Seq[String]): Pinned = {
+    acquirePin(df, paths)
+    pinned.add(df -> paths)
+    val rows = df.select((cols :+ "bucket").map(col): _*).queryExecution.toRdd
     val bi = cols.size
     val parts = rows.mapPartitions { it =>
       val bs = new java.util.BitSet
       it.foreach(r => bs.set(r.getInt(bi)))
       Iterator.single(bs)
     }.collect()
-    Pinned(p, rows, parts)
+    Pinned(df, rows, parts)
   }
 
-  private lazy val pinnedSegments: Pinned = pin(segmentsRead, SegCols)
+  private lazy val pinnedSegments: Pinned =
+    pin(segmentsRead, s"${index.dir}/segments" +: index.segmentPaths, SegCols)
   private lazy val pinnedStats: Pinned =
-    pin(spark.read.parquet(s"${index.dir}/termstats"), Seq("term", "df", "ttf"))
+    pin(spark.read.parquet(s"${index.dir}/termstats"),
+      Seq(s"${index.dir}/termstats"), Seq("term", "df", "ttf"))
 
   lazy val segmentsDf: DataFrame =
     if (cacheSegments) pinnedSegments.df else segmentsRead
@@ -1361,7 +1390,7 @@ final class Searcher(private[search] val spark: SparkSession,
     private val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
     def getSync(t: String): Option[Array[SegRow]] = map.get(t)
     def putSized(t: String, rows: Array[SegRow]): Unit = {
-      val sz = rows.map(r => r.docBlocks.length + r.skipData.length.toLong).sum
+      val sz = rows.map(rowBytes).sum
       if (bytes.addAndGet(sz) > maxLocalBytes * 2) {
         map.clear()
         bytes.set(sz)
@@ -1369,7 +1398,9 @@ final class Searcher(private[search] val spark: SparkSession,
       map.put(t, rows)
       ()
     }
+    def size: Int = map.size
   }
+  private[graft] def blobCacheSize: Int = blobCache.size
 
   /** Per-term scoring weights from raw (df, ttf) stats. */
   private def mkWeights(st: Map[String, (Long, Long)]): Map[String, TermWeightInfo] =
@@ -2119,17 +2150,20 @@ final class Searcher(private[search] val spark: SparkSession,
   private def bucketsOf(terms: Set[String]): Set[Int] =
     terms.map(t => IndexBuilder.bucketOf(t, m.numBuckets))
 
-  /** The query terms' blobs, through the driver cache. */
+  /** The query terms' blobs, through the driver cache. The rows are
+    * returned from this call's own reads: a put may reset the cache.
+    */
   private[search] def fetchRows(present: Set[String]): Array[SegRow] = {
     val cached = present.toSeq.map(t => t -> blobCache.getSync(t))
     val missing = cached.collect { case (t, None) => t }.toSet
-    if (missing.nonEmpty) {
-      val fetched = termRows(missing).collect().groupBy(_.term)
-      missing.foreach(t =>
-        blobCache.putSized(t, fetched.getOrElse(t, Array.empty[SegRow])))
-    }
-    present.toSeq.flatMap(t => blobCache.getSync(t).getOrElse(
-      Array.empty[SegRow])).toArray
+    val fetched =
+      if (missing.isEmpty) Map.empty[String, Array[SegRow]]
+      else termRows(missing).collect().groupBy(_.term)
+    missing.foreach(t =>
+      blobCache.putSized(t, fetched.getOrElse(t, Array.empty[SegRow])))
+    cached.flatMap { case (t, c) =>
+      c.getOrElse(fetched.getOrElse(t, Array.empty[SegRow]))
+    }.toArray
   }
 
   /** The driver-local shard split: the query terms' rows (through the
@@ -4982,12 +5016,13 @@ final class Searcher(private[search] val spark: SparkSession,
       .toDF("docId", "tfv")
   }
 
-  /** Drops the memoized caches and unpersists what this Searcher pinned;
-    * a table it never read stays unread.
+  /** Drops the memoized caches and releases what this Searcher pinned
+    * (the last Searcher on a table unpersists it); a table it never read
+    * stays unread.
     */
   def close(): Unit = {
     localScoresCache.clear()
     var p = pinned.poll()
-    while (p != null) { p.unpersist(); p = pinned.poll() }
+    while (p != null) { releasePin(p._1, p._2); p = pinned.poll() }
   }
 }

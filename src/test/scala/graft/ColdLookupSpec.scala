@@ -170,6 +170,58 @@ class ColdLookupSpec extends AnyFunSuite {
     s.close(); ref.close()
   }
 
+  test("the blob cache counts position bytes toward its budget") {
+    // the phrase terms repeat in every doc: small doc blobs, large
+    // position blobs
+    import spark.implicits._
+    val dir = s"$tmp/positions"
+    val docs = (0 until 8).map(i => (i.toLong, "alpha beta " * 400 + s"doc$i"))
+      .toDF("docId", "content")
+    val ix = IndexBuilder.buildLogical(docs, "content", Some("docId"), Nil, cfg)
+    IndexBuilder.writeIndex(ix, dir, "snap-positions", numGroups = 1)
+    ix.unpersistCached(); ix.postings.unpersist()
+    val terms = Seq("alpha", "beta")
+    val bytes = spark.read.parquet(s"$dir/segments")
+      .filter(col("term").isin(terms: _*))
+      .selectExpr("length(docBlocks) + length(skipData)",
+        "length(posBlocks) + length(payBlocks)")
+      .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong))
+    val docBytes = bytes.map(_._1).sum
+    val allBytes = docBytes + bytes.map(_._2).sum
+    // the gate admits the phrase (df·4 + 64 per term) and the cache's
+    // 2 × maxLocalBytes holds both terms' doc blobs, not doc + positions
+    val budget = math.max(terms.size * (8 * 4L + 64), docBytes)
+    assert(2 * budget < allBytes,
+      s"doc bytes $docBytes, all bytes $allBytes, budget $budget")
+    val six = SegmentSearcher.load(dir)
+    val s = new Searcher(spark, six, maxLocalBytes = budget)
+    val ref = new Searcher(spark, six, cacheSegments = false)
+    val q = PhraseQ(terms)
+    val hits = s.search(q, 10)
+    assert(hits.length === 8)
+    assert(hitsOf(hits) === hitsOf(ref.search(q, 10)))
+    // the second term's rows overflowed the budget and reset the cache
+    assert(s.blobCacheSize === 1)
+    s.close(); ref.close()
+  }
+
+  test("two Searchers on one index share its pinned tables until the last closes") {
+    val terms = termDfs(plain).map(_._1)
+    val a = new Searcher(spark, plain)
+    val b = new Searcher(spark, plain)
+    a.search(TermQ(terms(0)), 5)
+    b.search(TermQ(terms(1)), 5)
+    a.close()
+    assert(TestSpark.cached(b.segmentsDf))
+    assert(TestSpark.cached(b.termStatsDf))
+    val ref = new Searcher(spark, plain, cacheSegments = false)
+    val fresh = terms.slice(2, 8).toSet
+    assert(b.stats(fresh) === ref.stats(fresh))
+    b.close(); ref.close()
+    assert(!TestSpark.cached(b.segmentsDf))
+    assert(!TestSpark.cached(b.termStatsDf))
+  }
+
   test("a one-bucket query schedules only the cached partitions that hold its bucket") {
     val conf = spark.conf
     val keys = Seq("spark.sql.files.maxPartitionBytes",

@@ -246,6 +246,16 @@ class SegmentSpec extends AnyFunSuite {
     assert(lin.values.map(_._2).sum === 400L)
   }
 
+  test("termstats holds one data file per bucket") {
+    val (_, six) = built
+    val buckets = new java.io.File(s"${six.dir}/termstats").listFiles()
+      .filter(_.getName.startsWith("bucket="))
+    assert(buckets.length === 8)
+    for (b <- buckets)
+      assert(b.listFiles().count(_.getName.endsWith(".parquet")) === 1,
+        b.getName)
+  }
+
   test("resume: killed build restarts at segment-group granularity") {
     import spark.implicits._
     val ix = IndexBuilder.buildLogical(

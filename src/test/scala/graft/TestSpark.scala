@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** One shared local SparkSession for all suites. */
 object TestSpark {
@@ -16,4 +17,7 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Whether Spark's CacheManager holds `df`'s plan. */
+  def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
 }
