@@ -21,27 +21,23 @@ import org.apache.spark.sql.functions._
   */
 object DocIds {
 
-  def withDocIds(df: DataFrame, sortCols: Seq[String],
-      docIdCol: String = "docId", numPartitions: Int = 0): DataFrame =
-    withDocIdsCounted(df, sortCols, docIdCol, numPartitions)._1
-
-  /** As [[withDocIds]], also returning the total row count (free: the
-    * per-partition counting pass already computes it).
+  /** `df` with a `docIdCol`, the total row count (free: the per-partition
+    * counting pass already computes it), and the range-partitioned input
+    * both passes read, pinned ([[CachePins]]) so the sampled range
+    * boundaries are identical between them; the caller releases it once
+    * the numbered frame is no longer read.
     */
   def withDocIdsCounted(df: DataFrame, sortCols: Seq[String],
-      docIdCol: String = "docId", numPartitions: Int = 0): (DataFrame, Long) = {
+      docIdCol: String = "docId",
+      numPartitions: Int = 0): (DataFrame, Long, DataFrame) = {
     val spark = df.sparkSession
     val cols: Seq[Column] = sortCols.map(col)
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    // persist so the (sampled) range boundaries are identical between the
-    // count pass and the numbering pass; the cache is released when the
-    // caller materializes its downstream tables (or with the session)
-    val ranged = df
+    val ranged = CachePins.acquire(df
       .repartitionByRange(parts, cols: _*)
-      .withColumn("_pid", spark_partition_id())
-      .persist()
+      .withColumn("_pid", spark_partition_id()))
     // per-partition row counts straight off the cached partitions: ONE
     // narrow job (mapPartitionsWithIndex), versus the groupBy form's
     // hash exchange + two AQE stage-jobs — pure fixed cost on the
@@ -62,6 +58,6 @@ object DocIds {
       .join(broadcast(baseDf), Seq("_pid"))
       .withColumn(docIdCol, col("_base") + col("_local") - 1)
       .drop("_pid", "_base", "_local")
-    (out, counts.map(_._2).sum)
+    (out, counts.map(_._2).sum, ranged)
   }
 }

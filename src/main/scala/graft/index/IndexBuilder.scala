@@ -521,9 +521,9 @@ object IndexBuilder {
       collStats: CollStats,
       cfg: BuildConfig,
       contentCol: String = "content",
-      /** DataFrames persisted by buildLogical (for caller cleanup). */
+      /** DataFrames pinned by buildLogical (for caller cleanup). */
       cached: Seq[DataFrame] = Nil) {
-    def unpersistCached(): Unit = cached.foreach(_.unpersist())
+    def unpersistCached(): Unit = cached.foreach(CachePins.release)
 
     /** Memoized term → (df, ttf) lookups against `termStats` — the
       * ExactStatsCache analog for the DataFrame path (stats of an
@@ -679,12 +679,12 @@ object IndexBuilder {
         s"indexSort='$f' requires docIdCol=None and sortCols to lead with '$f'")
     }
     // docId assignment; docCount falls out of the counting pass for free
-    val (withId, docCountKnown) = docIdCol match {
+    val (withId, docCountKnown, ranged) = docIdCol match {
       case Some(c) =>
-        (corpus.withColumn("docId", col(c).cast("long")), None)
+        (corpus.withColumn("docId", col(c).cast("long")), None, None)
       case None =>
-        val (df, n) = DocIds.withDocIdsCounted(corpus, sortCols)
-        (df, Some(n))
+        val (df, n, r) = DocIds.withDocIdsCounted(corpus, sortCols)
+        (df, Some(n), Some(r))
     }
     // ONE shared (optionally cached) intermediate backs BOTH the docs
     // table and the postings — tokenize + sha run exactly once per row
@@ -711,7 +711,7 @@ object IndexBuilder {
       .withColumn("length", col("_p._1"))
       .withColumn("normByte", normUdf(col("length")))
       .withColumn("contentSha256", sha2(col(contentCol), 256))
-    val perDoc = if (persistPostings) perDoc0.persist() else perDoc0
+    val perDoc = if (persistPostings) CachePins.acquire(perDoc0) else perDoc0
 
     val docs = perDoc.drop("_p")
     val posCol =
@@ -728,7 +728,7 @@ object IndexBuilder {
       .agg(count(lit(1)).as("df"), sum("tf").as("ttf"))
     // termStats is consumed 3× per build (sumTTF, termstats.write, hot-set
     // collect) — pin it so the 15M-row aggregation runs once
-    val termStats = if (persistPostings) termStats0.persist() else termStats0
+    val termStats = if (persistPostings) CachePins.acquire(termStats0) else termStats0
 
     // collection stats: sumTTF from the (cached) postings aggregate;
     // docCount from the docId pass (or one cheap count of the raw corpus
@@ -741,7 +741,7 @@ object IndexBuilder {
 
     LogicalIndex(docs, postings, termStats,
       CollStats(docCount, sumTtf), cfg, contentCol,
-      cached = if (persistPostings) Seq(perDoc, termStats) else Nil)
+      cached = if (persistPostings) ranged.toSeq ++ Seq(perDoc, termStats) else Nil)
   }
 
   // ---------- segment encode ----------

@@ -343,30 +343,6 @@ object SegmentSearcher {
     }
   }
 
-  /** Searchers holding each pinned table, by (CacheManager, paths the
-    * table reads). Spark caches ONE entry per plan, so Searchers over one
-    * index share it: only the first pin persists, only the last release
-    * unpersists.
-    */
-  private val pinCounts =
-    scala.collection.mutable.HashMap.empty[(AnyRef, Seq[String]), Int]
-
-  private[search] def acquirePin(df: DataFrame, paths: Seq[String]): Unit =
-    pinCounts.synchronized {
-      val k = (df.sparkSession.sharedState.cacheManager, paths)
-      val n = pinCounts.getOrElse(k, 0)
-      if (n == 0) df.persist()
-      pinCounts(k) = n + 1
-    }
-
-  private[search] def releasePin(df: DataFrame, paths: Seq[String]): Unit =
-    pinCounts.synchronized {
-      val k = (df.sparkSession.sharedState.cacheManager, paths)
-      val n = pinCounts.getOrElse(k, 0) - 1
-      if (n > 0) pinCounts(k) = n
-      else { pinCounts.remove(k); df.unpersist() }
-    }
-
   /** Columns of a pinned segments scan, in [[segRowsOf]]'s order. */
   private[search] val SegCols =
     Seq("term", "salt", "docBlocks", "skipData", "posBlocks", "payBlocks")
@@ -401,36 +377,33 @@ object SegmentSearcher {
   private[search] def blobsOf(it: Iterator[SegRow]): Map[String, SegRow] =
     it.filter(_.salt != -2).map(r => r.term -> r).toMap
 
-  /** Exhaustively count a shard's matches (TotalHitCountCollector body). */
-  private[search] def countShard(shard: Int, blobs: Map[String, SegRow],
-      plan: Plan): Long = {
-    val scorer = buildScorer(plan.query, shard, blobs, plan, 1f)
-    val del = plan.deletes
-    var n = 0L
-    var d = scorer.nextDoc()
-    while (d != DocScorer.NO_MORE) {
-      if (!graft.index.Deletes.contains(del, d)) n += 1
-      d = scorer.nextDoc()
-    }
-    n
-  }
-
-  /** Exhaustively walk one shard's matches into a LeafCollector — the
-    * `Weight.scorer → LeafCollector.collect` loop of
-    * `IndexSearcher.java` with WAND off (a collector that needs every
-    * hit forces COMPLETE score mode in the reference too). Tombstones
-    * (liveDocs) are applied before the collector sees the doc.
+  /** One shard's live matches in docId order: the scorer tree over the
+    * shard's blobs with tombstones skipped — the
+    * `Weight.bulkScorer(ctx).score(leafCollector, liveDocs)` walk of
+    * `IndexSearcher.java` with WAND off, the ONE place the exhaustive
+    * entry points apply liveDocs, on the driver pool and in the shard
+    * tasks alike. `score` is the score of the doc `next()` last returned.
     */
-  private[search] def collectShard(shard: Int, blobs: Map[String, SegRow],
-      plan: Plan, leaf: Collectors.LeafCollector): Unit = {
-    val scorer = buildScorer(plan.query, shard, blobs, plan, 1f)
-    val del = plan.deletes
-    var d = scorer.nextDoc()
-    while (d != DocScorer.NO_MORE) {
-      if (!graft.index.Deletes.contains(del, d))
-        leaf.collect(d, scorer.score.toDouble)
-      d = scorer.nextDoc()
+  private[search] final class LiveMatches(shard: Int,
+      blobs: Map[String, SegRow], plan: Plan) extends Iterator[Long] {
+    private val scorer = buildScorer(plan.query, shard, blobs, plan, 1f)
+    private val del = plan.deletes
+    private var d = -1L
+    private var ahead = false
+    def hasNext: Boolean = {
+      if (!ahead) {
+        do d = scorer.nextDoc()
+        while (d != DocScorer.NO_MORE && graft.index.Deletes.contains(del, d))
+        ahead = true
+      }
+      d != DocScorer.NO_MORE
     }
+    def next(): Long = {
+      if (!hasNext) throw new NoSuchElementException("no more live matches")
+      ahead = false
+      d
+    }
+    def score: Float = scorer.score
   }
 
   /** One exhaustive walk producing top-k AND the exact total hit count —
@@ -442,17 +415,9 @@ object SegmentSearcher {
   private[search] def topkCountShard(shard: Int, blobs: Map[String, SegRow],
       plan: Plan): (Array[Hit], Long) = {
     val queue = new BoundedHitQueue(plan.k)
-    val scorer = buildScorer(plan.query, shard, blobs, plan, 1f)
-    val del = plan.deletes
+    val it = new LiveMatches(shard, blobs, plan)
     var n = 0L
-    var d = scorer.nextDoc()
-    while (d != DocScorer.NO_MORE) {
-      if (!graft.index.Deletes.contains(del, d)) {
-        n += 1
-        queue.insert(d, scorer.score.toDouble)
-      }
-      d = scorer.nextDoc()
-    }
+    it.foreach { d => n += 1; queue.insert(d, it.score.toDouble) }
     (queue.sortedHits, n)
   }
 
@@ -1320,20 +1285,17 @@ final class Searcher(private[search] val spark: SparkSession,
       df.filter(live(col("docId")))
     }
 
-  /** Tables this Searcher pinned in memory, with the paths they read;
-    * released by `close()`.
-    */
-  private val pinned =
-    new java.util.concurrent.ConcurrentLinkedQueue[(DataFrame, Seq[String])]
+  /** Tables this Searcher pinned in memory; released by `close()`. */
+  private val pinned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
 
-  /** Pin `df` (which reads `paths`), plan its scan of `cols` (then
-    * `bucket`) once, and materialise it with ONE job over that scan that
-    * returns the buckets each cached partition holds, so a lookup runs
-    * only the partitions holding its buckets.
+  /** Pin `df`, plan its scan of `cols` (then `bucket`) once, and
+    * materialise it with ONE job over that scan that returns the buckets
+    * each cached partition holds, so a lookup runs only the partitions
+    * holding its buckets.
     */
-  private def pin(df: DataFrame, paths: Seq[String], cols: Seq[String]): Pinned = {
-    acquirePin(df, paths)
-    pinned.add(df -> paths)
+  private def pin(df: DataFrame, cols: Seq[String]): Pinned = {
+    graft.core.CachePins.acquire(df)
+    pinned.add(df)
     val rows = df.select((cols :+ "bucket").map(col): _*).queryExecution.toRdd
     val bi = cols.size
     val parts = rows.mapPartitions { it =>
@@ -1345,10 +1307,9 @@ final class Searcher(private[search] val spark: SparkSession,
   }
 
   private lazy val pinnedSegments: Pinned =
-    pin(segmentsRead, s"${index.dir}/segments" +: index.segmentPaths, SegCols)
+    pin(segmentsRead, SegCols)
   private lazy val pinnedStats: Pinned =
-    pin(spark.read.parquet(s"${index.dir}/termstats"),
-      Seq(s"${index.dir}/termstats"), Seq("term", "df", "ttf"))
+    pin(spark.read.parquet(s"${index.dir}/termstats"), Seq("term", "df", "ttf"))
 
   lazy val segmentsDf: DataFrame =
     if (cacheSegments) pinnedSegments.df else segmentsRead
@@ -2047,24 +2008,20 @@ final class Searcher(private[search] val spark: SparkSession,
     planFor(q0, k, after, useWand, sim0, multiSims) match {
       case None => Array.empty
       case Some((plan, present, st)) =>
-        val hasAll = Query.containsMatchAll(plan.query)
-        if (present.isEmpty && !hasAll) return Array.empty
-        val partials: Seq[Array[Hit]] =
-          if (present.isEmpty) Seq(execShard(-1, Map.empty, plan))
-          else if (estPostingBytes(st, present) <= maxLocalBytes)
-            execLocal(present, plan)
-          else execDistributed(present, plan)
-        TopK.merge(partials, k)
+        TopK.merge(onTier(present, st, plan)(execShard), k)
     }
   }
 
   /** Compile a (rewritten, expanded) query + similarity selection into an
     * executable Plan — the IndexSearcher.createWeight phase, shared by
-    * search(), collect() and searchWithCount(). None ⇔ the query can
-    * match nothing (MatchNone, or no present terms and no MatchAll).
+    * every query entry point; the defaults (BM25, WAND off: every live
+    * match is visited) are the exhaustive entry points'. None ⇔ the
+    * query can match nothing (MatchNone, or no present terms and no
+    * MatchAll).
     */
-  private[search] def planFor(q0: Query, k: Int, after: Option[(Double, Long)],
-      useWand: Boolean, sim0: Int, multiSims: Seq[Int])
+  private def planFor(q0: Query, k: Int, after: Option[(Double, Long)] = None,
+      useWand: Boolean = false, sim0: Int = SegmentSearcher.SimBm25,
+      multiSims: Seq[Int] = Nil)
       : Option[(Plan, Set[String], Map[String, (Long, Long)])] = {
     // a non-empty component list selects MultiSimilarity (CombSUM)
     val sim = if (multiSims.nonEmpty) SegmentSearcher.SimMulti else sim0
@@ -2136,8 +2093,38 @@ final class Searcher(private[search] val spark: SparkSession,
       sumTtf = m.sumTotalTermFreq,
       multiSims = multiSims))
 
-    Some((plan, terms.filter(st.contains), st))
+    val present = terms.filter(st.contains)
+    if (present.isEmpty && !hasAll) None else Some((plan, present, st))
   }
+
+  /** The tier gate: does the local path fit `maxLocalBytes`? It pulls the
+    * present terms' posting blobs, `dvColumns` docvalue columns (each
+    * ~`dvBytes`) and the postings of every inner query (a value source's
+    * QueryV) to the driver. The one reader of [[estPostingBytes]] and of
+    * `maxLocalBytes` for the query entry points.
+    */
+  private def fitsLocal(st: Map[String, (Long, Long)] = Map.empty,
+      present: Set[String] = Set.empty, dvColumns: Int = 0,
+      innerQueries: Seq[Query] = Nil): Boolean =
+    dvColumns.toLong * dvBytes <= maxLocalBytes &&
+      (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes) &&
+      innerQueries.forall { iq =>
+        val its = Query.literalTerms(iq)
+        val ist = stats(its)
+        fitsLocal(ist, its.filter(ist.contains))
+      }
+
+  /** `f` per shard group on the tier the gate picks: the driver pool when
+    * the postings fit, else ONE [[shardTasks]] job, whose tasks run `f`
+    * (so it must not capture the Searcher).
+    */
+  private def onTier[T: scala.reflect.ClassTag](present: Set[String],
+      st: Map[String, (Long, Long)], plan: Plan)(
+      f: (Int, Map[String, SegRow], Plan) => T): Seq[T] =
+    if (fitsLocal(st, present)) onLocalPool(present, plan)(f(_, _, plan))
+    else shardTasks(present, plan) { (s, blobs, p) =>
+      Iterator.single(f(s, blobs, p))
+    }.collect().toSeq
 
   /** The segment rows of `terms`: the pinned scan pruned to their buckets
     * (no per-query Catalyst planning), or without `cacheSegments` a pruned
@@ -2199,12 +2186,6 @@ final class Searcher(private[search] val spark: SparkSession,
         }.map(_.get())
     }
 
-  /** Pruned read (through the blob cache) → thread-pool over shards on
-    * the driver.
-    */
-  private def execLocal(present: Set[String], plan: Plan): Seq[Array[Hit]] =
-    onLocalPool(present, plan)(execShard(_, _, plan))
-
   /** The distributed shard path (hot posting lists never centralize) as
     * ONE Spark job of two stages, with no per-query Catalyst planning:
     * the terms' rows ([[termRows]]) are keyed by shard — salted
@@ -2216,7 +2197,7 @@ final class Searcher(private[search] val spark: SparkSession,
     * MatchAll-derived matches.
     */
   private def shardTasks[T: scala.reflect.ClassTag](present: Set[String],
-      plan: Plan, forceAllShards: Boolean)(
+      plan: Plan, forceAllShards: Boolean = false)(
       f: (Int, Map[String, SegRow], Plan) => Iterator[T])
       : RDD[T] = {
     val sc = spark.sparkContext
@@ -2246,14 +2227,18 @@ final class Searcher(private[search] val spark: SparkSession,
       }
   }
 
-  /** Top-k per shard inside the shard tasks, partials collected: one
-    * Spark job per query, no per-query Catalyst planning (see
-    * [[shardTasks]]).
+  /** Every live match of a planned query with its score, (docId, ms
+    * float), streamed out of the shard tasks — nothing match-count-sized
+    * reaches the driver. `perShard` caps each shard's stream.
     */
-  private def execDistributed(present: Set[String], plan: Plan): Seq[Array[Hit]] =
-    shardTasks(present, plan, forceAllShards = false) { (s, blobs, p) =>
-      Iterator.single(execShard(s, blobs, p))
-    }.collect().toSeq
+  private def matchStream(plan: Plan, present: Set[String],
+      perShard: Int = Int.MaxValue): DataFrame = {
+    import spark.implicits._
+    shardTasks(present, plan) { (s, blobs, p) =>
+      val it = new LiveMatches(s, blobs, p)
+      it.take(perShard).map(d => (d, it.score))
+    }.toDF("docId", "ms")
+  }
 
   private[search] def prunedRows(present: Set[String]): Dataset[SegRow] = {
     import spark.implicits._
@@ -2270,10 +2255,10 @@ final class Searcher(private[search] val spark: SparkSession,
   /** Count ALL matches of a query without collecting them — the
     * TotalHitCountCollector analog (`search/TotalHitCountCollector.java`):
     * per-shard exhaustive scorer iteration, counts summed across shards.
-    * Routed through the same `estBytes <= maxLocalBytes` gate as search():
-    * a hot term's posting bytes never centralize on the driver — the
-    * distributed path counts inside the groupByKey shard tasks and ships
-    * back ONE long per shard.
+    * Routed through the same tier gate as search() ([[onTier]]): a hot
+    * term's posting bytes never centralize on the driver — the
+    * distributed path counts inside the shard tasks and ships back ONE
+    * long per shard.
     */
   def count(q0: Query): Long = {
     q0 match {
@@ -2287,28 +2272,13 @@ final class Searcher(private[search] val spark: SparkSession,
         return functionDf(vs).filter(lo && hi).count()
       case _ =>
     }
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    if (q == MatchNoneQ) return 0L
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !hasAll) return 0L
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val present = terms.filter(st.contains)
-    if (present.isEmpty && !hasAll) return 0L
-    val sharded = weights.values.exists(_.salted)
-    val plan = withDeletes(Plan(q, 1, None, weights, cache, m.numDocShards, sharded,
-      m.docCount, params, useWand = false))
-    if (present.isEmpty) SegmentSearcher.countShard(-1, Map.empty, plan)
-    else if (estPostingBytes(st, present) <= maxLocalBytes)
-      localShards(present, plan).map { case (s, b) =>
-        SegmentSearcher.countShard(s, b, plan)
-      }.sum
-    else
-      shardTasks(present, plan, forceAllShards = false) { (s, blobs, p) =>
-        Iterator.single(SegmentSearcher.countShard(s, blobs, p))
-      }.collect().sum
+    planFor(q0, 1) match {
+      case None => 0L
+      case Some((plan, present, st)) =>
+        onTier(present, st, plan) { (s, blobs, p) =>
+          new LiveMatches(s, blobs, p).size.toLong
+        }.sum
+    }
   }
 
   // ---------- collector protocol ----------
@@ -2340,26 +2310,20 @@ final class Searcher(private[search] val spark: SparkSession,
             "postings collector protocol")
       case _ =>
     }
-    planFor(q0, 1, None, useWand = false, sim0, Nil) match {
+    planFor(q0, 1, sim0 = sim0) match {
       case None => ()
       case Some((plan, present, st)) =>
-        val hasAll = Query.containsMatchAll(plan.query)
-        if (present.isEmpty && !hasAll) return
-        val shards: Seq[(Int, Map[String, SegRow])] =
-          if (present.isEmpty) Seq((-1, Map.empty))
-          else {
-            require(estPostingBytes(st, present) <= maxLocalBytes,
-              "collector protocol is driver-local: postings exceed " +
-                "maxLocalBytes — use searchWithCount (fused shard " +
-                "partials) or raise maxLocalBytes")
-            localShards(present, plan)
-          }
+        require(fitsLocal(st, present),
+          "collector protocol is driver-local: postings exceed " +
+            "maxLocalBytes — use searchWithCount (fused shard " +
+            "partials) or raise maxLocalBytes")
         // sequential, shard-ascending: collectors are stateful and the
         // reference's leaf order is likewise deterministic
-        shards.foreach { case (s, blobs) =>
+        localShards(present, plan).foreach { case (s, blobs) =>
           try {
             val leaf = collector.leaf(math.max(s, 0))
-            SegmentSearcher.collectShard(s, blobs, plan, leaf)
+            val it = new LiveMatches(s, blobs, plan)
+            it.foreach(d => leaf.collect(d, it.score.toDouble))
           } catch { case _: Collectors.CollectionTerminated => () }
         }
     }
@@ -2372,22 +2336,10 @@ final class Searcher(private[search] val spark: SparkSession,
     * ships back one (top-k, count) pair per shard.
     */
   def searchWithCount(q0: Query, k: Int): (Array[Hit], Long) = {
-    planFor(q0, k, None, useWand = false, SegmentSearcher.SimBm25, Nil) match {
+    planFor(q0, k) match {
       case None => (Array.empty, 0L)
       case Some((plan, present, st)) =>
-        val hasAll = Query.containsMatchAll(plan.query)
-        if (present.isEmpty && !hasAll) return (Array.empty, 0L)
-        val partials: Seq[(Array[Hit], Long)] =
-          if (present.isEmpty)
-            Seq(SegmentSearcher.topkCountShard(-1, Map.empty, plan))
-          else if (estPostingBytes(st, present) <= maxLocalBytes)
-            onLocalPool(present, plan)(
-              SegmentSearcher.topkCountShard(_, _, plan))
-          else
-            shardTasks(present, plan, forceAllShards = false) {
-              (s, blobs, p) =>
-                Iterator.single(SegmentSearcher.topkCountShard(s, blobs, p))
-            }.collect().toSeq
+        val partials = onTier(present, st, plan)(topkCountShard)
         (TopK.merge(partials.map(_._1), k), partials.map(_._2).sum)
     }
   }
@@ -2473,7 +2425,7 @@ final class Searcher(private[search] val spark: SparkSession,
     * `maxLocalBytes`, callers run their pruned distributed read.
     */
   def docKeysLocal(field: String): Option[Long => String] =
-    if (dvBytes <= maxLocalBytes) Some(docKeys(field)) else None
+    if (fitsLocal(dvColumns = 1)) Some(docKeys(field)) else None
 
   /** Deterministic snippet for each hit — the highlighter surface
     * (`lucene/highlighter/src/java/org/apache/lucene/search/uhighlight/
@@ -2873,27 +2825,17 @@ final class Searcher(private[search] val spark: SparkSession,
   def rescore(first: Array[Hit], q0: Query, weight: Float, k: Int): Array[Hit] = {
     val queue = new BoundedHitQueue(k)
     if (first.isEmpty) return Array.empty
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val present = terms.filter(st.contains)
-    if (q == MatchNoneQ || (present.isEmpty && !hasAll)) {
+    val (plan, present, st) = planFor(q0, k).getOrElse {
       first.foreach(h => queue.insert(h.docId, h.score))
       return queue.sortedHits
     }
-    val sharded = weights.values.exists(_.salted)
-    val plan = withDeletes(Plan(q, k, None, weights, cache, m.numDocShards, sharded,
-      m.docCount, params, useWand = false))
-    if (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes) {
+    val byShard: Map[Int, Array[Hit]] =
+      if (!plan.sharded) Map(-1 -> first)
+      else first.groupBy(h => (h.docId % plan.numShards).toInt)
+    if (fitsLocal(st, present)) {
       // driver-local: blobs fit the byte budget (first-pass hits are small
       // by contract — it's the rescore QUERY's postings that can be hot)
       val rows = if (present.isEmpty) Array.empty[SegRow] else fetchRows(present)
-      val byShard: Map[Int, Array[Hit]] =
-        if (!sharded) Map(-1 -> first)
-        else first.groupBy(h => (h.docId % plan.numShards).toInt)
       byShard.foreach { case (shard, hits) =>
         val blobs =
           if (shard < 0) rows.map(r => r.term -> r).toMap
@@ -2906,9 +2848,6 @@ final class Searcher(private[search] val spark: SparkSession,
       // distributed: first-pass hits broadcast to the shard tasks, blobs
       // stay executor-side; forceAllShards seeds a group even for shards
       // whose rescore-query blobs are empty (their hits keep firstScore)
-      val byShard: Map[Int, Array[Hit]] =
-        if (!sharded) Map(-1 -> first)
-        else first.groupBy(h => (h.docId % plan.numShards).toInt)
       val bHits = spark.sparkContext.broadcast(byShard)
       val w = weight
       shardTasks(present, plan, forceAllShards = true) { (s, blobs, p) =>
@@ -2974,20 +2913,6 @@ final class Searcher(private[search] val spark: SparkSession,
       }
     })
 
-  /** Top-k of the MATCHING docs ordered by a numeric field (asc/desc, ties
-    * docId asc) — `search(q, k, sortBy = field)` through the engine, the
-    * TopFieldCollector analog (`search/TopFieldCollector.java:35`): every
-    * match streams from the scorer tree, sort keys come from docvalues,
-    * scores are not computed. Returns (docId, fieldValue) pairs in rank
-    * order.
-    *
-    * Scale shape: when either the query blobs or the docvalues column
-    * exceed `maxLocalBytes`, matching docIds stream out of the groupByKey
-    * shard tasks, sort keys are joined executor-side from the docs table
-    * (the column store), and the top-k comes from Spark's
-    * TakeOrderedAndProject (bounded per-partition heap + driver merge of
-    * k) — nothing doc-count-sized ever reaches the driver.
-    */
   /** Spell suggestions for a (possibly misspelled) term — the
     * DirectSpellChecker surface (`lucene/suggest/.../spell/
     * DirectSpellChecker.java:390-460`, Solr /spell): candidates within
@@ -3648,20 +3573,7 @@ final class Searcher(private[search] val spark: SparkSession,
   def searchBySort(q0: Query, k: Int,
       fields: Seq[(String, Boolean)]): Array[(Long, Array[Long])] = {
     require(fields.nonEmpty, "empty sort spec")
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    if (q == MatchNoneQ) return Array.empty
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !hasAll) return Array.empty
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val sharded = weights.values.exists(_.salted)
-    val plan = withDeletes(Plan(q, k, None, weights, cache, m.numDocShards, sharded,
-      m.docCount, params, useWand = false))
-    val present = terms.filter(st.contains)
-    if (present.isEmpty && !hasAll) return Array.empty
-
+    val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
     val ord = new Ordering[(Long, Array[Long])] {
       def compare(a: (Long, Array[Long]), b: (Long, Array[Long])): Int = {
         var i = 0
@@ -3674,36 +3586,22 @@ final class Searcher(private[search] val spark: SparkSession,
       }
     }
 
-    val localOk = dvBytes <= maxLocalBytes &&
-      (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes)
-    if (localOk) {
+    if (fitsLocal(st, present, fields.map(_._1).distinct.size)) {
       val gets = fields.map(f => docValues(f._1))
-      def collectShard(shard: Int,
-          blobs: Map[String, SegRow]): Seq[(Long, Array[Long])] = {
+      onLocalPool(present, plan) { (shard, blobs) =>
         // max-heap under the reversed chain ordering: head = WORST kept
         val pq = scala.collection.mutable.PriorityQueue
           .empty[(Long, Array[Long])](ord)
-        val scorer = SegmentSearcher.buildScorer(plan.query, shard, blobs, plan, 1f)
-        var d = scorer.nextDoc()
-        while (d != DocScorer.NO_MORE) {
-          if (!graft.index.Deletes.contains(plan.deletes, d)) {
-            pq.enqueue((d, gets.map(_(d)).toArray))
-            if (pq.size > k) pq.dequeue()
-          }
-          d = scorer.nextDoc()
+        new LiveMatches(shard, blobs, plan).foreach { d =>
+          pq.enqueue((d, gets.map(_(d)).toArray))
+          if (pq.size > k) pq.dequeue()
         }
-        pq.dequeueAll.toSeq
-      }
-      val partials: Seq[(Long, Array[Long])] =
-        localShards(present, plan).flatMap { case (s, b) => collectShard(s, b) }
-      partials.sorted(ord).take(k).toArray
+        pq.dequeueAll
+      }.flatten.sorted(ord).take(k).toArray
     } else {
-      import org.apache.spark.sql.functions.col
       val dv = dvDocsDf.select(
         col("docId") +: fields.map(f => col(f._1).cast("long").as(s"s_${f._1}")): _*)
-      val matches = liveDf(
-        if (present.isEmpty) dv.select("docId")
-        else matchScoresDf(q).select("docId"))
+      val matches = matchStream(plan, present).select("docId")
       val sortCols = fields.map(f =>
         if (f._2) col(s"s_${f._1}").asc else col(s"s_${f._1}").desc) :+
         col("docId").asc
@@ -3716,92 +3614,61 @@ final class Searcher(private[search] val spark: SparkSession,
     }
   }
 
+  /** Top-k of the MATCHING docs ordered by a numeric field (asc/desc, ties
+    * docId asc) — `search(q, k, sortBy = field)` through the engine, the
+    * TopFieldCollector analog (`search/TopFieldCollector.java:35`): every
+    * match streams from the scorer tree, sort keys come from docvalues,
+    * scores are not computed. Returns (docId, fieldValue) pairs in rank
+    * order.
+    *
+    * Scale shape: when either the query blobs or the docvalues column
+    * exceed `maxLocalBytes`, matching docIds stream out of the shard
+    * tasks, sort keys are joined executor-side from the docs table (the
+    * column store), and the top-k comes from Spark's
+    * TakeOrderedAndProject (bounded per-partition heap + driver merge of
+    * k) — nothing doc-count-sized ever reaches the driver.
+    *
+    * Index-time sort match (EarlyTerminatingSortingCollector,
+    * `search/EarlyTerminatingSortingCollector.java:30-75`): when the index
+    * is sorted by `field` and the order is ascending, docId order IS field
+    * order, so the first k live matches per shard dominate every later
+    * match — both tiers stop each shard's walk there.
+    */
   def searchByField(q0: Query, k: Int, field: String,
       asc: Boolean = true): Array[(Long, Long)] = {
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    if (q == MatchNoneQ) return Array.empty
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !hasAll) return Array.empty
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val sharded = weights.values.exists(_.salted)
-    val plan = withDeletes(Plan(q, k, None, weights, cache, m.numDocShards, sharded,
-      m.docCount, params, useWand = false))
-    val present = terms.filter(st.contains)
-    if (present.isEmpty && !hasAll) return Array.empty
-
-    val localOk = dvBytes <= maxLocalBytes &&
-      (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes)
-    if (localOk) searchByFieldLocal(plan, present, field, asc, k)
-    else searchByFieldDistributed(plan, present, field, asc, k)
+    val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
+    val earlyK = if (asc && m.indexSort.contains(field)) k else Int.MaxValue
+    if (fitsLocal(st, present, 1)) {
+      val get = docValues(field)
+      // reuse the score queue with a signed key: asc ⇒ key = -value (so the
+      // queue's score-desc order yields value asc); ties docId asc either way
+      val sign = if (asc) -1d else 1d
+      val partials = onLocalPool(present, plan) { (shard, blobs) =>
+        val queue = new BoundedHitQueue(k)
+        var n = 0
+        new LiveMatches(shard, blobs, plan).take(earlyK).foreach { d =>
+          queue.insert(d, sign * get(d)); n += 1
+        }
+        (queue.sortedHits, n)
+      }
+      lastFieldScanDocs = partials.map(_._2.toLong).sum
+      TopK.merge(partials.map(_._1), k).map(h => (h.docId, (sign * h.score).toLong))
+    } else {
+      val dv = dvDocsDf.select(col("docId"), col(field).cast("long").as("sortv"))
+      matchStream(plan, present, earlyK).select("docId")
+        .join(dv, "docId")
+        .orderBy(if (asc) col("sortv").asc else col("sortv").desc,
+          col("docId").asc)
+        .limit(k)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+    }
   }
 
-  /** Docs visited by the last searchByFieldLocal call (spec hook: proves
-    * early termination actually terminated early).
+  /** Live matches visited by the last local-tier searchByField call (spec
+    * hook: proves early termination actually terminated early).
     */
   private[graft] var lastFieldScanDocs: Long = 0L
-
-  private def searchByFieldLocal(plan: Plan, present: Set[String],
-      field: String, asc: Boolean, k: Int): Array[(Long, Long)] = {
-    val get = docValues(field)
-    // index-time sort match (EarlyTerminatingSortingCollector,
-    // `search/EarlyTerminatingSortingCollector.java:30-75`): docId order
-    // IS ascending field order, so the first k matches per shard dominate
-    // every later match — stop the postings walk there
-    val earlyK = if (asc && m.indexSort.contains(field)) k else Int.MaxValue
-    var visited = 0L
-    // reuse the score queue with a signed key: asc ⇒ key = -value (so the
-    // queue's score-desc order yields value asc); ties docId asc either way
-    val sign = if (asc) -1d else 1d
-    def collectShard(shard: Int, blobs: Map[String, SegRow]): Array[Hit] = {
-      val queue = new BoundedHitQueue(k)
-      val scorer = SegmentSearcher.buildScorer(plan.query, shard, blobs, plan, 1f)
-      var d = scorer.nextDoc()
-      var n = 0
-      while (d != DocScorer.NO_MORE && n < earlyK) {
-        if (!graft.index.Deletes.contains(plan.deletes, d)) {
-          queue.insert(d, sign * get(d))
-          n += 1
-        }
-        visited += 1
-        d = scorer.nextDoc()
-      }
-      queue.sortedHits
-    }
-    val partials: Seq[Array[Hit]] =
-      localShards(present, plan).map { case (s, b) => collectShard(s, b) }
-    lastFieldScanDocs = visited
-    TopK.merge(partials, k).map(h => (h.docId, (sign * h.score).toLong))
-  }
-
-  private def searchByFieldDistributed(plan: Plan, present: Set[String],
-      field: String, asc: Boolean, k: Int): Array[(Long, Long)] = {
-    import spark.implicits._
-    val dv = dvDocsDf.select(col("docId"), col(field).cast("long").as("sortv"))
-    val matches: DataFrame = liveDf(
-      if (present.isEmpty) dv.select("docId")
-      else {
-        // index-sorted + asc: per-shard docId order IS field order, so
-        // each shard task emits only its first k matches — the join +
-        // global top-k below sees numShards·k rows instead of every match
-        val earlyK = if (asc && m.indexSort.contains(field)) k else Int.MaxValue
-        shardTasks(present, plan, forceAllShards = false) { (s, blobs, p) =>
-          val scorer = SegmentSearcher.buildScorer(p.query, s, blobs, p, 1f)
-          Iterator.continually(scorer.nextDoc())
-            .takeWhile(_ != DocScorer.NO_MORE)
-            .filterNot(graft.index.Deletes.contains(p.deletes, _))
-            .take(earlyK)
-        }.toDF("docId")
-      })
-    matches.join(dv, "docId")
-      .orderBy(if (asc) col("sortv").asc else col("sortv").desc,
-        col("docId").asc)
-      .limit(k)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-  }
 
   // ---------- expression sort + rescore (lucene/expressions) ----------
 
@@ -3849,46 +3716,27 @@ final class Searcher(private[search] val spark: SparkSession,
     val fields = (vars - "_score").toSeq.sorted
     val missing = fields.filterNot(docsDf.columns.contains)
     require(missing.isEmpty, s"unbound expression variables: $missing")
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    if (q == MatchNoneQ) return Array.empty
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !hasAll) return Array.empty
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val sharded = weights.values.exists(_.salted)
-    val plan = withDeletes(Plan(q, k, None, weights, cache, m.numDocShards, sharded,
-      m.docCount, params, useWand = false))
-    val present = terms.filter(st.contains)
-    if (present.isEmpty && !hasAll) return Array.empty
-
-    val localOk = fields.length.toLong * dvBytes <= maxLocalBytes &&
-      (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes)
-    if (localOk) {
+    val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
+    if (fitsLocal(st, present, fields.length)) {
       val gets: Map[String, Long => Double] =
         fields.map(f => f -> docValuesD(f)).toMap
       // asc rides the (score desc) queue via sign flip, as searchByField
       val sign = if (asc) -1d else 1d
-      def collectShard(shard: Int, blobs: Map[String, SegRow]): Array[Hit] = {
+      val partials = onLocalPool(present, plan) { (shard, blobs) =>
         val queue = new BoundedHitQueue(k)
-        val scorer = SegmentSearcher.buildScorer(plan.query, shard, blobs, plan, 1f)
-        var d = scorer.nextDoc()
-        while (d != DocScorer.NO_MORE) {
-          val sc = if (needScore) scorer.score.toDouble else 0d
+        val it = new LiveMatches(shard, blobs, plan)
+        it.foreach { d =>
+          val sc = if (needScore) it.score.toDouble else 0d
           val bindFn = (v: String) => if (v == "_score") sc else gets(v)(d)
           queue.insert(d, sign * JsExpr.evalD(node, bindFn))
-          d = scorer.nextDoc()
         }
         queue.sortedHits
       }
-      val partials: Seq[Array[Hit]] =
-        localShards(present, plan).map { case (s, b) => collectShard(s, b) }
       TopK.merge(partials, k).map(h => (h.docId, sign * h.score))
     } else {
       val dv = dvDocsDf.select(
         col("docId") +: fields.map(f => col(f).cast("double").as(s"_e_$f")): _*)
-      val ms = matchScoresDf(q)
+      val ms = matchStream(plan, present)
       val matches = if (needScore) ms else ms.select("docId")
       val bindFn = (v: String) =>
         if (v == "_score") col("ms").cast("double") else col(s"_e_$v")
@@ -3927,7 +3775,7 @@ final class Searcher(private[search] val spark: SparkSession,
     // boost tiers), else one docId-pushdown read of exactly those docs
     val fv: Long => Array[Double] =
       if (fields.isEmpty) (_: Long) => Array.empty[Double]
-      else if (fields.length.toLong * dvBytes <= maxLocalBytes) {
+      else if (fitsLocal(dvColumns = fields.length)) {
         val gets = fields.map(docValuesD).toArray
         (d: Long) => Array.tabulate(fields.length)(i => gets(i)(d))
       } else {
@@ -3973,7 +3821,7 @@ final class Searcher(private[search] val spark: SparkSession,
     *
     * Scale shape: the local path keeps one bounded heap per key per
     * shard (the reference's perKeyQueues); the distributed path streams
-    * matches out of the groupByKey shard tasks, joins keys executor-side
+    * matches out of the shard tasks, joins keys executor-side
     * from the docs column store, and applies a per-key row_number window
     * + TakeOrderedAndProject — nothing match-count-sized reaches the
     * driver.
@@ -3981,30 +3829,52 @@ final class Searcher(private[search] val spark: SparkSession,
   def searchDiversified(q0: Query, k: Int, keyField: String,
       maxPerKey: Int): Array[Hit] = {
     require(maxPerKey >= 1, "maxPerKey must be >= 1")
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    if (q == MatchNoneQ) return Array.empty
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !hasAll) return Array.empty
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val present = terms.filter(st.contains)
-    if (present.isEmpty && !hasAll) return Array.empty
-    val sharded = weights.values.exists(_.salted)
-    // WAND off: diversity can promote docs outside the plain top-k, so
-    // score-threshold pruning is unsound here
-    val plan = withDeletes(Plan(q, k, None, weights, cache, m.numDocShards, sharded,
-      m.docCount, params, useWand = false))
-    val localOk = dvBytes <= maxLocalBytes &&
-      (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes)
-    if (localOk) diversifiedLocal(plan, present, keyField, maxPerKey, k)
-    else diversifiedDistributed(plan, present, keyField, maxPerKey, k)
+    // WAND off (planFor's default): diversity can promote docs outside the
+    // plain top-k, so score-threshold pruning is unsound here
+    val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
+    if (fitsLocal(st, present, 1)) {
+      val keyOf = docKeys(keyField)
+      val partials = onLocalPool(present, plan) { (shard, blobs) =>
+        // one bounded heap per key — the reference's perKeyQueues
+        val perKey = new java.util.HashMap[String, BoundedHitQueue]()
+        val it = new LiveMatches(shard, blobs, plan)
+        it.foreach { d =>
+          perKey.computeIfAbsent(keyOf(d), _ => new BoundedHitQueue(maxPerKey))
+            .insert(d, it.score.toDouble)
+        }
+        val out = scala.collection.mutable.ArrayBuffer.empty[Hit]
+        perKey.values.forEach(q => out ++= q.sortedHits)
+        out
+      }
+      // shards keep maxPerKey per key EACH — re-apply the within-key rank
+      // filter globally, then the plain top-k
+      val queue = new BoundedHitQueue(k)
+      partials.flatten.groupBy(h => keyOf(h.docId)).values.foreach { hs =>
+        hs.sortBy(h => (-h.score, h.docId)).take(maxPerKey)
+          .foreach(h => queue.insert(h.docId, h.score))
+      }
+      queue.sortedHits
+    } else {
+      import org.apache.spark.sql.expressions.Window
+      val dv = docsDf.select(col("docId"), col(keyField).cast("string").as("dkey"))
+      val w = Window.partitionBy("dkey")
+        .orderBy(col("score").desc, col("docId").asc)
+      matchStream(plan, present)
+        .select(col("docId"), col("ms").cast("double").as("score"))
+        .join(dv, "docId")
+        .withColumn("krnk", row_number().over(w))
+        .filter(col("krnk") <= maxPerKey)
+        .orderBy(col("score").desc, col("docId").asc)
+        .limit(k)
+        .select("docId", "score")
+        .collect()
+        .map(r => Hit(r.getLong(0), r.getDouble(1)))
+    }
   }
 
   /** String-keyed docvalues accessor (driver-local path only — gated by
-    * `dvBytes <= maxLocalBytes` like [[docValues]]). Key identity is all
-    * diversity needs, so every column type keys via its string form.
+    * `fitsLocal` like [[docValues]]). Key identity is all diversity
+    * needs, so every column type keys via its string form.
     */
   private val keyCache =
     scala.collection.concurrent.TrieMap.empty[String, Long => String]
@@ -4016,65 +3886,6 @@ final class Searcher(private[search] val spark: SparkSession,
         (if (r.isNullAt(1)) "" else r.getString(1))).toMap
       (d: Long) => m(d)
     })
-
-  private def diversifiedLocal(plan: Plan, present: Set[String],
-      keyField: String, maxPerKey: Int, k: Int): Array[Hit] = {
-    val keyOf = docKeys(keyField)
-    def collectShard(shard: Int, blobs: Map[String, SegRow]): Array[Hit] = {
-      // one bounded heap per key — the reference's perKeyQueues
-      val perKey = new java.util.HashMap[String, BoundedHitQueue]()
-      val scorer = SegmentSearcher.buildScorer(plan.query, shard, blobs,
-        plan, 1f)
-      var d = scorer.nextDoc()
-      while (d != DocScorer.NO_MORE) {
-        val s = scorer.score.toDouble
-        var q = perKey.get(keyOf(d))
-        if (q == null) {
-          q = new BoundedHitQueue(maxPerKey)
-          perKey.put(keyOf(d), q)
-        }
-        q.insert(d, s)
-        d = scorer.nextDoc()
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Hit]
-      perKey.values.forEach(q => out ++= q.sortedHits)
-      out.toArray
-    }
-    val partials: Seq[Array[Hit]] =
-      localShards(present, plan).map { case (s, b) => collectShard(s, b) }
-    // shards keep maxPerKey per key EACH — re-apply the within-key rank
-    // filter globally, then the plain top-k
-    val queue = new BoundedHitQueue(k)
-    partials.flatten.groupBy(h => keyOf(h.docId)).values.foreach { hs =>
-      hs.sortBy(h => (-h.score, h.docId)).take(maxPerKey)
-        .foreach(h => queue.insert(h.docId, h.score))
-    }
-    queue.sortedHits
-  }
-
-  private def diversifiedDistributed(plan: Plan, present: Set[String],
-      keyField: String, maxPerKey: Int, k: Int): Array[Hit] = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val matches = shardTasks(present, plan, forceAllShards = false) {
-      (s, blobs, p) =>
-        val scorer = SegmentSearcher.buildScorer(p.query, s, blobs, p, 1f)
-        Iterator.continually(scorer.nextDoc())
-          .takeWhile(_ != DocScorer.NO_MORE)
-          .map(d => (d, scorer.score.toDouble))
-    }.toDF("docId", "score")
-    val dv = docsDf.select(col("docId"), col(keyField).cast("string").as("dkey"))
-    val w = Window.partitionBy("dkey")
-      .orderBy(col("score").desc, col("docId").asc)
-    matches.join(dv, "docId")
-      .withColumn("krnk", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("krnk") <= maxPerKey)
-      .orderBy(col("score").desc, col("docId").asc)
-      .limit(k)
-      .select("docId", "score")
-      .collect()
-      .map(r => Hit(r.getLong(0), r.getDouble(1)))
-  }
 
   // ---------- sandbox docvalues queries ----------
 
@@ -4101,18 +3912,6 @@ final class Searcher(private[search] val spark: SparkSession,
       }
   }
 
-  /** Standalone docvalues query (`DocValuesNumbersQuery.java:46`,
-    * `DocValuesTermsQuery.java:92`, `DocValuesRangeQuery.java:60`):
-    * constant-score matches by stored value, ranked by the (score desc,
-    * docId asc) law — all scores equal ⇒ docId asc.
-    *
-    * Scale shape: ONE pushed-down predicate scan of the docs column
-    * store + TakeOrderedAndProject — value and docId are the only
-    * columns read, the filter reaches the parquet scan, and only k rows
-    * reach the driver. (The reference walks docvalues for EVERY doc —
-    * its own javadoc warns these are linear scans; the columnar scan is
-    * the same complexity with pruning the reference can't do.)
-    */
   /** (docId asc)-sorted docvalues pairs of the UPDATE-AWARE view with
     * SQL NULL values DROPPED — the standalone docvalues queries' local
     * twin: `dvPredCol`'s three-valued logic never matches a NULL, so
@@ -4140,23 +3939,16 @@ final class Searcher(private[search] val spark: SparkSession,
       (rows.map(_.getLong(0)), rows.map(_.getString(1)))
     })
 
-  /** Constant score, ties docId asc: walk the (docId asc)-sorted pairs,
-    * keep the first k live matches — ≡ liveDf(filter).orderBy(docId)
-    * .limit(k) on the distributed path.
+  /** Live docs matching a standalone docvalues predicate, docId asc, off
+    * the (docId asc)-sorted pairs — ≡ liveDf(filter).orderBy(docId) on
+    * the distributed path. Lazy: nothing is buffered.
     */
-  private def dvLocalWalk(pred: DvPred, field: String, k: Int,
-      constScore: Float): Array[Hit] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Hit]
-    def walk[T](ids: Array[Long], vals: Array[T], accept: T => Boolean)
-        : Unit = {
-      var i = 0
-      while (i < ids.length && out.length < k) {
-        if (accept(vals(i)) &&
-            !graft.index.Deletes.contains(deletesArr, ids(i)))
-          out += Hit(ids(i), constScore.toDouble)
-        i += 1
+  private def dvLocalMatches(pred: DvPred, field: String): Iterator[Long] = {
+    def walk[T](ids: Array[Long], vals: Array[T], accept: T => Boolean) =
+      ids.indices.iterator.collect {
+        case i if accept(vals(i)) &&
+            !graft.index.Deletes.contains(deletesArr, ids(i)) => ids(i)
       }
-    }
     pred match {
       case DvPred.Terms(vs) =>
         val (ids, vals) = dvStrPairs(field); walk(ids, vals, vs.contains)
@@ -4168,23 +3960,34 @@ final class Searcher(private[search] val spark: SparkSession,
           lo.forall(l => if (il) v >= l else v > l) &&
             up.forall(u => if (iu) v <= u else v < u))
     }
-    out.toArray
   }
 
+  /** Standalone docvalues query (`DocValuesNumbersQuery.java:46`,
+    * `DocValuesTermsQuery.java:92`, `DocValuesRangeQuery.java:60`):
+    * constant-score matches by stored value, ranked by the (score desc,
+    * docId asc) law — all scores equal ⇒ docId asc.
+    *
+    * Scale shape: ONE pushed-down predicate scan of the docs column
+    * store + TakeOrderedAndProject — value and docId are the only
+    * columns read, the filter reaches the parquet scan, and only k rows
+    * reach the driver. (The reference walks docvalues for EVERY doc —
+    * its own javadoc warns these are linear scans; the columnar scan is
+    * the same complexity with pruning the reference can't do.)
+    */
   def searchDocValues(field: String, pred: DvPred, k: Int,
       constScore: Float = 1f): Array[Hit] =
-    if (dvBytes <= maxLocalBytes) dvLocalWalk(pred, field, k, constScore)
+    if (fitsLocal(dvColumns = 1))
+      dvLocalMatches(pred, field).take(k).map(Hit(_, constScore.toDouble)).toArray
     else liveDf(dvDocsDf.filter(dvPredCol(field, pred)).select(col("docId")))
       .orderBy(col("docId").asc).limit(k)
       .collect().map(r => Hit(r.getLong(0), constScore.toDouble))
 
   /** Exact match count of a standalone docvalues predicate (the
     * TotalHitCount form): one pushed-filter count, nothing collected —
-    * or the same gated local walk, uncapped.
+    * or the same gated local walk, uncapped and unbuffered.
     */
   def countDocValues(field: String, pred: DvPred): Long =
-    if (dvBytes <= maxLocalBytes)
-      dvLocalWalk(pred, field, Int.MaxValue, 1f).length.toLong
+    if (fitsLocal(dvColumns = 1)) dvLocalMatches(pred, field).size.toLong
     else liveDf(dvDocsDf.filter(dvPredCol(field, pred)).select(col("docId")))
       .count()
 
@@ -4209,76 +4012,37 @@ final class Searcher(private[search] val spark: SparkSession,
     */
   def searchDvFiltered(q0: Query, k: Int, field: String,
       pred: DvPred): Array[Hit] = {
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    if (q == MatchNoneQ) return Array.empty
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !hasAll) return Array.empty
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val present = terms.filter(st.contains)
-    if (present.isEmpty && !hasAll) return Array.empty
-    val sharded = weights.values.exists(_.salted)
-    val plan = withDeletes(Plan(q, k, None, weights, cache, m.numDocShards,
-      sharded, m.docCount, params, useWand = false))
-    val localOk = dvBytes <= maxLocalBytes &&
-      (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes)
-    if (localOk) dvFilteredLocal(plan, present, field, pred, k)
-    else dvFilteredDistributed(plan, present, field, pred, k)
-  }
-
-  private def dvFilteredLocal(plan: Plan, present: Set[String],
-      field: String, pred: DvPred, k: Int): Array[Hit] = {
-    // string membership keys via the string accessor; numeric predicates
-    // via the long accessor — both driver-dense under the dvBytes gate
-    val accept: Long => Boolean = pred match {
-      case DvPred.Terms(vs) =>
-        val get = docKeys(field); d => vs.contains(get(d))
-      case DvPred.Numbers(vs) =>
-        val get = docValues(field); d => vs.contains(get(d))
-      case DvPred.Range(lo, up, il, iu) =>
-        val get = docValues(field)
-        d => {
-          val v = get(d)
-          lo.forall(l => if (il) v >= l else v > l) &&
-            up.forall(u => if (iu) v <= u else v < u)
-        }
-    }
-    def collectShard(shard: Int, blobs: Map[String, SegRow]): Array[Hit] = {
-      val queue = new BoundedHitQueue(k)
-      val scorer = SegmentSearcher.buildScorer(plan.query, shard, blobs,
-        plan, 1f)
-      var d = scorer.nextDoc()
-      while (d != DocScorer.NO_MORE) {
-        if (!graft.index.Deletes.contains(plan.deletes, d) && accept(d))
-          queue.insert(d, scorer.score.toDouble)
-        d = scorer.nextDoc()
+    val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
+    if (fitsLocal(st, present, 1)) {
+      // string membership keys via the string accessor; numeric predicates
+      // via the long accessor — both driver-dense under the gate
+      val accept: Long => Boolean = pred match {
+        case DvPred.Terms(vs) =>
+          val get = docKeys(field); d => vs.contains(get(d))
+        case DvPred.Numbers(vs) =>
+          val get = docValues(field); d => vs.contains(get(d))
+        case DvPred.Range(lo, up, il, iu) =>
+          val get = docValues(field)
+          d => {
+            val v = get(d)
+            lo.forall(l => if (il) v >= l else v > l) &&
+              up.forall(u => if (iu) v <= u else v < u)
+          }
       }
-      queue.sortedHits
+      TopK.merge(onLocalPool(present, plan) { (shard, blobs) =>
+        val queue = new BoundedHitQueue(k)
+        val it = new LiveMatches(shard, blobs, plan)
+        it.foreach(d => if (accept(d)) queue.insert(d, it.score.toDouble))
+        queue.sortedHits
+      }, k)
+    } else {
+      val dv = dvDocsDf.filter(dvPredCol(field, pred)).select(col("docId"))
+      matchStream(plan, present).join(dv, "docId")
+        .orderBy(col("ms").desc, col("docId").asc)
+        .limit(k)
+        .collect()
+        .map(r => Hit(r.getLong(0), r.getFloat(1).toDouble))
     }
-    val partials: Seq[Array[Hit]] =
-      localShards(present, plan).map { case (s, b) => collectShard(s, b) }
-    TopK.merge(partials, k)
-  }
-
-  private def dvFilteredDistributed(plan: Plan, present: Set[String],
-      field: String, pred: DvPred, k: Int): Array[Hit] = {
-    import spark.implicits._
-    val matches = shardTasks(present, plan, forceAllShards = false) {
-      (s, blobs, p) =>
-        val scorer = SegmentSearcher.buildScorer(p.query, s, blobs, p, 1f)
-        Iterator.continually(scorer.nextDoc())
-          .takeWhile(_ != DocScorer.NO_MORE)
-          .filterNot(graft.index.Deletes.contains(p.deletes, _))
-          .map(d => (d, scorer.score.toDouble))
-    }.toDF("docId", "score")
-    val dv = dvDocsDf.filter(dvPredCol(field, pred)).select(col("docId"))
-    matches.join(dv, "docId")
-      .orderBy(col("score").desc, col("docId").asc)
-      .limit(k)
-      .collect()
-      .map(r => Hit(r.getLong(0), r.getDouble(1)))
   }
 
   // ---------- query-time join (JoinUtil), driver-local tier ----------
@@ -4319,14 +4083,11 @@ final class Searcher(private[search] val spark: SparkSession,
   def joinScoredLocal(q0: Query, fromField: String, toField: String,
       mode: String, k: Int): Option[Array[Hit]] = {
     if (!Set("avg", "max", "min", "total").contains(mode)) return None
-    if (2L * dvBytes > maxLocalBytes) return None
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    val terms = Query.literalTerms(q)
-    val st = stats(terms)
-    val present = terms.filter(st.contains)
-    if (present.nonEmpty && estPostingBytes(st, present) > maxLocalBytes)
-      return None
+    val fits = planFor(q0, 1) match {
+      case None => fitsLocal(dvColumns = 2)
+      case Some((_, present, st)) => fitsLocal(st, present, 2)
+    }
+    if (!fits) return None
     val scores = localMatchScores(q0)
     // per-value fold state; visit order = docId asc (joinKeys is sorted)
     class FoldAcc(var sum: Float, var mn: Float, var mx: Float, var n: Int)
@@ -4369,21 +4130,6 @@ final class Searcher(private[search] val spark: SparkSession,
 
   // ---------- terms enumeration (Solr TermsComponent) ----------
 
-  /** Terms enumeration with bounds/prefix/regexp/df-range filters — the
-    * Solr TermsComponent surface (`handler/component/TermsComponent.java
-    * :60-170`): walk the term space from `lower` (or the prefix), stop
-    * past `upper` or a prefix mismatch, keep terms whose docFreq lands in
-    * [minCount, maxCount]; `sortByCount` ranks by (df desc, term asc) —
-    * the CountPair ordering (`request/SimpleFacets.java:996-1000`; BytesRef
-    * byte order ≡ String order for this engine's lowercased ASCII terms) —
-    * else index (term-asc) order. `regexp` uses matches() whole-term
-    * semantics (:104-110).
-    *
-    * Scale shape: a filter + TakeOrderedAndProject over the termstats
-    * parquet (term-range and prefix predicates push down to the scan);
-    * df is the index-global count (the ExactStatsCache analog), where
-    * the reference reports per-shard docFreq merged by the component.
-    */
   /** IndexSearcher.explain analog (`search/IndexSearcher.java:650-672`,
     * `BM25Similarity.explainScore`): the factor breakdown for one
     * (term, doc) under BM25 — (df, tf, idf, quantized length, weight,
@@ -4409,11 +4155,6 @@ final class Searcher(private[search] val spark: SparkSession,
     }
   }
 
-  /** Luke / CheckIndex index statistics (solr LukeRequestHandler
-    * surface): (docCount, distinct terms, sumTotalTermFreq) — the first
-    * and last from the committed manifest, the term count a distinct
-    * aggregate over the (narrow) term-stats store.
-    */
   /** Distinct-term count is an immutable index stat — computed once per
     * handle (driver-side when the dict is cached, one aggregate else).
     */
@@ -4424,9 +4165,29 @@ final class Searcher(private[search] val spark: SparkSession,
       termStatsDf.agg(countDistinct("term")).collect()(0).getLong(0)
   }
 
+  /** Luke / CheckIndex index statistics (solr LukeRequestHandler
+    * surface): (docCount, distinct terms, sumTotalTermFreq) — the first
+    * and last from the committed manifest, the term count a distinct
+    * aggregate over the (narrow) term-stats store.
+    */
   def indexStats(): (Long, Long, Long) =
     (m.docCount, numTermsStat, m.sumTotalTermFreq)
 
+  /** Terms enumeration with bounds/prefix/regexp/df-range filters — the
+    * Solr TermsComponent surface (`handler/component/TermsComponent.java
+    * :60-170`): walk the term space from `lower` (or the prefix), stop
+    * past `upper` or a prefix mismatch, keep terms whose docFreq lands in
+    * [minCount, maxCount]; `sortByCount` ranks by (df desc, term asc) —
+    * the CountPair ordering (`request/SimpleFacets.java:996-1000`; BytesRef
+    * byte order ≡ String order for this engine's lowercased ASCII terms) —
+    * else index (term-asc) order. `regexp` uses matches() whole-term
+    * semantics (:104-110).
+    *
+    * Scale shape: a filter + TakeOrderedAndProject over the termstats
+    * parquet (term-range and prefix predicates push down to the scan);
+    * df is the index-global count (the ExactStatsCache analog), where
+    * the reference reports per-shard docFreq merged by the component.
+    */
   def termsEnum(limit: Int = 10,
       lower: Option[String] = None, upper: Option[String] = None,
       lowerIncl: Boolean = true, upperIncl: Boolean = false,
@@ -4495,7 +4256,7 @@ final class Searcher(private[search] val spark: SparkSession,
     val pinned = elevate.distinct.filterNot(exclude)
     val elevScores: Map[Long, Float] =
       if (pinned.isEmpty) Map.empty
-      else if (queryFitsLocal(q0)) {
+      else if (fitsLocal(innerQueries = Seq(q0))) {
         // local tier: same scorer trees as the shard tasks, zero jobs
         val msc = localMatchScores(q0)
         pinned.flatMap(d => msc.get(d).map(d -> _)).toMap
@@ -4517,34 +4278,16 @@ final class Searcher(private[search] val spark: SparkSession,
   private val scaleStatsCache =
     scala.collection.concurrent.TrieMap.empty[ScaleV, (Float, Float)]
 
-  /** All matches of `q` with their BM25 scores as a DataFrame
-    * (docId, ms float) — the streaming form of search(): match streams
-    * flow out of the shard tasks (never centralizing), exactly the
-    * searchByFieldDistributed shape. Used as the relevance input to
-    * function-query arithmetic (QueryV joins, BoostedQuery multiply).
+  /** All live matches of `q` with their BM25 scores as a DataFrame
+    * (docId, ms float) — the streaming form of search() ([[matchStream]]).
+    * Used as the relevance input to function-query arithmetic (QueryV
+    * joins) and the elevated ids' scores beyond the gate.
     */
-  private[search] def matchScoresDf(q0: Query): DataFrame = {
-    import spark.implicits._
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    val emptyDf = spark.emptyDataset[(Long, Float)].toDF("docId", "ms")
-    if (q == MatchNoneQ) return emptyDf
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !hasAll) return emptyDf
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val sharded = weights.values.exists(_.salted)
-    val plan = withDeletes(Plan(q, 1, None, weights, cache, m.numDocShards, sharded,
-      m.docCount, params, useWand = false))
-    val present = terms.filter(st.contains)
-    if (present.isEmpty && !hasAll) return emptyDf
-    shardTasks(present, plan, forceAllShards = false) { (s, blobs, p) =>
-      val scorer = SegmentSearcher.buildScorer(p.query, s, blobs, p, 1f)
-      Iterator.continually(scorer.nextDoc())
-        .takeWhile(_ != DocScorer.NO_MORE)
-        .map(d => (d, scorer.score))
-    }.toDF("docId", "ms")
+  private[search] def matchScoresDf(q0: Query): DataFrame = planFor(q0, 1) match {
+    case None =>
+      import spark.implicits._
+      spark.emptyDataset[(Long, Float)].toDF("docId", "ms")
+    case Some((plan, present, _)) => matchStream(plan, present)
   }
 
   /** The value source evaluated over the whole corpus: (docId, v float).
@@ -4629,15 +4372,16 @@ final class Searcher(private[search] val spark: SparkSession,
     ids
   }
 
-  /** Do a query's postings fit the driver-local regime? (The inner-query
-    * gate shared by the function-query local tiers.)
+  /** Docvalue columns a value-source local tier loads: each distinct
+    * field, and the norm column when a source reads it.
     */
-  private def queryFitsLocal(iq: Query): Boolean = {
-    val its = Query.literalTerms(iq)
-    val ist = stats(its)
-    val pr = its.filter(ist.contains)
-    pr.isEmpty || estPostingBytes(ist, pr) <= maxLocalBytes
-  }
+  private def vsColumns(vss: Seq[ValueSrc]): Int =
+    vss.flatMap(ValueSources.fieldsOf).distinct.size +
+      (if (vss.exists(ValueSources.needsNorm)) 1 else 0)
+
+  /** The QueryV subqueries a value-source local tier walks. */
+  private def vsQueries(vss: Seq[ValueSrc]): Seq[Query] =
+    vss.flatMap(vs => ValueSources.queriesOf(vs).map(_.q))
 
   /** FunctionQuery search (`FunctionQuery.java:46-120`): every doc
     * matches, score = float value, NaN/-Inf → -Float.MAX_VALUE
@@ -4653,8 +4397,9 @@ final class Searcher(private[search] val spark: SparkSession,
     */
   def searchFunction(vs: ValueSrc, k: Int): Array[Hit] = {
     import org.apache.spark.sql.functions.{col, lit, when, isnan}
-    val innerQs = ValueSources.queriesOf(vs).map(_.q)
-    if (dvBytes <= maxLocalBytes && innerQs.forall(queryFitsLocal)) {
+    // the local tier walks every docId (`localDocIds`): one more column
+    if (fitsLocal(dvColumns = 1 + vsColumns(Seq(vs)),
+        innerQueries = vsQueries(Seq(vs)))) {
       val fval = ValueSources.evalLocal(resolveStatVs(vs), localVsCtx())
       val queue = new BoundedHitQueue(k)
       val ids = localDocIds
@@ -4692,8 +4437,9 @@ final class Searcher(private[search] val spark: SparkSession,
       inclLower: Boolean = true, inclUpper: Boolean = true,
       k: Int = 10): Array[Hit] = {
     import org.apache.spark.sql.functions.{col, lit, when, isnan}
-    val innerQs = ValueSources.queriesOf(vs).map(_.q)
-    if (dvBytes <= maxLocalBytes && innerQs.forall(queryFitsLocal)) {
+    // the local tier walks every docId (`localDocIds`): one more column
+    if (fitsLocal(dvColumns = 1 + vsColumns(Seq(vs)),
+        innerQueries = vsQueries(Seq(vs)))) {
       // local tier: same match predicate as the Column filter (a NaN
       // value fails every comparison, in Scala as in SQL)
       val fval = ValueSources.evalLocal(resolveStatVs(vs), localVsCtx())
@@ -4744,50 +4490,20 @@ final class Searcher(private[search] val spark: SparkSession,
     */
   def searchBoosted(q0: Query, vs: ValueSrc, k: Int,
       additive: Boolean = false): Array[Hit] = {
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    if (q == MatchNoneQ) return Array.empty
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !hasAll) return Array.empty
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val sharded = weights.values.exists(_.salted)
-    val plan = withDeletes(Plan(q, k, None, weights, cache, m.numDocShards, sharded,
-      m.docCount, params, useWand = false))
-    val present = terms.filter(st.contains)
-    if (present.isEmpty && !hasAll) return Array.empty
-
-    val innerQs = ValueSources.queriesOf(vs).map(_.q)
-    def fitsLocal(iq: Query): Boolean = {
-      val its = Query.literalTerms(iq)
-      val ist = stats(its)
-      val pr = its.filter(ist.contains)
-      pr.isEmpty || estPostingBytes(ist, pr) <= maxLocalBytes
-    }
-    val localOk = dvBytes <= maxLocalBytes &&
-      (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes) &&
-      innerQs.forall(fitsLocal)
-    if (localOk) {
+    val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
+    if (fitsLocal(st, present, vsColumns(Seq(vs)), vsQueries(Seq(vs)))) {
       val fval = ValueSources.evalLocal(resolveStatVs(vs), localVsCtx())
-      def collectShard(shard: Int, blobs: Map[String, SegRow]): Array[Hit] = {
+      TopK.merge(onLocalPool(present, plan) { (shard, blobs) =>
         val queue = new BoundedHitQueue(k)
-        val scorer = SegmentSearcher.buildScorer(plan.query, shard, blobs, plan, 1f)
-        var d = scorer.nextDoc()
-        while (d != DocScorer.NO_MORE) {
-          if (!graft.index.Deletes.contains(plan.deletes, d)) queue.insert(d,
-            (if (additive) scorer.score + fval(d)
-             else scorer.score * fval(d)).toDouble)
-          d = scorer.nextDoc()
+        val it = new LiveMatches(shard, blobs, plan)
+        it.foreach { d =>
+          queue.insert(d, (if (additive) it.score + fval(d)
+            else it.score * fval(d)).toDouble)
         }
         queue.sortedHits
-      }
-      val partials: Seq[Array[Hit]] =
-        localShards(present, plan).map { case (s, b) => collectShard(s, b) }
-      TopK.merge(partials, k)
+      }, k)
     } else {
-      import org.apache.spark.sql.functions.col
-      matchScoresDf(q)
+      matchStream(plan, present)
         .join(functionDf(vs), "docId")
         .select(col("docId"),
           (if (additive) col("ms") + col("v") else col("ms") * col("v"))
@@ -4813,55 +4529,24 @@ final class Searcher(private[search] val spark: SparkSession,
     */
   def searchCustomScore(q0: Query, valSrcs: Seq[ValueSrc], boost: Float,
       k: Int): Array[Hit] = {
-    var q = Query.rewrite(q0)
-    q = Query.rewrite(expandMultiTerm(q))
-    if (q == MatchNoneQ) return Array.empty
-    val terms = Query.literalTerms(q)
-    val hasAll = Query.containsMatchAll(q)
-    if (terms.isEmpty && !hasAll) return Array.empty
-    val st = stats(terms)
-    val weights = mkWeights(st)
-    val sharded = weights.values.exists(_.salted)
-    val plan = withDeletes(Plan(q, k, None, weights, cache, m.numDocShards, sharded,
-      m.docCount, params, useWand = false))
-    val present = terms.filter(st.contains)
-    if (present.isEmpty && !hasAll) return Array.empty
-
-    val innerQs = valSrcs.flatMap(vs => ValueSources.queriesOf(vs).map(_.q))
-    def fitsLocal(iq: Query): Boolean = {
-      val its = Query.literalTerms(iq)
-      val ist = stats(its)
-      val pr = its.filter(ist.contains)
-      pr.isEmpty || estPostingBytes(ist, pr) <= maxLocalBytes
-    }
-    val localOk = valSrcs.length.toLong * dvBytes <= maxLocalBytes &&
-      (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes) &&
-      innerQs.forall(fitsLocal)
-    if (localOk) {
+    val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
+    if (fitsLocal(st, present, vsColumns(valSrcs), vsQueries(valSrcs))) {
       val fvals = valSrcs.map(vs =>
         ValueSources.evalLocal(resolveStatVs(vs), localVsCtx()))
-      def collectShard(shard: Int, blobs: Map[String, SegRow]): Array[Hit] = {
+      TopK.merge(onLocalPool(present, plan) { (shard, blobs) =>
         val queue = new BoundedHitQueue(k)
-        val scorer = SegmentSearcher.buildScorer(plan.query, shard, blobs, plan, 1f)
-        var d = scorer.nextDoc()
-        while (d != DocScorer.NO_MORE) {
-          if (!graft.index.Deletes.contains(plan.deletes, d)) {
-            var s = scorer.score
-            var i = 0
-            while (i < fvals.length) { s *= fvals(i)(d); i += 1 }
-            queue.insert(d, (boost * s).toDouble)
-          }
-          d = scorer.nextDoc()
+        val it = new LiveMatches(shard, blobs, plan)
+        it.foreach { d =>
+          var s = it.score
+          var i = 0
+          while (i < fvals.length) { s *= fvals(i)(d); i += 1 }
+          queue.insert(d, (boost * s).toDouble)
         }
         queue.sortedHits
-      }
-      val partials: Seq[Array[Hit]] =
-        localShards(present, plan).map { case (s, b) => collectShard(s, b) }
-      TopK.merge(partials, k)
+      }, k)
     } else {
-      import org.apache.spark.sql.functions.{col, lit}
       import org.apache.spark.sql.types.FloatType
-      var df = matchScoresDf(q)
+      var df = matchStream(plan, present)
       // one join per source; each fold step float-casts so the Column
       // path replays the scorer's sequential float multiplies exactly
       var sCol = col("ms")
@@ -4898,27 +4583,10 @@ final class Searcher(private[search] val spark: SparkSession,
       q0: Query): scala.collection.mutable.LongMap[Float] =
     Option(localScoresCache.get(q0)).getOrElse {
       val out = new scala.collection.mutable.LongMap[Float]()
-      var q = Query.rewrite(q0)
-      q = Query.rewrite(expandMultiTerm(q))
-      val terms = Query.literalTerms(q)
-      val hasAll = Query.containsMatchAll(q)
-      if (q != MatchNoneQ && (terms.nonEmpty || hasAll)) {
-        val st = stats(terms)
-        val weights = mkWeights(st)
-        val sharded = weights.values.exists(_.salted)
-        val plan = withDeletes(Plan(q, 1, None, weights, cache,
-          m.numDocShards, sharded, m.docCount, params, useWand = false))
-        val present = terms.filter(st.contains)
-        if (present.nonEmpty || hasAll) {
-          def walk(shard: Int, blobs: Map[String, SegRow]): Unit = {
-            val scorer = SegmentSearcher.buildScorer(plan.query, shard,
-              blobs, plan, 1f)
-            var d = scorer.nextDoc()
-            while (d != DocScorer.NO_MORE) {
-              out(d) = scorer.score; d = scorer.nextDoc()
-            }
-          }
-          localShards(present, plan).foreach { case (s, b) => walk(s, b) }
+      planFor(q0, 1).foreach { case (plan, present, _) =>
+        localShards(present, plan).foreach { case (s, b) =>
+          val it = new LiveMatches(s, b, plan)
+          it.foreach(d => out(d) = it.score)
         }
       }
       localScoresCache.put(q0, out) // walked outside the map's lock
@@ -5023,6 +4691,6 @@ final class Searcher(private[search] val spark: SparkSession,
   def close(): Unit = {
     localScoresCache.clear()
     var p = pinned.poll()
-    while (p != null) { releasePin(p._1, p._2); p = pinned.poll() }
+    while (p != null) { graft.core.CachePins.release(p); p = pinned.poll() }
   }
 }

@@ -13,7 +13,8 @@ import graft.search._
   * the terms' posting rows under a byte cap; hits stay bit-identical to the
   * pruned-read (`cacheSegments = false`) and distributed
   * (`maxLocalBytes = 0`) Searchers, and a bucket scan runs only the cached
-  * partitions that hold its bucket.
+  * partitions that hold its bucket. Also the pinning of shared tables and
+  * frames, and the tier gate's docvalue-column count.
   */
 class ColdLookupSpec extends AnyFunSuite {
 
@@ -258,5 +259,46 @@ class ColdLookupSpec extends AnyFunSuite {
   test("a Searcher opened and closed with no query starts no Spark job") {
     val (n, _) = jobsOf { new Searcher(spark, plain).close() }
     assert(n === 0)
+  }
+
+  test("two logical indexes over one input share its pinned frames until both release") {
+    import spark.implicits._
+    val df = Corpus.generate(60, 71L)
+      .map(f => (f.repo, f.path, f.commit, f.lang, f.content))
+      .toDF("repo", "path", "commit", "lang", "content")
+    def build() = IndexBuilder.buildLogical(df, "content", None,
+      Seq("repo", "path", "commit"), cfg)
+    /** Whether any part of `f`'s plan is served from Spark's cache. */
+    def readsCache(f: org.apache.spark.sql.DataFrame): Boolean =
+      f.select("*").queryExecution.withCachedData.find(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]
+      ).nonEmpty
+    val (a, b) = (build(), build())
+    assert(b.cached.nonEmpty && b.cached.forall(TestSpark.cached))
+    a.unpersistCached()
+    a.unpersistCached() // a second release of the same handle is a no-op
+    assert(b.cached.forall(TestSpark.cached))
+    b.unpersistCached()
+    // nothing either index was built from stays cached, the docId
+    // ranging pass (one plan, shared by both builds) included
+    assert(!readsCache(a.docs) && !readsCache(b.docs))
+  }
+
+  test("the tier gate counts every docvalue column a sort loads") {
+    // between one and two columns' worth of docvalues (16 bytes a doc):
+    // a one-field sort stays driver-local, a two-field sort is distributed
+    val budget = plain.manifest.docCount * 16L * 3 / 2
+    val terms = termDfs(plain)
+    val q = TermQ(terms(terms.size / 4)._1)
+    val two = Seq("length" -> true, "normByte" -> false)
+    val s = new Searcher(spark, plain, maxLocalBytes = budget)
+    val ref = new Searcher(spark, plain)
+    def rowsOf(r: Array[(Long, Array[Long])]) = r.toSeq.map(x => (x._1, x._2.toSeq))
+    s.searchByField(q, 10, "length"); s.searchBySort(q, 10, two) // warm-up
+    assert(jobsOf(s.searchByField(q, 10, "length"))._1 === 0)
+    var got = Array.empty[(Long, Array[Long])]
+    assert(jobsOf { got = s.searchBySort(q, 10, two) }._1 > 0)
+    assert(rowsOf(got) === rowsOf(ref.searchBySort(q, 10, two)))
+    s.close(); ref.close()
   }
 }

@@ -85,6 +85,44 @@ class DeleteSpec extends AnyFunSuite {
     assert(dist.count(TermQ("def")) === local.count(TermQ("def")))
   }
 
+  test("every match-walking entry point masks tombstones, on both tiers") {
+    val del = deleted.toSet
+    val ix = SegmentSearcher.load(s"$tmp/live")
+    val q = TermQ("def")
+    val k = numbered.size // every match, so a leaked tombstone would show
+    def rows(hs: Array[Hit]): Seq[(Long, Any)] = hs.toSeq.map(h => (h.docId, h.score))
+    val entryPoints: Seq[(String, Searcher => Seq[(Long, Any)])] = Seq(
+      "search" -> (s => rows(s.search(q, k))),
+      "searchWithCount" -> (s => rows(s.searchWithCount(q, k)._1)),
+      "searchBySort" -> (s => s.searchBySort(q, k,
+        Seq("length" -> true, "normByte" -> false)).toSeq
+        .map { case (d, vs) => (d, vs.toSeq) }),
+      "searchByField" -> (s => s.searchByField(q, k, "length").toSeq),
+      "searchByExpr" -> (s => s.searchByExpr(q, k, "length").toSeq),
+      "searchDiversified" -> (s => rows(s.searchDiversified(q, k, "repo", 1000))),
+      "searchDvFiltered" -> (s => rows(s.searchDvFiltered(q, k, "length",
+        DvPred.Range(Some(0L), None, true, true)))),
+      "searchBoosted" -> (s => rows(s.searchBoosted(q, FieldV("length"), k))),
+      "searchCustomScore" -> (s =>
+        rows(s.searchCustomScore(q, Seq(FieldV("length")), 2f, k))))
+    val local = new Searcher(spark, ix)
+    val dist = new Searcher(spark, ix, maxLocalBytes = 0L)
+    val live = local.count(q)
+    assert(live === baselineCount - del.size)
+    assert(dist.count(q) === live)
+    assert(local.searchWithCount(q, 5)._2 === live)
+    assert(dist.searchWithCount(q, 5)._2 === live)
+    assert(!local.localMatchScores(q).keys.exists(del))
+    for ((name, run) <- entryPoints; s <- Seq(local, dist)) {
+      val got = run(s)
+      val tier = if (s eq dist) "maxLocalBytes = 0" else "default"
+      assert(got.size === live, s"$name ($tier)")
+      assert(!got.exists(r => del(r._1)), s"$name ($tier) returned a deleted id")
+    }
+    for ((name, run) <- entryPoints) assert(run(dist) === run(local), name)
+    local.close(); dist.close()
+  }
+
   test("deleteByTerm tombstones exactly the term's posting list") {
     build(numbered, s"$tmp/bt")
     val before = hits(s"$tmp/bt", TermQ("merge"), 300)
