@@ -389,23 +389,14 @@ object SearchGate {
       hitsDf(spark, hits)
     }
 
-  /** JoinUtil gate runner: a join needs EVERY match, not top-k. Under
-    * the searcher's `maxLocalBytes` gate the full match set and both
-    * join-key columns are driver-resident (joinScoredLocal — the same
-    * fold laws, zero jobs warm); beyond it the full scored match set
-    * comes from the DataFrame path, folded + broadcast by ops.Join.
+  /** JoinUtil gate runner: a join needs EVERY match, not top-k.
+    * `Searcher.joinScored` folds on the tier its gate picks — the full
+    * match set and the join-key column driver-resident, or the
+    * distributed fold + broadcast of ops.Join — under the same laws.
     */
   private def joinGate(q: Query, mode: String): (SparkSession, String) => DataFrame =
     (spark, sfDir) =>
-      searcher(spark, sfDir).joinScoredLocal(q, "source", "source", mode, K)
-        match {
-          case Some(hits) => hitsDf(spark, hits)
-          case None =>
-            val ix = logical(spark, sfDir)
-            val docs = docsDf(spark, sfDir)
-            val sc = DataFrameSearcher.scores(ix, q)
-            graft.ops.Join.joinScored(docs, sc, "source", "source", mode, K)
-        }
+      hitsDf(spark, searcher(spark, sfDir).joinScored(q, "source", "source", mode, K))
 
   // ---- the reference query set ----
 

@@ -306,9 +306,6 @@ object SegmentSearcher {
       after: Option[(Double, Long)] = None, useWand: Boolean = true): Array[Hit] =
     new Searcher(spark, ix, cacheSegments = false).search(q0, k, after, useWand)
 
-  /** Entry cap of a Searcher's `localMatchScores` memo. */
-  val LocalScoresEntries = 32
-
   /** Shared daemon pool for driver-local shard execution — the
     * IndexSearcher leaf-slice executor analog (`IndexSearcher.java:605-615`).
     * Size defaults to the host's processors; `graft.search.localPoolSize`
@@ -1220,7 +1217,9 @@ object SegmentSearcher {
 /** Reusable query handle over one index: pins the segments / termstats
   * tables in memory (`cacheSegments`, on first use, each by one job that
   * also maps which buckets each cached partition holds, over a scan
-  * planned once per Searcher), memoizes term stats, and picks the
+  * planned once per Searcher), memoizes term stats, keeps term blobs,
+  * docs-table columns, suggest snapshots and local match scores in one
+  * LRU of `2 × maxLocalBytes` heap bytes ([[ByteLru]]), and picks the
   * execution mode per query:
   *
   *  - COLD TERMS cost one Spark job with no per-query Catalyst planning:
@@ -1339,29 +1338,16 @@ final class Searcher(private[search] val spark: SparkSession,
   private val statsCache =
     scala.collection.concurrent.TrieMap.empty[String, Option[(Long, Long)]]
 
-  /** Driver-side posting-blob cache (the LRUQueryCache / OS-page-cache
-    * analog, `search/LRUQueryCache.java:94`): term → its SegRows.
-    * Lock-free reads (the hot path must not serialize concurrent
-    * queries); coarse whole-cache reset when the byte budget overflows —
-    * a simple, contention-free stand-in for LRU.
+  /** The driver-side cache (the LRUQueryCache analog,
+    * `search/LRUQueryCache.java:94`): a term's SegRows (charged every blob
+    * byte), docs-table columns, suggest snapshots and local match scores,
+    * least recently used evicted first; emptied by `close()`.
     */
-  private object blobCache {
-    private val map =
-      scala.collection.concurrent.TrieMap.empty[String, Array[SegRow]]
-    private val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    def getSync(t: String): Option[Array[SegRow]] = map.get(t)
-    def putSized(t: String, rows: Array[SegRow]): Unit = {
-      val sz = rows.map(rowBytes).sum
-      if (bytes.addAndGet(sz) > maxLocalBytes * 2) {
-        map.clear()
-        bytes.set(sz)
-      }
-      map.put(t, rows)
-      ()
-    }
-    def size: Int = map.size
-  }
-  private[graft] def blobCacheSize: Int = blobCache.size
+  private val lru = new ByteLru(2 * maxLocalBytes)
+  private[graft] def cacheStats: ByteLru.Stats = lru.stats
+
+  private def putBlob(t: String, rows: Array[SegRow]): Unit =
+    lru.put(BlobKey(t), rows, rows.map(rowBytes).sum)
 
   /** Per-term scoring weights from raw (df, ttf) stats. */
   private def mkWeights(st: Map[String, (Long, Long)]): Map[String, TermWeightInfo] =
@@ -1555,7 +1541,7 @@ final class Searcher(private[search] val spark: SparkSession,
       val rows = got.collect { case Right(r) => r }.groupMap(_._1)(_._2)
       st.keys.foreach { t =>
         val rs = rows.getOrElse(t, Array.empty[Option[SegRow]])
-        if (rs.forall(_.isDefined)) blobCache.putSized(t, rs.flatten.toArray)
+        if (rs.forall(_.isDefined)) putBlob(t, rs.flatten.toArray)
       }
     }
     st
@@ -2098,21 +2084,60 @@ final class Searcher(private[search] val spark: SparkSession,
   }
 
   /** The tier gate: does the local path fit `maxLocalBytes`? It pulls the
-    * present terms' posting blobs, `dvColumns` docvalue columns (each
-    * ~`dvBytes`) and the postings of every inner query (a value source's
-    * QueryV) to the driver. The one reader of [[estPostingBytes]] and of
-    * `maxLocalBytes` for the query entry points.
+    * present terms' posting blobs, the docs-table `columns` (16 bytes a
+    * doc each, plus the measured bytes of a string or binary column),
+    * anything else it `builds` and the postings of every inner query (a
+    * value source's QueryV) to the driver. The one reader of
+    * [[estPostingBytes]] and of `maxLocalBytes` for the local tiers.
     */
   private def fitsLocal(st: Map[String, (Long, Long)] = Map.empty,
-      present: Set[String] = Set.empty, dvColumns: Int = 0,
-      innerQueries: Seq[Query] = Nil): Boolean =
-    dvColumns.toLong * dvBytes <= maxLocalBytes &&
+      present: Set[String] = Set.empty, columns: Seq[String] = Nil,
+      innerQueries: Seq[Query] = Nil, builds: Long = 0L): Boolean = {
+    val cols = columns.distinct
+    val fixed = 16L * m.docCount * cols.size + builds
+    fixed <= maxLocalBytes &&
       (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes) &&
       innerQueries.forall { iq =>
         val its = Query.literalTerms(iq)
         val ist = stats(its)
         fitsLocal(ist, its.filter(ist.contains))
-      }
+      } &&
+      fixed + measuredBytes(cols) <= maxLocalBytes
+  }
+
+  /** Summed value bytes of the string and binary columns among `fields`:
+    * ONE aggregate over those not measured yet, each result memoized in
+    * the cache at 0 bytes, so a refused column is never measured twice.
+    */
+  private def measuredBytes(fields: Seq[String]): Long = {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val varying = if (fields.isEmpty) Nil else {
+      val schema = dvDocsDf.schema
+      fields.filter(f => Seq(StringType, BinaryType).contains(schema(f).dataType))
+    }
+    val known = varying.map(f => f -> lru.get[Long](SizeKey(f)))
+    val missing = known.collect { case (f, None) => f }
+    val measured = if (missing.isEmpty) Map.empty[String, Long] else {
+      val sums = missing.map(f => sum(length(col(f)).cast("long")))
+      val r = dvDocsDf.agg(sums.head, sums.tail: _*).head()
+      missing.indices.map(i =>
+        missing(i) -> (if (r.isNullAt(i)) 0L else r.getLong(i))).toMap
+    }
+    measured.foreach { case (f, b) => lru.put(SizeKey(f), b, 0L) }
+    known.map { case (f, b) => b.getOrElse(measured(f)) }.sum
+  }
+
+  /** The one docs-table column loader: `field` of the update-aware view
+    * ([[dvDocsDf]]) in ONE docId-ascending collect, kept in the cache
+    * and charged its heap bytes. Callers gate it through [[fitsLocal]].
+    */
+  private def column(field: String): DocColumn =
+    lru.getOrLoad(ColumnKey(field)) {
+      val df = dvDocsDf.select(col("docId"), col(field))
+      val c = DocColumn(field, df.schema(1).dataType, df.collect(),
+        spark.sessionState.conf.sessionLocalTimeZone)
+      (c, c.bytes)
+    }
 
   /** `f` per shard group on the tier the gate picks: the driver pool when
     * the postings fit, else ONE [[shardTasks]] job, whose tasks run `f`
@@ -2138,16 +2163,16 @@ final class Searcher(private[search] val spark: SparkSession,
     terms.map(t => IndexBuilder.bucketOf(t, m.numBuckets))
 
   /** The query terms' blobs, through the driver cache. The rows are
-    * returned from this call's own reads: a put may reset the cache.
+    * returned from this call's own reads: a put may evict.
     */
   private[search] def fetchRows(present: Set[String]): Array[SegRow] = {
-    val cached = present.toSeq.map(t => t -> blobCache.getSync(t))
+    val cached = present.toSeq.map(t => t -> lru.get[Array[SegRow]](BlobKey(t)))
     val missing = cached.collect { case (t, None) => t }.toSet
     val fetched =
       if (missing.isEmpty) Map.empty[String, Array[SegRow]]
       else termRows(missing).collect().groupBy(_.term)
     missing.foreach(t =>
-      blobCache.putSized(t, fetched.getOrElse(t, Array.empty[SegRow])))
+      putBlob(t, fetched.getOrElse(t, Array.empty[SegRow])))
     cached.flatMap { case (t, c) =>
       c.getOrElse(fetched.getOrElse(t, Array.empty[SegRow]))
     }.toArray
@@ -2356,17 +2381,9 @@ final class Searcher(private[search] val spark: SparkSession,
     */
   def moreLikeThis(docId: Long, contentCol: String = "content",
       maxQueryTerms: Int = 25, minTf: Int = 2, minDocFreq: Int = 5): Query = {
-    val content = localRowStore(contentCol) match {
-      case Some(rs) =>
-        val v = rs.getOrNull(docId)
-        require(v != null, s"no doc $docId")
-        v._1
-      case None =>
-        val rows = docsDf
-          .filter(col("docId") === docId).select(contentCol).collect()
-        require(rows.nonEmpty, s"no doc $docId")
-        rows(0).getString(0)
-    }
+    val stored = storedDocs(Seq(docId), contentCol)
+    require(stored.contains(docId), s"no doc $docId")
+    val content = stored(docId)._1
     val toks = IndexBuilder.tokenizerFn(m.tokenizer)(content)
     val tf = toks.groupBy(identity).map { case (t, xs) => t -> xs.length }
     val df = stats(tf.keySet)
@@ -2383,49 +2400,46 @@ final class Searcher(private[search] val spark: SparkSession,
 
   // ---------- highlighting (positions + row store) ----------
 
-  /** Driver-resident stored-fields tier — the row store a lookup node
-    * serves page-sized fetches from RAM/page cache: docId → (content,
-    * tokenBounds|null), loaded once per content column when ~3× the
-    * stored chars fit `maxLocalBytes` (same regime as every other local
-    * tier). Raw column values (nulls preserved) so callers replay their
-    * pruned-collect semantics row for row; None beyond the gate keeps
-    * the pushed-filter scans.
+  /** Stored (content, tokenBounds|null) of page-sized `ids` — the row
+    * store a lookup node serves fetches from RAM/page cache: off the
+    * cached content and token-bounds columns when they fit
+    * [[fitsLocal]], else ONE pushed-filter read of exactly those docs.
+    * Raw values (a NULL content reads null); a docId the table lacks is
+    * absent.
     */
-  private val rowStoreCache = scala.collection.concurrent.TrieMap
-    .empty[String, Option[scala.collection.mutable.LongMap[(String, Array[Byte])]]]
-  private[search] def localRowStore(contentCol: String)
-      : Option[scala.collection.mutable.LongMap[(String, Array[Byte])]] =
-    rowStoreCache.getOrElseUpdate(contentCol, {
-      val hasBounds = docsDf.columns.contains("tokenBounds")
-      val sz = docsDf.agg(
-        sum(length(col(contentCol)).cast("long")),
-        (if (hasBounds) sum(length(col("tokenBounds")).cast("long"))
-         else sum(lit(0L)))).collect()(0)
-      val bytes = (if (sz.isNullAt(0)) 0L else sz.getLong(0)) +
-        (if (sz.isNullAt(1)) 0L else sz.getLong(1))
-      if (3L * bytes > maxLocalBytes) None
-      else {
-        val cols = Seq(col("docId"), col(contentCol).cast("string")) ++
-          (if (hasBounds) Seq(col("tokenBounds")) else Nil)
-        val rows = docsDf.select(cols: _*).collect()
-        val store = new scala.collection.mutable
-          .LongMap[(String, Array[Byte])](rows.length)
-        rows.foreach { r =>
-          store(r.getLong(0)) = (
-            if (r.isNullAt(1)) null else r.getString(1),
-            if (hasBounds && !r.isNullAt(2)) r.getAs[Array[Byte]](2)
-            else null)
-        }
-        Some(store)
-      }
-    })
+  private def storedDocs(ids: Seq[Long],
+      contentCol: String): Map[Long, (String, Array[Byte])] = {
+    val cols = contentCol +:
+      (if (docsDf.columns.contains("tokenBounds")) Seq("tokenBounds") else Nil)
+    if (fitsLocal(columns = cols)) {
+      val text = column(contentCol)
+      val bounds = if (cols.size > 1) Some(column("tokenBounds")) else None
+      ids.flatMap { d =>
+        val i = text.at(d)
+        if (i < 0) None
+        else Some(d -> ((text.string(i),
+          bounds.map(b => b.binary(b.row(d))).orNull)))
+      }.toMap
+    } else
+      docsDf.filter(col("docId").isin(ids: _*))
+        .select(col("docId") +: cols.map(col): _*).collect()
+        .map(r => r.getLong(0) -> ((r.getString(1),
+          if (cols.size > 1) r.getAs[Array[Byte]](2) else null)))
+        .toMap
+  }
 
-  /** Gated driver lookup of a docvalues column in string form (the
-    * [[docKeys]] accessor: NULL reads as "") — None beyond
-    * `maxLocalBytes`, callers run their pruned distributed read.
+  /** Gated driver lookup of a docvalues column in string form (NULL
+    * reads as "") — None beyond `maxLocalBytes`, callers run their
+    * pruned distributed read.
     */
   def docKeysLocal(field: String): Option[Long => String] =
-    if (fitsLocal(dvColumns = 1)) Some(docKeys(field)) else None
+    if (fitsLocal(columns = Seq(field))) Some(keysOf(field)) else None
+
+  /** The string view of a gated column by docId, NULL read as "". */
+  private def keysOf(field: String): Long => String = {
+    val c = column(field)
+    d => { val v = c.string(c.row(d)); if (v == null) "" else v }
+  }
 
   /** Deterministic snippet for each hit — the highlighter surface
     * (`lucene/highlighter/src/java/org/apache/lucene/search/uhighlight/
@@ -2451,34 +2465,15 @@ final class Searcher(private[search] val spark: SparkSession,
           .mkString(" ")
       }
     }
-    localRowStore(contentCol) match {
-      case Some(rs) if useOffsets =>
-        ids.iterator.flatMap { id =>
-          Option(rs.getOrNull(id)).map { case (c, b) =>
-            id -> SegmentSearcher.snippetFromBounds(c, b, terms, before,
-              window)
-          }
-        }.toMap
-      case Some(rs) =>
-        val tok = IndexBuilder.tokenizerFn(m.tokenizer)
-        ids.iterator.flatMap { id =>
-          Option(rs.getOrNull(id)).map { case (c, _) =>
-            id -> snippetOf(tok(c))
-          }
-        }.toMap
-      case None if useOffsets =>
-        // exact-offset path: decode the stored token bounds, no re-tokenize
-        docsDf.filter(col("docId").isin(ids: _*))
-          .select(col("docId"), col(contentCol), col("tokenBounds")).collect()
-          .map(r => r.getLong(0) -> SegmentSearcher.snippetFromBounds(
-            r.getString(1), r.getAs[Array[Byte]](2), terms, before, window))
-          .toMap
-      case None =>
-        val tok = IndexBuilder.tokenizerFn(m.tokenizer)
-        docsDf.filter(col("docId").isin(ids: _*))
-          .select(col("docId"), col(contentCol)).collect()
-          .map(r => r.getLong(0) -> snippetOf(tok(r.getString(1))))
-          .toMap
+    val stored = storedDocs(ids, contentCol)
+    if (useOffsets)
+      // exact-offset path: decode the stored token bounds, no re-tokenize
+      stored.map { case (id, (c, b)) =>
+        id -> SegmentSearcher.snippetFromBounds(c, b, terms, before, window)
+      }
+    else {
+      val tok = IndexBuilder.tokenizerFn(m.tokenizer)
+      stored.map { case (id, (c, _)) => id -> snippetOf(tok(c)) }
     }
   }
 
@@ -2558,27 +2553,10 @@ final class Searcher(private[search] val spark: SparkSession,
     if (hits.isEmpty) return Map.empty
     val w = fvhWeights(terms)
     val ids = hits.map(_.docId).toSeq
-    localRowStore(contentCol) match {
-      case Some(rs) =>
-        ids.iterator.flatMap { id =>
-          Option(rs.getOrNull(id)).map { case (text, blob0) =>
-            val blob = if (useOffsets) blob0 else null
-            id -> Fvh.highlightDoc(text, fvhBounds(text, blob), w,
-              fragCharSize, maxNumFragments)
-          }
-        }.toMap
-      case None =>
-        val cols =
-          if (useOffsets)
-            Seq(col("docId"), col(contentCol), col("tokenBounds"))
-          else Seq(col("docId"), col(contentCol))
-        docsDf.filter(col("docId").isin(ids: _*)).select(cols: _*).collect()
-          .map { r =>
-            val text = r.getString(1)
-            val blob = if (useOffsets) r.getAs[Array[Byte]](2) else null
-            r.getLong(0) -> Fvh.highlightDoc(text, fvhBounds(text, blob), w,
-              fragCharSize, maxNumFragments)
-          }.toMap
+    storedDocs(ids, contentCol).map { case (id, (text, blob0)) =>
+      val blob = if (useOffsets) blob0 else null
+      id -> Fvh.highlightDoc(text, fvhBounds(text, blob), w,
+        fragCharSize, maxNumFragments)
     }
   }
 
@@ -2642,17 +2620,8 @@ final class Searcher(private[search] val spark: SparkSession,
       if (probe.length <= 4096) {
         import org.apache.spark.sql.functions.col
         val ids = probe.map(_.getLong(0))
-        val contents = localRowStore(contentCol) match {
-          case Some(rs) => ids.iterator.flatMap { d =>
-            Option(rs.getOrNull(d)).flatMap(v => Option(v._1).map(d -> _))
-          }.toMap
-          case None => docsDf
-            .filter(col("docId").isin(ids.toSeq: _*))
-            .select(col("docId"), col(contentCol).cast("string"))
-            .collect()
-            .flatMap(r => if (r.isNullAt(1)) None
-              else Some(r.getLong(0) -> r.getString(1))).toMap
-        }
+        val contents = storedDocs(ids.toSeq, contentCol)
+          .collect { case (d, (c, _)) if c != null => d -> c }
         val perDoc = ids.flatMap { d =>
           contents.get(d).map { c =>
             d -> tok(c).groupBy(identity)
@@ -2735,16 +2704,8 @@ final class Searcher(private[search] val spark: SparkSession,
       import org.apache.spark.sql.functions.col
       val n = probe.length.toLong
       val ids = probe.map(_.getLong(0))
-      val contents: Map[Long, String] = localRowStore(contentCol) match {
-        case Some(rs) => ids.iterator.flatMap { d =>
-          Option(rs.getOrNull(d)).map(v => d -> v._1)
-        }.toMap
-        case None => docsDf
-          .filter(col("docId").isin(ids.toSeq: _*))
-          .select(col("docId"), col(contentCol).cast("string"))
-          .collect()
-          .map(r => r.getLong(0) ->
-            (if (r.isNullAt(1)) null else r.getString(1))).toMap
+      val contents = storedDocs(ids.toSeq, contentCol).map {
+        case (d, (c, _)) => d -> c
       }
       val tf = new java.util.HashMap[Long, Map[String, Long]]()
       ids.foreach { d =>
@@ -2885,33 +2846,6 @@ final class Searcher(private[search] val spark: SparkSession,
         df.withColumn(f, upd(col("docId"), col(f).cast("long")))
       }
     }
-
-  /** ~bytes a driver-side docvalues array for this index would take. */
-  private def dvBytes: Long = m.docCount * 16L
-
-  /** Long-valued docvalues column from the index's docs table, loaded ONCE
-    * per field into a dense array (engine-assigned docIds are dense; a
-    * sparse id space falls back to a hash map). The NumericDocValues
-    * analog (`index/NumericDocValues.java`) for the DRIVER-LOCAL path
-    * only — searchByField gates on `dvBytes <= maxLocalBytes` and runs
-    * the executor-side join path instead when the column doesn't fit.
-    */
-  private val dvCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long => Long]
-  def docValues(field: String): Long => Long =
-    dvCache.getOrElseUpdate(field, {
-      val rows = dvDocsDf
-        .select(col("docId"), col(field).cast("long")).collect()
-      val maxId = rows.iterator.map(_.getLong(0)).max
-      if (maxId < Int.MaxValue && maxId + 1 <= rows.length.toLong * 4) {
-        val arr = new Array[Long](maxId.toInt + 1)
-        rows.foreach(r => arr(r.getLong(0).toInt) = r.getLong(1))
-        (d: Long) => arr(d.toInt)
-      } else {
-        val m = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-        (d: Long) => m(d)
-      }
-    })
 
   /** Spell suggestions for a (possibly misspelled) term — the
     * DirectSpellChecker surface (`lucene/suggest/.../spell/
@@ -3294,36 +3228,33 @@ final class Searcher(private[search] val spark: SparkSession,
   /** Driver-resident suggester build — the AnalyzingInfixSuggester
     * keeps its OWN auxiliary index of the stored texts
     * (`AnalyzingInfixSuggester.java:77-95`); this snapshot is that
-    * build, sized by the `maxLocalBytes` gate like every other local
-    * tier: (docId asc)-ordered (docId, raw text, analyzed tokens,
-    * default length weight) rows, NULL texts dropped (they can never
-    * match — SQL three-valued logic drops them distributed too).
-    * None beyond the gate — callers run the distributed scan. Weight is
-    * the codepoint count (Spark `length` ≡ `codePointCount`, NOT
-    * String.length's UTF-16 units).
+    * build off the content column, sized by [[fitsLocal]] like every
+    * other local tier, token arrays included: (docId asc)-ordered (docId,
+    * raw text, analyzed tokens, default length weight) rows, NULL texts
+    * dropped (they can never match — SQL three-valued logic drops them
+    * distributed too). None beyond the gate — callers run the
+    * distributed scan. Weight is the codepoint count (Spark `length` ≡
+    * `codePointCount`, NOT String.length's UTF-16 units).
     */
-  private val suggestSnapCache = scala.collection.concurrent.TrieMap
-    .empty[String, Option[Array[(Long, String, Array[String], Long)]]]
   private def suggestSnapshot(
       contentCol: String): Option[Array[(Long, String, Array[String], Long)]] =
-    suggestSnapCache.getOrElseUpdate(contentCol, {
-      val sz = docsDf
-        .agg(sum(length(col(contentCol)).cast("long"))).collect()(0)
-      val chars = if (sz.isNullAt(0)) 0L else sz.getLong(0)
-      // text + token copies + array/object headers ≈ 4× the chars
-      if (4L * chars > maxLocalBytes) None
+    lru.getOrLoad(SuggestKey(contentCol)) {
+      if (!fitsLocal(columns = Seq(contentCol))) (None, 0L)
       else {
         val tok = IndexBuilder.tokenizerFn(m.tokenizer)
-        val rows = docsDf.select(col("docId"), col(contentCol))
-          .filter(col(contentCol).isNotNull).collect()
-          .sortBy(_.getLong(0))
-        Some(rows.map { r =>
-          val t = r.getString(1)
-          (r.getLong(0), t, tok(t),
-            t.codePointCount(0, t.length).toLong)
-        })
+        val c = column(contentCol)
+        val snap = c.ids.indices.filterNot(c.isNull).map { i =>
+          val t = c.string(i)
+          (c.ids(i), t, tok(t), t.codePointCount(0, t.length).toLong)
+        }.toArray
+        // per row: the tuple and its token array, each token's chars
+        val bytes = snap.iterator.map(r =>
+          48L + 8L * r._3.length + r._3.iterator.map(_.length.toLong).sum).sum
+        if (fitsLocal(columns = Seq(contentCol), builds = bytes))
+          (Some(snap), bytes)
+        else (None, 0L)
       }
-    })
+    }
 
   def suggestBlendedInfix(key: String, num: Int,
       blender: String = "linear", numFactor: Int = 10,
@@ -3574,6 +3505,12 @@ final class Searcher(private[search] val spark: SparkSession,
       fields: Seq[(String, Boolean)]): Array[(Long, Array[Long])] = {
     require(fields.nonEmpty, "empty sort spec")
     val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
+    // a lone ascending sort on the index-sort field: docId order IS the
+    // sort order, so the first k live matches of each shard win
+    val earlyK = fields match {
+      case Seq((f, true)) if m.indexSort.contains(f) => k
+      case _ => Int.MaxValue
+    }
     val ord = new Ordering[(Long, Array[Long])] {
       def compare(a: (Long, Array[Long]), b: (Long, Array[Long])): Int = {
         var i = 0
@@ -3586,22 +3523,26 @@ final class Searcher(private[search] val spark: SparkSession,
       }
     }
 
-    if (fitsLocal(st, present, fields.map(_._1).distinct.size)) {
-      val gets = fields.map(f => docValues(f._1))
-      onLocalPool(present, plan) { (shard, blobs) =>
+    if (fitsLocal(st, present, fields.map(_._1))) {
+      val cols = fields.map(f => column(f._1))
+      val partials = onLocalPool(present, plan) { (shard, blobs) =>
         // max-heap under the reversed chain ordering: head = WORST kept
         val pq = scala.collection.mutable.PriorityQueue
           .empty[(Long, Array[Long])](ord)
-        new LiveMatches(shard, blobs, plan).foreach { d =>
-          pq.enqueue((d, gets.map(_(d)).toArray))
+        var n = 0
+        new LiveMatches(shard, blobs, plan).take(earlyK).foreach { d =>
+          pq.enqueue((d, cols.map(c => c.long(c.row(d))).toArray))
           if (pq.size > k) pq.dequeue()
+          n += 1
         }
-        pq.dequeueAll
-      }.flatten.sorted(ord).take(k).toArray
+        (pq.dequeueAll, n)
+      }
+      lastFieldScanDocs = partials.map(_._2.toLong).sum
+      partials.flatMap(_._1).sorted(ord).take(k).toArray
     } else {
       val dv = dvDocsDf.select(
         col("docId") +: fields.map(f => col(f._1).cast("long").as(s"s_${f._1}")): _*)
-      val matches = matchStream(plan, present).select("docId")
+      val matches = matchStream(plan, present, earlyK).select("docId")
       val sortCols = fields.map(f =>
         if (f._2) col(s"s_${f._1}").asc else col(s"s_${f._1}").desc) :+
         col("docId").asc
@@ -3635,64 +3576,15 @@ final class Searcher(private[search] val spark: SparkSession,
     * match — both tiers stop each shard's walk there.
     */
   def searchByField(q0: Query, k: Int, field: String,
-      asc: Boolean = true): Array[(Long, Long)] = {
-    val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
-    val earlyK = if (asc && m.indexSort.contains(field)) k else Int.MaxValue
-    if (fitsLocal(st, present, 1)) {
-      val get = docValues(field)
-      // reuse the score queue with a signed key: asc ⇒ key = -value (so the
-      // queue's score-desc order yields value asc); ties docId asc either way
-      val sign = if (asc) -1d else 1d
-      val partials = onLocalPool(present, plan) { (shard, blobs) =>
-        val queue = new BoundedHitQueue(k)
-        var n = 0
-        new LiveMatches(shard, blobs, plan).take(earlyK).foreach { d =>
-          queue.insert(d, sign * get(d)); n += 1
-        }
-        (queue.sortedHits, n)
-      }
-      lastFieldScanDocs = partials.map(_._2.toLong).sum
-      TopK.merge(partials.map(_._1), k).map(h => (h.docId, (sign * h.score).toLong))
-    } else {
-      val dv = dvDocsDf.select(col("docId"), col(field).cast("long").as("sortv"))
-      matchStream(plan, present, earlyK).select("docId")
-        .join(dv, "docId")
-        .orderBy(if (asc) col("sortv").asc else col("sortv").desc,
-          col("docId").asc)
-        .limit(k)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-    }
-  }
+      asc: Boolean = true): Array[(Long, Long)] =
+    searchBySort(q0, k, Seq(field -> asc)).map { case (d, vs) => (d, vs(0)) }
 
-  /** Live matches visited by the last local-tier searchByField call (spec
-    * hook: proves early termination actually terminated early).
+  /** Live matches visited by the last local-tier sort (spec hook: proves
+    * early termination actually terminated early).
     */
   private[graft] var lastFieldScanDocs: Long = 0L
 
   // ---------- expression sort + rescore (lucene/expressions) ----------
-
-  /** Double-valued docvalues column (the DoubleValuesSource binding for
-    * expressions — `expressions/SimpleBindings.java:50-87` resolves
-    * variables to numeric docvalues); same dense-array cache shape as
-    * [[docValues]].
-    */
-  private val dvdCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long => Double]
-  def docValuesD(field: String): Long => Double =
-    dvdCache.getOrElseUpdate(field, {
-      val rows = dvDocsDf
-        .select(col("docId"), col(field).cast("double")).collect()
-      val maxId = rows.iterator.map(_.getLong(0)).max
-      if (maxId < Int.MaxValue && maxId + 1 <= rows.length.toLong * 4) {
-        val arr = new Array[Double](maxId.toInt + 1)
-        rows.foreach(r => arr(r.getLong(0).toInt) = r.getDouble(1))
-        (d: Long) => arr(d.toInt)
-      } else {
-        val mp = rows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        (d: Long) => mp(d)
-      }
-    })
 
   /** Expression sort — `Expression.getSortField` over `SimpleBindings`
     * (`expressions/ExpressionSortField.java:28`,
@@ -3717,9 +3609,10 @@ final class Searcher(private[search] val spark: SparkSession,
     val missing = fields.filterNot(docsDf.columns.contains)
     require(missing.isEmpty, s"unbound expression variables: $missing")
     val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
-    if (fitsLocal(st, present, fields.length)) {
-      val gets: Map[String, Long => Double] =
-        fields.map(f => f -> docValuesD(f)).toMap
+    if (fitsLocal(st, present, fields)) {
+      // the double view of each column binds its variable
+      // (`expressions/SimpleBindings.java:50-87`)
+      val cols = fields.map(f => f -> column(f)).toMap
       // asc rides the (score desc) queue via sign flip, as searchByField
       val sign = if (asc) -1d else 1d
       val partials = onLocalPool(present, plan) { (shard, blobs) =>
@@ -3727,7 +3620,8 @@ final class Searcher(private[search] val spark: SparkSession,
         val it = new LiveMatches(shard, blobs, plan)
         it.foreach { d =>
           val sc = if (needScore) it.score.toDouble else 0d
-          val bindFn = (v: String) => if (v == "_score") sc else gets(v)(d)
+          val bindFn = (v: String) =>
+            if (v == "_score") sc else { val c = cols(v); c.double(c.row(d)) }
           queue.insert(d, sign * JsExpr.evalD(node, bindFn))
         }
         queue.sortedHits
@@ -3770,14 +3664,14 @@ final class Searcher(private[search] val spark: SparkSession,
     val fields = (JsExpr.variables(node) - "_score").toSeq.sorted
     val missing = fields.filterNot(docsDf.columns.contains)
     require(missing.isEmpty, s"unbound expression variables: $missing")
-    // k-sized field fetch: the gated dense accessors when the columns
-    // are driver-resident (same [[docValuesD]] regime as the expression
-    // boost tiers), else one docId-pushdown read of exactly those docs
+    // k-sized field fetch: the gated columns' double views when they are
+    // driver-resident (the expression sort's regime), else one
+    // docId-pushdown read of exactly those docs
     val fv: Long => Array[Double] =
       if (fields.isEmpty) (_: Long) => Array.empty[Double]
-      else if (fitsLocal(dvColumns = fields.length)) {
-        val gets = fields.map(docValuesD).toArray
-        (d: Long) => Array.tabulate(fields.length)(i => gets(i)(d))
+      else if (fitsLocal(columns = fields)) {
+        val cols = fields.map(column).toArray
+        (d: Long) => cols.map(c => c.double(c.row(d)))
       } else {
         val mp = dvDocsDf.filter(col("docId").isin(first.map(_.docId): _*))
           .select(col("docId") +: fields.map(f => col(f).cast("double")): _*)
@@ -3832,8 +3726,8 @@ final class Searcher(private[search] val spark: SparkSession,
     // WAND off (planFor's default): diversity can promote docs outside the
     // plain top-k, so score-threshold pruning is unsound here
     val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
-    if (fitsLocal(st, present, 1)) {
-      val keyOf = docKeys(keyField)
+    if (fitsLocal(st, present, Seq(keyField))) {
+      val keyOf = keysOf(keyField)
       val partials = onLocalPool(present, plan) { (shard, blobs) =>
         // one bounded heap per key — the reference's perKeyQueues
         val perKey = new java.util.HashMap[String, BoundedHitQueue]()
@@ -3856,7 +3750,7 @@ final class Searcher(private[search] val spark: SparkSession,
       queue.sortedHits
     } else {
       import org.apache.spark.sql.expressions.Window
-      val dv = docsDf.select(col("docId"), col(keyField).cast("string").as("dkey"))
+      val dv = dvDocsDf.select(col("docId"), col(keyField).cast("string").as("dkey"))
       val w = Window.partitionBy("dkey")
         .orderBy(col("score").desc, col("docId").asc)
       matchStream(plan, present)
@@ -3871,21 +3765,6 @@ final class Searcher(private[search] val spark: SparkSession,
         .map(r => Hit(r.getLong(0), r.getDouble(1)))
     }
   }
-
-  /** String-keyed docvalues accessor (driver-local path only — gated by
-    * `fitsLocal` like [[docValues]]). Key identity is all diversity
-    * needs, so every column type keys via its string form.
-    */
-  private val keyCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long => String]
-  private def docKeys(field: String): Long => String =
-    keyCache.getOrElseUpdate(field, {
-      val rows = docsDf
-        .select(col("docId"), col(field).cast("string")).collect()
-      val m = rows.map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) "" else r.getString(1))).toMap
-      (d: Long) => m(d)
-    })
 
   // ---------- sandbox docvalues queries ----------
 
@@ -3912,53 +3791,32 @@ final class Searcher(private[search] val spark: SparkSession,
       }
   }
 
-  /** (docId asc)-sorted docvalues pairs of the UPDATE-AWARE view with
-    * SQL NULL values DROPPED — the standalone docvalues queries' local
-    * twin: `dvPredCol`'s three-valued logic never matches a NULL, so
-    * the pair list excludes them outright (unlike the dense
-    * [[docValues]] array, whose missing slots read 0 — fine for its
-    * gated scorer callers, wrong under a standalone predicate). Loaded
-    * once per field under the `dvBytes` gate, long and string keyed.
+  /** [[dvPredCol]] on the driver: whether row `i` of the (update-aware)
+    * column holds a value the predicate accepts — the string view for
+    * Terms, the long view otherwise — a NULL never matching, exactly
+    * as SQL three-valued logic drops it distributed.
     */
-  private val dvLongPairCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Long], Array[Long])]
-  private def dvLongPairs(field: String): (Array[Long], Array[Long]) =
-    dvLongPairCache.getOrElseUpdate(field, {
-      val c = col(field).cast("long")
-      val rows = dvDocsDf.filter(c.isNotNull)
-        .select(col("docId"), c).collect().sortBy(_.getLong(0))
-      (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
-    })
-  private val dvStrPairCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Long], Array[String])]
-  private def dvStrPairs(field: String): (Array[Long], Array[String]) =
-    dvStrPairCache.getOrElseUpdate(field, {
-      val c = col(field).cast("string")
-      val rows = dvDocsDf.filter(c.isNotNull)
-        .select(col("docId"), c).collect().sortBy(_.getLong(0))
-      (rows.map(_.getLong(0)), rows.map(_.getString(1)))
-    })
+  private def dvAccept(c: DocColumn, pred: DvPred): Int => Boolean =
+    pred match {
+      case DvPred.Terms(vs) => i => !c.isNull(i) && vs.contains(c.string(i))
+      case DvPred.Numbers(vs) => i => !c.isNull(i) && vs.contains(c.long(i))
+      case DvPred.Range(lo, up, il, iu) => i => !c.isNull(i) && {
+        val v = c.long(i)
+        lo.forall(l => if (il) v >= l else v > l) &&
+          up.forall(u => if (iu) v <= u else v < u)
+      }
+    }
 
   /** Live docs matching a standalone docvalues predicate, docId asc, off
-    * the (docId asc)-sorted pairs — ≡ liveDf(filter).orderBy(docId) on
-    * the distributed path. Lazy: nothing is buffered.
+    * the column — ≡ liveDf(filter).orderBy(docId) on the distributed
+    * path. Lazy: nothing is buffered.
     */
   private def dvLocalMatches(pred: DvPred, field: String): Iterator[Long] = {
-    def walk[T](ids: Array[Long], vals: Array[T], accept: T => Boolean) =
-      ids.indices.iterator.collect {
-        case i if accept(vals(i)) &&
-            !graft.index.Deletes.contains(deletesArr, ids(i)) => ids(i)
-      }
-    pred match {
-      case DvPred.Terms(vs) =>
-        val (ids, vals) = dvStrPairs(field); walk(ids, vals, vs.contains)
-      case DvPred.Numbers(vs) =>
-        val (ids, vals) = dvLongPairs(field); walk(ids, vals, vs.contains)
-      case DvPred.Range(lo, up, il, iu) =>
-        val (ids, vals) = dvLongPairs(field)
-        walk(ids, vals, (v: Long) =>
-          lo.forall(l => if (il) v >= l else v > l) &&
-            up.forall(u => if (iu) v <= u else v < u))
+    val c = column(field)
+    val accept = dvAccept(c, pred)
+    c.ids.indices.iterator.collect {
+      case i if accept(i) &&
+          !graft.index.Deletes.contains(deletesArr, c.ids(i)) => c.ids(i)
     }
   }
 
@@ -3976,7 +3834,7 @@ final class Searcher(private[search] val spark: SparkSession,
     */
   def searchDocValues(field: String, pred: DvPred, k: Int,
       constScore: Float = 1f): Array[Hit] =
-    if (fitsLocal(dvColumns = 1))
+    if (fitsLocal(columns = Seq(field)))
       dvLocalMatches(pred, field).take(k).map(Hit(_, constScore.toDouble)).toArray
     else liveDf(dvDocsDf.filter(dvPredCol(field, pred)).select(col("docId")))
       .orderBy(col("docId").asc).limit(k)
@@ -3987,7 +3845,7 @@ final class Searcher(private[search] val spark: SparkSession,
     * or the same gated local walk, uncapped and unbuffered.
     */
   def countDocValues(field: String, pred: DvPred): Long =
-    if (fitsLocal(dvColumns = 1)) dvLocalMatches(pred, field).size.toLong
+    if (fitsLocal(columns = Seq(field))) dvLocalMatches(pred, field).size.toLong
     else liveDf(dvDocsDf.filter(dvPredCol(field, pred)).select(col("docId")))
       .count()
 
@@ -4003,8 +3861,8 @@ final class Searcher(private[search] val spark: SparkSession,
     * leaf collector has no docvalues access — the exhaustive walk keeps
     * both paths bit-identical.
     *
-    * Scale shape: local path = one docvalues accessor lookup per match
-    * inside the shard walk (gated on `dvBytes <= maxLocalBytes`);
+    * Scale shape: local path = one column lookup per match inside the
+    * shard walk, through the predicate [[dvLocalMatches]] applies;
     * distributed path = shard-task match streams (docId, score) joined
     * against the predicate-filtered docs column store (pushed filter),
     * then TakeOrderedAndProject — nothing match-count-sized reaches the
@@ -4013,26 +3871,13 @@ final class Searcher(private[search] val spark: SparkSession,
   def searchDvFiltered(q0: Query, k: Int, field: String,
       pred: DvPred): Array[Hit] = {
     val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
-    if (fitsLocal(st, present, 1)) {
-      // string membership keys via the string accessor; numeric predicates
-      // via the long accessor — both driver-dense under the gate
-      val accept: Long => Boolean = pred match {
-        case DvPred.Terms(vs) =>
-          val get = docKeys(field); d => vs.contains(get(d))
-        case DvPred.Numbers(vs) =>
-          val get = docValues(field); d => vs.contains(get(d))
-        case DvPred.Range(lo, up, il, iu) =>
-          val get = docValues(field)
-          d => {
-            val v = get(d)
-            lo.forall(l => if (il) v >= l else v > l) &&
-              up.forall(u => if (iu) v <= u else v < u)
-          }
-      }
+    if (fitsLocal(st, present, Seq(field))) {
+      val c = column(field)
+      val accept = dvAccept(c, pred)
       TopK.merge(onLocalPool(present, plan) { (shard, blobs) =>
         val queue = new BoundedHitQueue(k)
         val it = new LiveMatches(shard, blobs, plan)
-        it.foreach(d => if (accept(d)) queue.insert(d, it.score.toDouble))
+        it.foreach(d => if (accept(c.row(d))) queue.insert(d, it.score.toDouble))
         queue.sortedHits
       }, k)
     } else {
@@ -4045,24 +3890,23 @@ final class Searcher(private[search] val spark: SparkSession,
     }
   }
 
-  // ---------- query-time join (JoinUtil), driver-local tier ----------
+  // ---------- query-time join (JoinUtil) ----------
 
-  /** (docId asc)-sorted join-key column of the docs table with SQL NULL
-    * keys DROPPED (inner-join semantics: a NULL never joins) — loaded
-    * once per field for the driver-local join tier, exactly the
-    * [[docValues]]/[[docKeys]] regime. Key identity is the value's
-    * string form (the gate joins string fields; long↔string is
-    * injective for numerics).
+  /** JoinUtil scored join (`JoinUtil.java:92`, ScoreMode none|avg|max|
+    * total|min) on the tier the gate picks: the driver-local fold of
+    * [[joinScoredLocal]], else — and for mode "none" — the distributed
+    * fold+broadcast of [[graft.ops.Join.joinScored]] over
+    * [[matchScoresDf]] and the live docs table. Top-k, score desc then
+    * docId asc.
     */
-  private val joinKeyCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Long], Array[String])]
-  private def joinKeys(field: String): (Array[Long], Array[String]) =
-    joinKeyCache.getOrElseUpdate(field, {
-      val rows = docsDf.filter(col(field).isNotNull)
-        .select(col("docId"), col(field).cast("string")).collect()
-        .sortBy(_.getLong(0))
-      (rows.map(_.getLong(0)), rows.map(_.getString(1)))
-    })
+  def joinScored(q0: Query, fromField: String, toField: String,
+      mode: String, k: Int): Array[Hit] =
+    joinScoredLocal(q0, fromField, toField, mode, k).getOrElse {
+      val docs = liveDf(dvDocsDf).withColumnRenamed("docId", "doc_id")
+      val scores = matchScoresDf(q0).select(col("docId"), col("ms").as("score"))
+      graft.ops.Join.joinScored(docs, scores, fromField, toField, mode, k)
+        .collect().map(r => Hit(r.getLong(0), r.getDouble(1)))
+    }
 
   /** JoinUtil scored join (`JoinUtil.java:92`, fold laws of
     * `TermsWithScoreCollector.java:114-178` — the SAME laws
@@ -4072,34 +3916,35 @@ final class Searcher(private[search] val spark: SparkSession,
     * order with FLOAT arithmetic (Total/Avg are the ordered float `+=`;
     * starting the fold at the first score equals Spark's `0f + s1` —
     * IEEE +0 is the additive identity and BM25 scores are finite
-    * positives), then to-side membership + top-k (score desc, docId
-    * asc) through a [[BoundedHitQueue]].
+    * positives), then the live to-side docs' membership + top-k (score
+    * desc, docId asc) through a [[BoundedHitQueue]]. Join keys are the
+    * columns' string views with NULL keys skipped (inner-join semantics:
+    * a NULL never joins; long↔string is injective for numerics).
     *
-    * Returns None — callers run the distributed fold+broadcast shape
-    * ([[graft.ops.Join.joinScored]]) instead — when the two docvalues
-    * columns or the from-query postings exceed `maxLocalBytes`, or for
-    * mode "none" (the TermsQuery rewrite folds nothing).
+    * Returns None — [[joinScored]] then runs the distributed shape —
+    * when the join-key columns or the from-query postings exceed
+    * `maxLocalBytes`, or for mode "none" (the TermsQuery rewrite folds
+    * nothing).
     */
   def joinScoredLocal(q0: Query, fromField: String, toField: String,
       mode: String, k: Int): Option[Array[Hit]] = {
     if (!Set("avg", "max", "min", "total").contains(mode)) return None
+    val cols = Seq(fromField, toField)
     val fits = planFor(q0, 1) match {
-      case None => fitsLocal(dvColumns = 2)
-      case Some((_, present, st)) => fitsLocal(st, present, 2)
+      case None => fitsLocal(columns = cols)
+      case Some((_, present, st)) => fitsLocal(st, present, cols)
     }
     if (!fits) return None
     val scores = localMatchScores(q0)
-    // per-value fold state; visit order = docId asc (joinKeys is sorted)
+    // per-value fold state; visit order = docId asc (columns are sorted)
     class FoldAcc(var sum: Float, var mn: Float, var mx: Float, var n: Int)
     val folds = new java.util.HashMap[String, FoldAcc]()
-    val (fIds, fVals) = joinKeys(fromField)
-    var i = 0
-    while (i < fIds.length) {
-      val d = fIds(i)
-      if (scores.contains(d)) {
-        val s = scores(d)
-        val f = folds.get(fVals(i))
-        if (f == null) folds.put(fVals(i), new FoldAcc(s, s, s, 1))
+    val from = column(fromField)
+    from.ids.indices.foreach { i =>
+      if (!from.isNull(i) && scores.contains(from.ids(i))) {
+        val s = scores(from.ids(i))
+        val f = folds.get(from.string(i))
+        if (f == null) folds.put(from.string(i), new FoldAcc(s, s, s, 1))
         else {
           f.sum = f.sum + s // single-precision += in docId order
           if (s < f.mn) f.mn = s
@@ -4107,23 +3952,19 @@ final class Searcher(private[search] val spark: SparkSession,
           f.n += 1
         }
       }
-      i += 1
     }
     val queue = new BoundedHitQueue(k)
-    val (tIds, tVals) = joinKeys(toField)
-    var j = 0
-    while (j < tIds.length) {
-      val f = folds.get(tVals(j))
-      if (f != null) {
-        val js: Float = mode match {
-          case "total" => f.sum
-          case "max"   => f.mx
-          case "min"   => f.mn
-          case _       => (f.sum / f.n.toFloat: Float) // avg: applied once
-        }
-        queue.insert(tIds(j), js.toDouble)
-      }
-      j += 1
+    val to = column(toField)
+    to.ids.indices.foreach { j =>
+      val d = to.ids(j)
+      val f = if (to.isNull(j) || graft.index.Deletes.contains(deletesArr, d))
+        null else folds.get(to.string(j))
+      if (f != null) queue.insert(d, (mode match {
+        case "total" => f.sum
+        case "max"   => f.mx
+        case "min"   => f.mn
+        case _       => (f.sum / f.n.toFloat: Float) // avg: applied once
+      }).toDouble)
     }
     Some(queue.sortedHits)
   }
@@ -4301,17 +4142,11 @@ final class Searcher(private[search] val spark: SparkSession,
     val vs = resolveStatVs(vs0)
     val fields = ValueSources.fieldsOf(vs)
     val wantNorm = ValueSources.needsNorm(vs)
-    var base = dvDocsDf.select((col("docId") +:
+    // tombstone-masked at the source: function queries run over the
+    // docs column store, not the scorer tree (the same liveDocs law)
+    var base = liveDf(dvDocsDf.select((col("docId") +:
       (fields.toSeq.sorted.map(col) ++
-        (if (wantNorm) Seq(col("normByte")) else Nil))): _*)
-    if (deletesArr.nonEmpty) {
-      // tombstone mask (function queries run over the docs column store,
-      // not the scorer tree — same liveDocs law, applied at the source)
-      val del = deletesArr
-      val live = org.apache.spark.sql.functions.udf(
-        (id: Long) => !graft.index.Deletes.contains(del, id))
-      base = base.filter(live(col("docId")))
-    }
+        (if (wantNorm) Seq(col("normByte")) else Nil))): _*))
     val qvs = ValueSources.queriesOf(vs).distinct
     val qvCol = qvs.zipWithIndex.map { case (qv, i) => qv -> s"_qv$i" }.toMap
     qvs.foreach { qv =>
@@ -4362,22 +4197,12 @@ final class Searcher(private[search] val spark: SparkSession,
     base.select(col("docId"), ValueSources.toColumn(vs, ctx).as("v"))
   }
 
-  /** Sorted docIds of the index for the driver-local function tier —
-    * docCount-sized, so every use sits behind the same
-    * `dvBytes <= maxLocalBytes` gate as the docvalues accessors.
-    */
-  private lazy val localDocIds: Array[Long] = {
-    val ids = dvDocsDf.select(col("docId")).collect().map(_.getLong(0))
-    java.util.Arrays.sort(ids)
-    ids
-  }
-
   /** Docvalue columns a value-source local tier loads: each distinct
     * field, and the norm column when a source reads it.
     */
-  private def vsColumns(vss: Seq[ValueSrc]): Int =
-    vss.flatMap(ValueSources.fieldsOf).distinct.size +
-      (if (vss.exists(ValueSources.needsNorm)) 1 else 0)
+  private def vsColumns(vss: Seq[ValueSrc]): Seq[String] =
+    vss.flatMap(ValueSources.fieldsOf).distinct ++
+      (if (vss.exists(ValueSources.needsNorm)) Seq("normByte") else Nil)
 
   /** The QueryV subqueries a value-source local tier walks. */
   private def vsQueries(vss: Seq[ValueSrc]): Seq[Query] =
@@ -4388,45 +4213,15 @@ final class Searcher(private[search] val spark: SparkSession,
     * (:113-117).
     *
     * Driver-local tier (same `maxLocalBytes` gate family as
-    * [[searchBoosted]]): dense docvalue arrays + local scorer walks for
-    * QueryV nodes — zero Spark jobs once the per-field accessors are
-    * warm. Beyond the gate: top-k = TakeOrderedAndProject over the
+    * [[searchBoosted]]): the docvalue columns + local scorer walks for
+    * QueryV nodes — zero Spark jobs once the columns are cached.
+    * Beyond the gate: top-k = TakeOrderedAndProject over the
     * codegen'd function scan — nothing doc-count-sized reaches the
     * driver. Both tiers share evalLocal/toColumn float laws (spec-pinned
     * equal via the searchBoosted dual-path specs).
     */
-  def searchFunction(vs: ValueSrc, k: Int): Array[Hit] = {
-    import org.apache.spark.sql.functions.{col, lit, when, isnan}
-    // the local tier walks every docId (`localDocIds`): one more column
-    if (fitsLocal(dvColumns = 1 + vsColumns(Seq(vs)),
-        innerQueries = vsQueries(Seq(vs)))) {
-      val fval = ValueSources.evalLocal(resolveStatVs(vs), localVsCtx())
-      val queue = new BoundedHitQueue(k)
-      val ids = localDocIds
-      var i = 0
-      while (i < ids.length) {
-        val d = ids(i)
-        if (!graft.index.Deletes.contains(deletesArr, d)) {
-          val v = fval(d)
-          val s = if (v.isNaN || v == Float.NegativeInfinity) -Float.MaxValue
-            else v
-          queue.insert(d, s.toDouble)
-        }
-        i += 1
-      }
-      return queue.sortedHits
-    }
-    functionDf(vs)
-      .select(col("docId"),
-        // Spark comparisons rank NaN ABOVE +Inf (unlike Java, where any
-        // NaN comparison is false) — test NaN explicitly
-        when(isnan(col("v")) || col("v") === lit(Float.NegativeInfinity),
-          lit(-Float.MaxValue)).otherwise(col("v")).as("s"))
-      .orderBy(col("s").desc, col("docId").asc)
-      .limit(k)
-      .collect()
-      .map(r => Hit(r.getLong(0), r.getFloat(1).toDouble))
-  }
+  def searchFunction(vs: ValueSrc, k: Int): Array[Hit] =
+    functionTopK(vs, k, _ => true, lit(true))
 
   /** FunctionRangeQuery search (`FunctionRangeQuery.java:40-96`): match =
     * value in [lower, upper] (float comparisons, per-bound inclusivity),
@@ -4436,36 +4231,37 @@ final class Searcher(private[search] val spark: SparkSession,
   def searchFunctionRange(vs: ValueSrc, lower: Float, upper: Float,
       inclLower: Boolean = true, inclUpper: Boolean = true,
       k: Int = 10): Array[Hit] = {
-    import org.apache.spark.sql.functions.{col, lit, when, isnan}
-    // the local tier walks every docId (`localDocIds`): one more column
-    if (fitsLocal(dvColumns = 1 + vsColumns(Seq(vs)),
+    val v = col("v")
+    // the same match predicate on both tiers (a NaN value fails every
+    // comparison, in Scala as in SQL)
+    functionTopK(vs, k,
+      x => (if (inclLower) x >= lower else x > lower) &&
+        (if (inclUpper) x <= upper else x < upper),
+      (if (inclLower) v >= lit(lower) else v > lit(lower)) &&
+        (if (inclUpper) v <= lit(upper) else v < lit(upper)))
+  }
+
+  /** Top-k live docs whose function value passes `accept` (`acceptCol`
+    * on the distributed tier), scored by the value with NaN/-Inf →
+    * -Float.MAX_VALUE. The local tier walks every docId (the docId
+    * column too) over the evalLocal form.
+    */
+  private def functionTopK(vs: ValueSrc, k: Int, accept: Float => Boolean,
+      acceptCol: org.apache.spark.sql.Column): Array[Hit] = {
+    if (fitsLocal(columns = "docId" +: vsColumns(Seq(vs)),
         innerQueries = vsQueries(Seq(vs)))) {
-      // local tier: same match predicate as the Column filter (a NaN
-      // value fails every comparison, in Scala as in SQL)
       val fval = ValueSources.evalLocal(resolveStatVs(vs), localVsCtx())
       val queue = new BoundedHitQueue(k)
-      val ids = localDocIds
-      var i = 0
-      while (i < ids.length) {
-        val d = ids(i)
+      column("docId").ids.foreach { d =>
         if (!graft.index.Deletes.contains(deletesArr, d)) {
           val v = fval(d)
-          val okLo = if (inclLower) v >= lower else v > lower
-          val okHi = if (inclUpper) v <= upper else v < upper
-          if (okLo && okHi) {
-            val s = if (v.isNaN || v == Float.NegativeInfinity)
-              -Float.MaxValue else v
-            queue.insert(d, s.toDouble)
-          }
+          if (accept(v))
+            queue.insert(d, (if (v.isNaN || v == Float.NegativeInfinity)
+              -Float.MaxValue else v).toDouble)
         }
-        i += 1
       }
-      return queue.sortedHits
-    }
-    val lo = if (inclLower) col("v") >= lit(lower) else col("v") > lit(lower)
-    val hi = if (inclUpper) col("v") <= lit(upper) else col("v") < lit(upper)
-    functionDf(vs)
-      .filter(lo && hi)
+      queue.sortedHits
+    } else functionDf(vs).filter(acceptCol)
       .select(col("docId"),
         // Spark comparisons rank NaN ABOVE +Inf (unlike Java, where any
         // NaN comparison is false) — test NaN explicitly
@@ -4483,37 +4279,15 @@ final class Searcher(private[search] val spark: SparkSession,
     * match is scored before top-k (WAND off — its bounds don't survive
     * an unbounded per-doc multiplier):
     *  - small index (postings + docvalues fit `maxLocalBytes`): local
-    *    scorer walk × dense docvalue arrays, bounded heap;
+    *    scorer walk × the docvalue columns, bounded heap;
     *  - else: the match-score stream joins the function scan
     *    executor-side, top-k via TakeOrderedAndProject.
     * The spec pins both paths equal.
     */
   def searchBoosted(q0: Query, vs: ValueSrc, k: Int,
-      additive: Boolean = false): Array[Hit] = {
-    val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
-    if (fitsLocal(st, present, vsColumns(Seq(vs)), vsQueries(Seq(vs)))) {
-      val fval = ValueSources.evalLocal(resolveStatVs(vs), localVsCtx())
-      TopK.merge(onLocalPool(present, plan) { (shard, blobs) =>
-        val queue = new BoundedHitQueue(k)
-        val it = new LiveMatches(shard, blobs, plan)
-        it.foreach { d =>
-          queue.insert(d, (if (additive) it.score + fval(d)
-            else it.score * fval(d)).toDouble)
-        }
-        queue.sortedHits
-      }, k)
-    } else {
-      matchStream(plan, present)
-        .join(functionDf(vs), "docId")
-        .select(col("docId"),
-          (if (additive) col("ms") + col("v") else col("ms") * col("v"))
-            .cast(org.apache.spark.sql.types.FloatType).as("s"))
-        .orderBy(col("s").desc, col("docId").asc)
-        .limit(k)
-        .collect()
-        .map(r => Hit(r.getLong(0), r.getFloat(1).toDouble))
-    }
-  }
+      additive: Boolean = false): Array[Hit] =
+    if (additive) scoredByValues(q0, Seq(vs), 1f, k)(_ + _)(_ + _)
+    else scoredByValues(q0, Seq(vs), 1f, k)(_ * _)(_ * _)
 
   /** CustomScoreQuery (`queries/CustomScoreQuery.java:228-237,291-304`
     * with the default `CustomScoreProvider.customScore`,
@@ -4528,7 +4302,19 @@ final class Searcher(private[search] val spark: SparkSession,
     * codegen'd function columns and TakeOrderedAndProject.
     */
   def searchCustomScore(q0: Query, valSrcs: Seq[ValueSrc], boost: Float,
-      k: Int): Array[Hit] = {
+      k: Int): Array[Hit] =
+    scoredByValues(q0, valSrcs, boost, k)(_ * _)(_ * _)
+
+  /** `q0`'s matches scored `boost * step(…step(score, v0)…, vn)` in float
+    * — the local walk folds `step`, the Column path `stepCol` (one join
+    * and one float cast per source, replaying the scorer's sequential
+    * float ops exactly) — top-k by (score desc, docId asc).
+    */
+  private def scoredByValues(q0: Query, valSrcs: Seq[ValueSrc], boost: Float,
+      k: Int)(step: (Float, Float) => Float)(
+      stepCol: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.Column): Array[Hit] = {
+    import org.apache.spark.sql.types.FloatType
     val (plan, present, st) = planFor(q0, k).getOrElse(return Array.empty)
     if (fitsLocal(st, present, vsColumns(valSrcs), vsQueries(valSrcs))) {
       val fvals = valSrcs.map(vs =>
@@ -4538,24 +4324,19 @@ final class Searcher(private[search] val spark: SparkSession,
         val it = new LiveMatches(shard, blobs, plan)
         it.foreach { d =>
           var s = it.score
-          var i = 0
-          while (i < fvals.length) { s *= fvals(i)(d); i += 1 }
+          fvals.foreach(f => s = step(s, f(d)))
           queue.insert(d, (boost * s).toDouble)
         }
         queue.sortedHits
       }, k)
     } else {
-      import org.apache.spark.sql.types.FloatType
       var df = matchStream(plan, present)
-      // one join per source; each fold step float-casts so the Column
-      // path replays the scorer's sequential float multiplies exactly
       var sCol = col("ms")
       valSrcs.zipWithIndex.foreach { case (vs, i) =>
         df = df.join(functionDf(vs).withColumnRenamed("v", s"_v$i"), "docId")
-        sCol = (sCol * col(s"_v$i")).cast(FloatType)
+        sCol = stepCol(sCol, col(s"_v$i")).cast(FloatType)
       }
-      df.select(col("docId"),
-          (lit(boost) * sCol).cast(FloatType).as("s"))
+      df.select(col("docId"), (lit(boost) * sCol).cast(FloatType).as("s"))
         .orderBy(col("s").desc, col("docId").asc)
         .limit(k)
         .collect()
@@ -4566,22 +4347,14 @@ final class Searcher(private[search] val spark: SparkSession,
   /** All matches of `q` with scores via the DRIVER-LOCAL scorer walk —
     * the zero-job twin of [[matchScoresDf]] (same rewrite, same Plan,
     * same buildScorer per shard, same blob pruning), for callers already
-    * inside the `maxLocalBytes` regime. Memoized per query in an LRU of
-    * `LocalScoresEntries` match-count-sized maps, cleared in `close()`:
-    * one function tree re-resolves the same QueryV several times
-    * (exists + value), and re-walking postings for each is pure waste.
+    * inside the `maxLocalBytes` regime. Memoized per query in the cache,
+    * charged ~32 bytes a match: one function tree re-resolves the same
+    * QueryV several times (exists + value), and re-walking postings for
+    * each is pure waste.
     */
-  private val localScoresCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[Query, scala.collection.mutable.LongMap[Float]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Query,
-          scala.collection.mutable.LongMap[Float]]): Boolean =
-        this.size() > SegmentSearcher.LocalScoresEntries
-    })
-  private[graft] def localScoresCacheSize: Int = localScoresCache.size()
   private[graft] def localMatchScores(
       q0: Query): scala.collection.mutable.LongMap[Float] =
-    Option(localScoresCache.get(q0)).getOrElse {
+    lru.getOrLoad(ScoresKey(q0)) {
       val out = new scala.collection.mutable.LongMap[Float]()
       planFor(q0, 1).foreach { case (plan, present, _) =>
         localShards(present, plan).foreach { case (s, b) =>
@@ -4589,22 +4362,10 @@ final class Searcher(private[search] val spark: SparkSession,
           it.foreach(d => out(d) = it.score)
         }
       }
-      localScoresCache.put(q0, out) // walked outside the map's lock
-      out
+      (out, 64L + 32L * out.size)
     }
 
-  /** Decoded classic norm per doc, loaded once per Searcher (docCount-
-    * sized — callers sit behind the dvBytes gate).
-    */
-  private lazy val localNormMap: scala.collection.mutable.LongMap[Float] = {
-    val tbl = SegmentSearcher.classicNormTable
-    val rows = docsDf.select(col("docId"), col("normByte")).collect()
-    val nm = new scala.collection.mutable.LongMap[Float](rows.length)
-    rows.foreach(r => nm(r.getLong(0)) = tbl(r.getByte(1) & 0xff))
-    nm
-  }
-
-  /** Driver-local evaluation context: dense docvalue arrays, QueryV
+  /** Driver-local evaluation context: the docvalue columns, QueryV
     * scores materialized by a local exhaustive scorer walk
     * ([[localMatchScores]] — zero Spark jobs, same buildScorer trees as
     * the shard tasks), and the SAME eagerly-computed scale stats as the
@@ -4613,7 +4374,7 @@ final class Searcher(private[search] val spark: SparkSession,
     * paths bit-identical by construction).
     */
   private def localVsCtx(): ValueSources.LocalCtx = ValueSources.LocalCtx(
-    field = f => { val g = docValues(f); d => g(d).toFloat },
+    field = f => { val c = column(f); d => c.long(c.row(d)).toFloat },
     queryScore = qv => {
       val scores = localMatchScores(qv.q)
       d => scores.getOrElse(d, qv.defVal)
@@ -4633,9 +4394,11 @@ final class Searcher(private[search] val spark: SparkSession,
       }
       d => tfs.getOrElse(d, 0f)
     },
+    // the norm column decoded through the classic byte315 table
     norm = () => {
-      val nm = localNormMap
-      d => nm.getOrElse(d, 0f)
+      val c = column("normByte")
+      val tbl = SegmentSearcher.classicNormTable
+      d => { val i = c.at(d); if (i < 0) 0f else tbl(c.long(i).toInt & 0xff) }
     },
     queryMatched = qv => {
       val scores = localMatchScores(qv.q)
@@ -4684,12 +4447,12 @@ final class Searcher(private[search] val spark: SparkSession,
       .toDF("docId", "tfv")
   }
 
-  /** Drops the memoized caches and releases what this Searcher pinned
-    * (the last Searcher on a table unpersists it); a table it never read
-    * stays unread.
+  /** Empties the cache and releases what this Searcher pinned (the last
+    * Searcher on a table unpersists it); a table it never read stays
+    * unread.
     */
   def close(): Unit = {
-    localScoresCache.clear()
+    lru.clear()
     var p = pinned.poll()
     while (p != null) { graft.core.CachePins.release(p); p = pinned.poll() }
   }

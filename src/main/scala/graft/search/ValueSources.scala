@@ -505,7 +505,7 @@ object ValueSources {
   }
 
   /** Evaluation context for the driver-local form (small-index fast
-    * path): dense docvalue lookups, materialized QueryV score maps, and
+    * path): docvalue column lookups, materialized QueryV score maps, and
     * the same eagerly-computed scale stats.
     */
   final case class LocalCtx(field: String => (Long => Float),
@@ -598,10 +598,9 @@ object ValueSources {
         val f = evalLocal(x, ctx); d => f(d).toInt != 0
     }
 
-  /** Local exists: the engine's local row store is DENSE (every doc has
-    * every column), so FieldV always exists on this path — identical to
-    * the Column path whenever the corpus carries no NULLs, which the
-    * dvBytes-gated local accessor already assumes.
+  /** Local exists: FieldV always exists on this path — identical to the
+    * Column path whenever the corpus carries no NULLs; a NULL cell
+    * throws when the local field lookup reads it.
     */
   private def existsLocal(x: ValueSrc, ctx: LocalCtx): Long => Boolean =
     x match {

@@ -69,32 +69,44 @@ object StreamingIndex {
     * stores + a per-id window, nothing corpus-sized on the driver.
     */
   /** COMMITTED snapshots are immutable, so their (narrow) docs rows may
-    * cache per PATH for a driver-local /get replay — Solr's
-    * RealTimeGetComponent serves from the in-memory update log the same
-    * way. The snapshot LIST is re-read on every call (new batches must
-    * stay visible); a snapshot whose docs store exceeds the byte gate —
+    * cache per (path, manifest snapshot id) for a driver-local /get
+    * replay — Solr's RealTimeGetComponent serves from the in-memory
+    * update log the same way. The snapshot LIST is re-read on every call
+    * (new batches must stay visible), and the entries of `indexDir`'s
+    * snapshots that left it (merged away by [[compactTiered]]) are
+    * dropped then; a snapshot whose docs store exceeds the byte gate —
     * or whose schema drifts from the first snapshot's — marks itself
     * None and the call runs the distributed window plan instead.
     */
   private val snapDocsCache = scala.collection.concurrent.TrieMap.empty[
-    String,
+    (String, String),
     Option[(org.apache.spark.sql.types.StructType,
       Array[org.apache.spark.sql.Row])]]
+  /** Snapshot paths whose docs rows are cached (spec hook). */
+  private[graft] def cachedSnapshotPaths: Set[String] =
+    snapDocsCache.keySet.map(_._1).toSet
   private val rtgMaxLocalBytes: Long = 64L << 20 // compressed file bytes
 
   def realTimeGet(spark: SparkSession, indexDir: String,
       ids: Seq[Long]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val snaps = snapshots(indexDir)
+    val live = snapshots(indexDir)
+      .flatMap(p => IndexBuilder.readManifest(p).map(p -> _.snapshotId))
+    val snaps = live.map(_._1)
     require(snaps.nonEmpty, s"no committed snapshots under $indexDir")
+    val dir = new java.io.File(indexDir).getAbsolutePath
+    snapDocsCache.keys.foreach { key =>
+      if (new java.io.File(key._1).getParent == dir && !live.contains(key))
+        snapDocsCache.remove(key)
+    }
     val SnapN = """snap=(\d+)""".r
     def seqOf(p: String): Long = new java.io.File(p).getName match {
       case SnapN(n) => n.toLong
       case _ => -1L // tiered merge of older batches
     }
-    val cached = snaps.map { p =>
-      snapDocsCache.getOrElseUpdate(p, {
+    val cached = live.map { case key @ (p, _) =>
+      snapDocsCache.getOrElseUpdate(key, {
         val files = Option(new java.io.File(s"$p/docs").listFiles())
           .map(_.filter(_.isFile).toSeq).getOrElse(Nil)
         val bytes =

@@ -189,10 +189,12 @@ class ColdLookupSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong))
     val docBytes = bytes.map(_._1).sum
     val allBytes = docBytes + bytes.map(_._2).sum
+    val full = bytes.map { case (d, p) => d + p }
     // the gate admits the phrase (df·4 + 64 per term) and the cache's
-    // 2 × maxLocalBytes holds both terms' doc blobs, not doc + positions
-    val budget = math.max(terms.size * (8 * 4L + 64), docBytes)
-    assert(2 * budget < allBytes,
+    // 2 × maxLocalBytes holds both terms' doc blobs, or one term's doc
+    // and position blobs, not both terms' doc + positions
+    val budget = math.max(terms.size * (8 * 4L + 64), (full.max + 1) / 2)
+    assert(2 * budget < allBytes && docBytes <= 2 * budget,
       s"doc bytes $docBytes, all bytes $allBytes, budget $budget")
     val six = SegmentSearcher.load(dir)
     val s = new Searcher(spark, six, maxLocalBytes = budget)
@@ -201,8 +203,10 @@ class ColdLookupSpec extends AnyFunSuite {
     val hits = s.search(q, 10)
     assert(hits.length === 8)
     assert(hitsOf(hits) === hitsOf(ref.search(q, 10)))
-    // the second term's rows overflowed the budget and reset the cache
-    assert(s.blobCacheSize === 1)
+    // the second term's rows overflowed the budget and evicted the first
+    val st = s.cacheStats
+    assert(st.entries === 1 && st.evictions === 1, s"$st")
+    assert(full.contains(st.bytes), s"$st, row bytes $full")
     s.close(); ref.close()
   }
 

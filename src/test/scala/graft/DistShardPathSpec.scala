@@ -142,22 +142,26 @@ class DistShardPathSpec extends AnyFunSuite {
   }
 
   test("the driver-local match-score memo is capped and cleared on close") {
-    val s = new Searcher(spark, plain)
-    val cap = SegmentSearcher.LocalScoresEntries
     val terms = spark.read.parquet(s"${plain.dir}/termstats")
-      .select("term").orderBy("term").limit(cap + 8)
+      .select("term").orderBy("term").limit(40)
       .collect().map(_.getString(0)).toSeq
-    assert(terms.size === cap + 8)
+    assert(terms.size === 40)
+    val probe = new Searcher(spark, plain)
+    val size = probe.localMatchScores(TermQ(terms.head)).size
+    probe.close()
+    // a cache (2 × maxLocalBytes) of a few memos of the first term's size
+    val s = new Searcher(spark, plain, maxLocalBytes = 4 * (64L + 32L * size))
     val first = s.localMatchScores(TermQ(terms.head))
     terms.foreach(t => s.localMatchScores(TermQ(t)))
-    assert(s.localScoresCacheSize === cap) // the cap binds
+    val st = s.cacheStats
+    assert(st.evictions > 0, s"$st") // the bound binds
+    assert(st.bytes <= 8 * (64L + 32L * size), s"$st")
     // the eldest entry was evicted: a new walk, equal contents
     val again = s.localMatchScores(TermQ(terms.head))
     assert(!(again eq first))
     assert(again.toMap === first.toMap)
-    assert(s.localScoresCacheSize === cap)
     s.close()
-    assert(s.localScoresCacheSize === 0)
+    assert(s.cacheStats.entries === 0 && s.cacheStats.bytes === 0)
   }
 
   test("a warm distributed search is exactly one Spark job") {

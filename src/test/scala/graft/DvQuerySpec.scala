@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.index.IndexBuilder
+import graft.index.{DvUpdates, IndexBuilder}
 import graft.index.IndexBuilder.BuildConfig
 import graft.search._
 
@@ -112,6 +112,37 @@ class DvQuerySpec extends AnyFunSuite {
       minShouldMatch = 1), 12, "num", pred).toSeq
     assert(l == d)
     assert(l.nonEmpty)
+  }
+
+  test("DvFiltered over a nullable column: local ≡ forced-distributed") {
+    // NULL cells never match, on the driver tier as in the SQL filter
+    val pred = DvPred.Range(Some(10L), Some(35L))
+    val l = s.searchDvFiltered(TermQ("index"), 10, "numn", pred).toSeq
+    assert(l == sDist.searchDvFiltered(TermQ("index"), 10, "numn", pred).toSeq)
+    assert(l.size == 10)
+  }
+
+  test("DvFiltered reads docvalue updates on both tiers, string and long views") {
+    val copy = java.nio.file.Files.createTempDirectory("graft-dvq-upd").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir),
+      new java.io.File(copy))
+    val victims = rows.filter(_._2 != 7L).map(_._1).sorted.take(40)
+    DvUpdates.updateNumeric(spark, copy, "num", victims.map(_ -> 7L))
+    val ix = SegmentSearcher.load(copy)
+    val local = new Searcher(spark, ix)
+    val dist = new Searcher(spark, ix, maxLocalBytes = 0L)
+    val q = Query.or(TermQ("index"), TermQ("merge"), TermQ("def"))
+    val all = local.search(q, total.toInt, useWand = false).map(_.docId).toSet
+    val byId = rows.map(r => r._1 -> r._2).toMap
+    // the independent law: matches whose value is 7 after the update
+    val expect = all.filter(d => victims.contains(d) || byId(d) == 7L)
+    assert(expect.exists(d => byId(d) != 7L)) // the update has teeth
+    for (pred <- Seq(DvPred.Terms(Set("7")), DvPred.Numbers(Set(7L)))) {
+      val l = local.searchDvFiltered(q, 300, "num", pred).toSeq
+      assert(l == dist.searchDvFiltered(q, 300, "num", pred).toSeq, s"$pred")
+      assert(l.map(_.docId).toSet == expect, s"$pred")
+    }
+    local.close(); dist.close()
   }
 
   test("standalone: forced-distributed parity") {

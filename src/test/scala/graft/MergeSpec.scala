@@ -241,6 +241,28 @@ class MergeSpec extends AnyFunSuite {
       assert(hits(snaps.head, q) === hits(s"$tmp/full", q), s"q=$q")
   }
 
+  test("realTimeGet keeps only the live snapshots' docs cached after compactTiered") {
+    val idx = s"$tmp/rtg-cache"
+    Seq(100, 100, 100, 100).zipWithIndex.foreach { case (n, i) =>
+      build(numbered.slice(i * 100, i * 100 + n), f"$idx/snap=$i%03d")
+    }
+    val ids = Seq(5L, 150L, 390L)
+    def rtg(): Set[Long] = StreamingIndex.realTimeGet(spark, idx, ids)
+      .select("docId").collect().map(_.getLong(0)).toSet
+    val dir = new java.io.File(idx).getAbsolutePath
+    def cachedHere: Set[String] = StreamingIndex.cachedSnapshotPaths
+      .filter(p => new java.io.File(p).getParent == dir)
+    assert(rtg() === ids.toSet)
+    assert(cachedHere === StreamingIndex.snapshots(idx).toSet)
+    assert(cachedHere.size === 4)
+    assert(StreamingIndex.compactTiered(spark, idx,
+      maxMergeAtOnce = 10, segsPerTier = 1) === 1)
+    assert(rtg() === ids.toSet)
+    val live = StreamingIndex.snapshots(idx).toSet
+    assert(live.size === 1)
+    assert(cachedHere === live)
+  }
+
   test("tiered compaction carries deletes: tombstoned docs stay deleted") {
     val idx = s"$tmp/tiered-del"
     val slices = Seq(150, 100, 150)
