@@ -99,14 +99,20 @@ private[search] final class DocColumn private (val name: String,
 
   def isNull(i: Int): Boolean = nulls.get(i)
 
+  /** The numeric views read NULL as their least value (Long.MinValue,
+    * -Inf): where the distributed tier's Spark sort puts NULL, first
+    * ascending and last descending.
+    */
   def long(i: Int): Long =
-    if (longs != null) { nonNull(i); longs(i) }
-    else if (doubles != null) { nonNull(i); doubles(i).toLong }
+    if (isNull(i)) Long.MinValue
+    else if (longs != null) longs(i)
+    else if (doubles != null) doubles(i).toLong
     else cast(i, LongType).asInstanceOf[Long]
 
   def double(i: Int): Double =
-    if (doubles != null) { nonNull(i); doubles(i) }
-    else if (longs != null) { nonNull(i); longs(i).toDouble }
+    if (isNull(i)) Double.NegativeInfinity
+    else if (doubles != null) doubles(i)
+    else if (longs != null) longs(i).toDouble
     else cast(i, DoubleType).asInstanceOf[Double]
 
   def string(i: Int): String =
@@ -117,12 +123,7 @@ private[search] final class DocColumn private (val name: String,
 
   def binary(i: Int): Array[Byte] = refs(i).asInstanceOf[Array[Byte]]
 
-  private def nonNull(i: Int): Unit =
-    if (isNull(i))
-      throw new NullPointerException(s"'$name' is NULL at docId ${ids(i)}")
-
   private def cast(i: Int, to: DataType): Any = {
-    nonNull(i)
     val v = if (doubles == null) refs(i)
       else if (dt == FloatType) doubles(i).toFloat
       else doubles(i)

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.reflect.ClassTag
 import graft.core.Hit
 import graft.index.PostingsCodec
 import graft.search.SegmentSearcher.SegRow
@@ -18,8 +18,9 @@ import graft.search.SegmentSearcher.SegRow
   *   - across terms: SHOULD with Solr mm
   *
   * Execution mirrors the single-field Searcher: driver-local scorer trees
-  * through the blob cache when the estimated posting bytes fit, a
-  * groupByKey shard path when they don't (hot lists never centralize);
+  * through the blob cache when the estimated posting bytes fit, one
+  * shard-task RDD job ([[SearchJobs.byShard]]) when they don't (hot
+  * lists never centralize; [[perShard]] picks);
   * salted terms shard by docId mod S exactly like single-field queries, so
   * per-shard streams from different fields stay docId-aligned.
   */
@@ -192,59 +193,48 @@ object MultiField {
     val estBytes = stats.map(st =>
       st.valuesIterator.map(_._1 * 4L + 64L).sum).sum
     val budget = fields.map(_.searcher.maxLocalBytes).min
-    val partials: Seq[Array[Hit]] =
-      if (estBytes <= budget) execLocal(fields, stats, plan)
-      else execDistributed(fields, stats, plan)
-    TopK.merge(partials, k)
-  }
-
-  private def execLocal(fields: Seq[FieldRef],
-      stats: Seq[Map[String, (Long, Long)]], plan: MfPlan): Seq[Array[Hit]] = {
-    val rows: Map[(Int, String), Array[SegRow]] =
-      fields.zipWithIndex.flatMap { case (fr, i) =>
-        val present = plan.terms.filter(stats(i).contains).toSet
-        if (present.isEmpty) Nil
-        else fr.searcher.fetchRows(present).groupBy(_.term)
-          .map { case (t, rs) => (i, t) -> rs }
-      }.toMap
-    if (rows.isEmpty) return Nil
-    if (!plan.sharded)
-      Seq(execShardMf(-1, rows.view.mapValues(_.toSeq).toMap, plan))
-    else (0 until plan.numShards).flatMap { s =>
-      val shardRows = rows.view.mapValues(_.filter(r => r.salt == s || r.salt < 0).toSeq)
-        .filter(_._2.nonEmpty).toMap
-      if (shardRows.isEmpty) None else Some(execShardMf(s, shardRows, plan))
+    val parts = fields.zipWithIndex.map { case (fr, i) =>
+      (fr.searcher, plan.terms.filter(stats(i).contains).toSet,
+        (r: SegRow) => (i, r))
     }
+    TopK.merge(perShard(parts, (fr: (Int, SegRow)) => fr._2.salt,
+        estBytes <= budget, plan.sharded, plan.numShards, plan) { (s, it, p) =>
+      execShardMf(s, it.toSeq.groupBy(fr => (fr._1, fr._2.term))
+        .view.mapValues(_.map(_._2)).toMap, p)
+    }, k)
   }
 
-  private def execDistributed(fields: Seq[FieldRef],
-      stats: Seq[Map[String, (Long, Long)]], plan: MfPlan): Seq[Array[Hit]] = {
-    val spark = fields.head.searcher.spark
-    import spark.implicits._
-    val tagged: Seq[Dataset[(Int, SegRow)]] =
-      fields.zipWithIndex.flatMap { case (fr, i) =>
-        val present = plan.terms.filter(stats(i).contains).toSet
-        if (present.isEmpty) None
-        else Some(fr.searcher.prunedRows(present).map(r => (i, r)))
+  /** `exec(shard, rows, plan)` over each shard's rows (a row whose salt is
+    * ≥ 0 to that shard, any other to every shard; shard -1 takes every row
+    * when unsharded): on the driver through the blob cache when `local`,
+    * else in ONE shard-task job ([[SearchJobs.byShard]]). `parts` are
+    * (field's Searcher, its present terms, the row's tag); a shard without
+    * rows runs nothing.
+    */
+  private def perShard[V: ClassTag, P: ClassTag](
+      parts: Seq[(Searcher, Set[String], SegRow => V)], salt: V => Int,
+      local: Boolean, sharded: Boolean, numShards: Int, plan: P)(
+      exec: (Int, Iterator[V], P) => Array[Hit]): Seq[Array[Hit]] = {
+    val live = parts.filter(_._2.nonEmpty)
+    if (live.isEmpty) Nil
+    else if (local) {
+      val rows = live.flatMap { case (s, ts, tag) => s.fetchRows(ts).map(tag) }
+      if (rows.isEmpty) Nil
+      else if (!sharded) Seq(exec(-1, rows.iterator, plan))
+      else (0 until numShards).flatMap { s =>
+        val rs = rows.filter(r => salt(r) == s || salt(r) < 0)
+        if (rs.isEmpty) None else Some(exec(s, rs.iterator, plan))
       }
-    if (tagged.isEmpty) return Nil
-    val all = tagged.reduce(_ union _)
-    val S = plan.numShards
-    val sharded = plan.sharded
-    val bPlan = spark.sparkContext.broadcast(plan)
-    all.flatMap { case (f, r) =>
-        if (!sharded) Seq((0, (f, r)))
-        else if (r.salt >= 0) Seq((r.salt, (f, r)))
-        else (0 until S).map(s => (s, (f, r)))
-      }
-      .groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val p = bPlan.value
-        val blobs = it.map(_._2).toSeq.groupBy(fr => (fr._1, fr._2.term))
-          .view.mapValues(_.map(_._2)).toMap
-        execShardMf(if (p.sharded) shard else -1, blobs, p)
-      }
-      .collect().toSeq
+    } else {
+      val sc = live.head._1.spark.sparkContext
+      val rows = sc.union(live.map { case (s, ts, tag) =>
+        SearchJobs.mapped(s.termRows(ts), tag)
+      })
+      SearchJobs.gather(SearchJobs.byShard(rows, salt, None, sharded,
+          numShards, sc.broadcast(plan)) { (s, it, p) =>
+        Iterator.single(exec(s, it, p))
+      }).toSeq
+    }
   }
 
   /** One shard's scorer tree: per term a DisMax over qf-field TermScorers
@@ -445,64 +435,18 @@ object MultiField {
       st.valuesIterator.map(_._1 * 4L + 64L).sum
     }.sum
     val budget = fields.values.map(_.maxLocalBytes).min
-    val partials: Seq[Array[Hit]] =
-      if (estBytes <= budget) execLocalMasked(fields, byField, stats, primaryField, plan)
-      else execDistributedMasked(fields, byField, stats, primaryField, plan)
-    TopK.merge(partials, k)
+    val parts = byField.toSeq.map { case (f, ts) =>
+      (fields(f), ts.filter(stats(f).contains),
+        (r: SegRow) => r.copy(term = nsKey(f, r.term, primaryField)))
+    }
+    TopK.merge(perShard(parts, (r: SegRow) => r.salt, estBytes <= budget,
+        plan.sharded, plan.numShards, plan) { (s, it, p) =>
+      execShardMasked(s, it.map(r => r.term -> r).toMap, p)
+    }, k)
   }
 
   private def nsKey(f: String, t: String, primary: String): String =
     if (f == primary) t else s"$f$NS$t"
-
-  private def execLocalMasked(fields: Map[String, Searcher],
-      byField: Map[String, Set[String]],
-      stats: Map[String, Map[String, (Long, Long)]], primary: String,
-      plan: MaskedPlan): Seq[Array[Hit]] = {
-    val rows: Array[SegRow] = byField.toSeq.flatMap { case (f, ts) =>
-      val present = ts.filter(stats(f).contains)
-      fields(f).fetchRows(present).map(r =>
-        r.copy(term = nsKey(f, r.term, primary)))
-    }.toArray
-    if (rows.isEmpty) return Nil
-    if (!plan.sharded)
-      Seq(execShardMasked(-1, rows.map(r => r.term -> r).toMap, plan))
-    else (0 until plan.numShards).flatMap { s =>
-      val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-        .map(r => r.term -> r).toMap
-      if (blobs.isEmpty) None else Some(execShardMasked(s, blobs, plan))
-    }
-  }
-
-  private def execDistributedMasked(fields: Map[String, Searcher],
-      byField: Map[String, Set[String]],
-      stats: Map[String, Map[String, (Long, Long)]], primary: String,
-      plan: MaskedPlan): Seq[Array[Hit]] = {
-    val spark = fields(primary).spark
-    import spark.implicits._
-    val tagged: Seq[Dataset[SegRow]] = byField.toSeq.flatMap { case (f, ts) =>
-      val present = ts.filter(stats(f).contains)
-      if (present.isEmpty) None
-      else Some(fields(f).prunedRows(present)
-        .map(r => r.copy(term = nsKey(f, r.term, primary))))
-    }
-    if (tagged.isEmpty) return Nil
-    val all = tagged.reduce(_ union _)
-    val S = plan.numShards
-    val sharded = plan.sharded
-    val bPlan = spark.sparkContext.broadcast(plan)
-    all.flatMap { r =>
-        if (!sharded) Seq((0, r))
-        else if (r.salt >= 0) Seq((r.salt, r))
-        else (0 until S).map(s => (s, r))
-      }
-      .groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val p = bPlan.value
-        execShardMasked(if (p.sharded) shard else -1,
-          it.map(x => x._2.term -> x._2).toMap, p)
-      }
-      .collect().toSeq
-  }
 
   private[search] def execShardMasked(shard: Int,
       blobs: Map[String, SegRow], plan: MaskedPlan): Array[Hit] = {

@@ -3,7 +3,6 @@ package graft.search
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
 import graft.core.Hit
 import graft.index.{IndexBuilder, PostingsCodec}
@@ -340,22 +339,11 @@ object SegmentSearcher {
     }
   }
 
-  /** Columns of a pinned segments scan, in [[segRowsOf]]'s order. */
+  /** Columns of a pinned segments scan, in [[SearchJobs.segRowsOf]]'s
+    * order.
+    */
   private[search] val SegCols =
     Seq("term", "salt", "docBlocks", "skipData", "posBlocks", "payBlocks")
-
-  /** The rows of `terms` in a pinned segments scan. The term is matched
-    * on the scan's own bytes, so other rows' blobs are never copied out.
-    */
-  private[search] def segRowsOf(rows: RDD[InternalRow],
-      terms: Set[String]): RDD[SegRow] = {
-    val want = terms.map(UTF8String.fromString)
-    rows.flatMap { r =>
-      if (!want(r.getUTF8String(0))) None
-      else Some(SegRow(r.getString(0), r.getInt(1), r.getBinary(2),
-        r.getBinary(3), r.getBinary(4), r.getBinary(5)))
-    }
-  }
 
   /** One record of a cold stats lookup: a term's (df, ttf), or one of its
     * segment rows — None when the row is over its byte share.
@@ -1237,6 +1225,12 @@ object SegmentSearcher {
   *    scale — so no single node ever holds a full posting list: ONE Spark
   *    job per query (`shardTasks`) over the same pinned scan.
   *
+  * The executor functions of these RDD jobs (the pins, the cold lookup,
+  * the row fetch and the shard tasks) live in [[SearchJobs]], and the
+  * query path calls no `groupByKey` or `RDD.collect`: Spark's closure
+  * cleaner walks the declaring class of every closure on every call, and
+  * this class's bytecode is hundreds of KB.
+  *
   * Without `cacheSegments` nothing is pinned: stats and rows are per-query
   * pruned parquet reads that keep the `term` pushdown.
   */
@@ -1296,13 +1290,7 @@ final class Searcher(private[search] val spark: SparkSession,
     graft.core.CachePins.acquire(df)
     pinned.add(df)
     val rows = df.select((cols :+ "bucket").map(col): _*).queryExecution.toRdd
-    val bi = cols.size
-    val parts = rows.mapPartitions { it =>
-      val bs = new java.util.BitSet
-      it.foreach(r => bs.set(r.getInt(bi)))
-      Iterator.single(bs)
-    }.collect()
-    Pinned(df, rows, parts)
+    Pinned(df, rows, SearchJobs.bucketBits(rows, cols.size))
   }
 
   private lazy val pinnedSegments: Pinned =
@@ -1525,17 +1513,12 @@ final class Searcher(private[search] val spark: SparkSession,
     val share =
       if (maxLocalBytes <= 0) 0L
       else maxLocalBytes / (missing.size.toLong * m.numDocShards)
-    val want = missing.map(UTF8String.fromString)
-    val stats = pinnedStats.over(buckets).flatMap[ColdRec] { r =>
-      if (!want(r.getUTF8String(0))) None
-      else Some(Left(r.getString(0) -> (r.getLong(1), r.getLong(2))))
-    }
+    val stats = SearchJobs.statRecs(pinnedStats.over(buckets), missing)
     val all =
       if (share <= 0) stats
-      else stats.union(segRowsOf(pinnedSegments.over(buckets), missing)
-        .map[ColdRec](r =>
-          Right(r.term -> Some(r).filter(rowBytes(_) <= share))))
-    val got = all.collect()
+      else stats.union(SearchJobs.rowRecs(SearchJobs.segRowsOf(
+        pinnedSegments.over(buckets), missing), share))
+    val got = SearchJobs.gather(all)
     val st = got.collect { case Left(s) => s }.toMap
     if (share > 0) {
       val rows = got.collect { case Right(r) => r }.groupMap(_._1)(_._2)
@@ -2147,16 +2130,17 @@ final class Searcher(private[search] val spark: SparkSession,
       st: Map[String, (Long, Long)], plan: Plan)(
       f: (Int, Map[String, SegRow], Plan) => T): Seq[T] =
     if (fitsLocal(st, present)) onLocalPool(present, plan)(f(_, _, plan))
-    else shardTasks(present, plan) { (s, blobs, p) =>
+    else SearchJobs.gather(shardTasks(present, plan) { (s, blobs, p) =>
       Iterator.single(f(s, blobs, p))
-    }.collect().toSeq
+    }).toSeq
 
   /** The segment rows of `terms`: the pinned scan pruned to their buckets
     * (no per-query Catalyst planning), or without `cacheSegments` a pruned
     * parquet read.
     */
-  private def termRows(terms: Set[String]): RDD[SegRow] =
-    if (cacheSegments) segRowsOf(pinnedSegments.over(bucketsOf(terms)), terms)
+  private[search] def termRows(terms: Set[String]): RDD[SegRow] =
+    if (cacheSegments)
+      SearchJobs.segRowsOf(pinnedSegments.over(bucketsOf(terms)), terms)
     else prunedRows(terms).rdd
 
   private def bucketsOf(terms: Set[String]): Set[Int] =
@@ -2170,7 +2154,7 @@ final class Searcher(private[search] val spark: SparkSession,
     val missing = cached.collect { case (t, None) => t }.toSet
     val fetched =
       if (missing.isEmpty) Map.empty[String, Array[SegRow]]
-      else termRows(missing).collect().groupBy(_.term)
+      else SearchJobs.gather(termRows(missing)).groupBy(_.term)
     missing.foreach(t =>
       putBlob(t, fetched.getOrElse(t, Array.empty[SegRow])))
     cached.flatMap { case (t, c) =>
@@ -2212,14 +2196,18 @@ final class Searcher(private[search] val spark: SparkSession,
     }
 
   /** The distributed shard path (hot posting lists never centralize) as
-    * ONE Spark job of two stages, with no per-query Catalyst planning:
-    * the terms' rows ([[termRows]]) are keyed by shard — salted
-    * rows to their shard, cold rows to every shard — RDD-grouped, and
-    * `f(shard, blobs, plan)` runs per group on the broadcast Plan (shard
-    * -1 when unsharded). For a MatchAll-backed tree (or `forceAllShards`)
-    * zero-byte MARKER rows (salt == -2, skipped by `blobsOf`) seed every
-    * shard, or a shard without rows would form no group and lose its
-    * MatchAll-derived matches.
+    * ONE Spark job of two stages, with no per-query Catalyst planning and
+    * no closure of this class handed to Spark: the terms' rows
+    * ([[termRows]]) are keyed by shard — salted rows to their shard, cold
+    * rows to every shard — grouped by [[SearchJobs.byShard]]'s shuffle
+    * (no `groupByKey`), and `f(shard, blobs, plan)` runs per group on the
+    * broadcast Plan (shard -1 when unsharded); callers take the result
+    * with [[SearchJobs.gather]] (no `RDD.collect`). `f` rides inside the
+    * holder's closure, so it must not capture the Searcher. For a
+    * MatchAll-backed tree (or `forceAllShards`) zero-byte MARKER rows
+    * (salt == -2, skipped by `blobsOf`) seed every shard, or a shard
+    * without rows would form no group and lose its MatchAll-derived
+    * matches.
     */
   private def shardTasks[T: scala.reflect.ClassTag](present: Set[String],
       plan: Plan, forceAllShards: Boolean = false)(
@@ -2228,28 +2216,14 @@ final class Searcher(private[search] val spark: SparkSession,
     val sc = spark.sparkContext
     val rows =
       if (present.isEmpty) sc.emptyRDD[SegRow] else termRows(present)
-    val S = plan.numShards
-    val sharded = plan.sharded
-    val keyed = rows.flatMap { r =>
-      if (!sharded) Iterator.single((0, r))
-      else if (r.salt >= 0) Iterator.single((r.salt, r))
-      else Iterator.tabulate(S)(s => (s, r))
+    val empty = Array.empty[Byte]
+    val marker =
+      if (!forceAllShards && !Query.containsMatchAll(plan.query)) None
+      else Some(SegRow("", -2, empty, empty, empty, empty))
+    SearchJobs.byShard(rows, (r: SegRow) => r.salt, marker, plan.sharded,
+        plan.numShards, sc.broadcast(plan)) { (s, it, p) =>
+      f(s, blobsOf(it), p)
     }
-    val nKeys = if (sharded) S else 1
-    val all =
-      if (!forceAllShards && !Query.containsMatchAll(plan.query)) keyed
-      else {
-        val empty = Array.empty[Byte]
-        keyed.union(sc.parallelize(Seq.tabulate(nKeys)(s =>
-          (s, SegRow("", -2, empty, empty, empty, empty))), 1))
-      }
-    val bPlan = sc.broadcast(plan)
-    all.groupByKey(new org.apache.spark.HashPartitioner(
-        math.max(1, math.min(nKeys, sc.defaultParallelism))))
-      .flatMap { case (shard, it) =>
-        val p = bPlan.value
-        f(if (p.sharded) shard else -1, blobsOf(it.iterator), p)
-      }
   }
 
   /** Every live match of a planned query with its score, (docId, ms
@@ -2265,7 +2239,7 @@ final class Searcher(private[search] val spark: SparkSession,
     }.toDF("docId", "ms")
   }
 
-  private[search] def prunedRows(present: Set[String]): Dataset[SegRow] = {
+  private def prunedRows(present: Set[String]): Dataset[SegRow] = {
     import spark.implicits._
     segmentsDf
       .filter(col("bucket").isin(bucketsOf(present).toSeq: _*) &&
@@ -2811,12 +2785,12 @@ final class Searcher(private[search] val spark: SparkSession,
       // whose rescore-query blobs are empty (their hits keep firstScore)
       val bHits = spark.sparkContext.broadcast(byShard)
       val w = weight
-      shardTasks(present, plan, forceAllShards = true) { (s, blobs, p) =>
-        val hits = bHits.value.getOrElse(s, Array.empty[Hit])
-        if (hits.isEmpty) Iterator.empty
-        else SegmentSearcher.rescoreShard(s, blobs, p, hits, w).iterator
-      }.collect()
-        .foreach(h => queue.insert(h.docId, h.score))
+      SearchJobs.gather(shardTasks(present, plan, forceAllShards = true) {
+        (s, blobs, p) =>
+          val hits = bHits.value.getOrElse(s, Array.empty[Hit])
+          if (hits.isEmpty) Iterator.empty
+          else SegmentSearcher.rescoreShard(s, blobs, p, hits, w).iterator
+      }).foreach(h => queue.insert(h.docId, h.score))
     }
     queue.sortedHits
   }
@@ -3550,8 +3524,8 @@ final class Searcher(private[search] val spark: SparkSession,
         .orderBy(sortCols: _*)
         .limit(k)
         .collect()
-        .map(r => (r.getLong(0),
-          fields.indices.map(i => r.getLong(i + 1)).toArray))
+        .map(r => (r.getLong(0), fields.indices.map(i =>
+          if (r.isNullAt(i + 1)) Long.MinValue else r.getLong(i + 1)).toArray))
     }
   }
 
@@ -3574,6 +3548,9 @@ final class Searcher(private[search] val spark: SparkSession,
     * is sorted by `field` and the order is ascending, docId order IS field
     * order, so the first k live matches per shard dominate every later
     * match — both tiers stop each shard's walk there.
+    *
+    * A NULL sort key sorts and reads back as Long.MinValue on both tiers:
+    * first ascending, last descending, ties docId asc (Spark's NULL order).
     */
   def searchByField(q0: Query, k: Int, field: String,
       asc: Boolean = true): Array[(Long, Long)] =
@@ -3599,6 +3576,9 @@ final class Searcher(private[search] val spark: SparkSession,
     * an executor-side docvalues join, with the expression compiled to a
     * whole-stage-codegen'd Column and TakeOrderedAndProject for the
     * global top-k — nothing match-count-sized reaches the driver.
+    * A NULL docvalue binds -Inf on the local tier; a NULL expression value
+    * on the distributed one sorts first ascending, last descending, and
+    * reads back as -Inf.
     */
   def searchByExpr(q0: Query, k: Int, exprSrc: String,
       asc: Boolean = false): Array[(Long, Double)] = {
@@ -3640,7 +3620,8 @@ final class Searcher(private[search] val spark: SparkSession,
           col("docId").asc)
         .limit(k)
         .collect()
-        .map(r => (r.getLong(0), r.getDouble(1)))
+        .map(r => (r.getLong(0),
+          if (r.isNullAt(1)) Double.NegativeInfinity else r.getDouble(1)))
     }
   }
 
@@ -4403,6 +4384,10 @@ final class Searcher(private[search] val spark: SparkSession,
     queryMatched = qv => {
       val scores = localMatchScores(qv.q)
       d => scores.contains(d)
+    },
+    fieldExists = f => {
+      val c = column(f)
+      d => { val i = c.at(d); i >= 0 && !c.isNull(i) }
     })
 
   /** Bind the per-searcher-constant stat sources to ConstV — the

@@ -516,7 +516,10 @@ object ValueSources {
       norm: () => (Long => Float) =
         () => sys.error("norm() unavailable in this context"),
       queryMatched: QueryV => (Long => Boolean) =
-        qv => sys.error(s"exists($qv) unavailable in this context"))
+        qv => sys.error(s"exists($qv) unavailable in this context"),
+      /** Whether the doc holds a non-NULL value of the field. */
+      fieldExists: String => (Long => Boolean) =
+        f => sys.error(s"exists($f) unavailable in this context"))
 
   /** Driver-local evaluator — same float law as toColumn; the spec pins
     * the two equal on every node type.
@@ -598,12 +601,12 @@ object ValueSources {
         val f = evalLocal(x, ctx); d => f(d).toInt != 0
     }
 
-  /** Local exists: FieldV always exists on this path — identical to the
-    * Column path whenever the corpus carries no NULLs; a NULL cell
-    * throws when the local field lookup reads it.
+  /** Local exists: the [[existsCol]] law — FieldV ⇔ the column's null
+    * mask says non-NULL, QueryV ⇔ matched, anything else always.
     */
   private def existsLocal(x: ValueSrc, ctx: LocalCtx): Long => Boolean =
     x match {
+      case FieldV(f) => ctx.fieldExists(f)
       case qv: QueryV => ctx.queryMatched(qv)
       case _ => _ => true
     }

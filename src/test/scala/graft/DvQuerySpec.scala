@@ -122,6 +122,55 @@ class DvQuerySpec extends AnyFunSuite {
     assert(l.size == 10)
   }
 
+  private def bits(hs: Array[Hit]): Seq[(Long, Long)] =
+    hs.toSeq.map(h => (h.docId, java.lang.Double.doubleToLongBits(h.score)))
+
+  /** Docs whose `numn` is NULL. */
+  private lazy val nullDocs: Set[Long] =
+    s.docsDf.filter(col("numn").isNull).select("docId").collect()
+      .map(_.getLong(0)).toSet
+
+  test("nullable column, searchBoosted: local ≡ forced-distributed, NULL last") {
+    val all = s.search(TermQ("index"), total.toInt, useWand = false)
+    assert(all.exists(h => nullDocs(h.docId))) // matches hold NULLs
+    val l = s.searchBoosted(TermQ("index"), FieldV("numn"), 5)
+    assert(bits(l) == bits(sDist.searchBoosted(TermQ("index"), FieldV("numn"), 5)))
+    assert(l.length == 5 && l.forall(h => !nullDocs(h.docId)))
+  }
+
+  test("nullable column, searchByField: local ≡ forced-distributed, both directions") {
+    val desc = s.searchByField(TermQ("index"), 5, "numn", asc = false).toSeq
+    assert(desc == sDist.searchByField(TermQ("index"), 5, "numn", asc = false).toSeq)
+    assert(desc.size == 5 && desc.forall(h => !nullDocs(h._1)))
+    // ascending: NULL keys come first on both tiers, read as Long.MinValue
+    val asc = s.searchByField(TermQ("index"), 5, "numn").toSeq
+    assert(asc == sDist.searchByField(TermQ("index"), 5, "numn").toSeq)
+    assert(asc.size == 5 && asc.forall(h => nullDocs(h._1) && h._2 == Long.MinValue))
+    assert(asc.map(_._1) == asc.map(_._1).sorted)
+  }
+
+  test("nullable column, searchByExpr: local ≡ forced-distributed, NULL last") {
+    val l = s.searchByExpr(TermQ("index"), 5, "numn").toSeq
+    assert(l == sDist.searchByExpr(TermQ("index"), 5, "numn").toSeq)
+    assert(l.size == 5 && l.forall(h => !nullDocs(h._1)))
+  }
+
+  test("nullable column, searchFunction: local ≡ forced-distributed, exists reads the null mask") {
+    val l = s.searchFunction(FieldV("numn"), 5)
+    assert(bits(l) == bits(sDist.searchFunction(FieldV("numn"), 5)))
+    assert(l.length == 5 && l.forall(h => !nullDocs(h.docId)))
+    // exists(numn) is 0 on NULL docs and def() falls through them, on both
+    // tiers: the bottom of the exists ranking is all NULL docs
+    val n = total.toInt
+    for (vs <- Seq(ExistsV(FieldV("numn")),
+        DefV(Seq(FieldV("numn"), ConstV(-1f))))) {
+      val lv = s.searchFunction(vs, n)
+      assert(bits(lv) == bits(sDist.searchFunction(vs, n)), s"$vs")
+      assert(lv.filter(h => nullDocs(h.docId)).map(_.score).distinct.toSeq ==
+        Seq(if (vs.isInstanceOf[ExistsV]) 0.0 else -1.0), s"$vs")
+    }
+  }
+
   test("DvFiltered reads docvalue updates on both tiers, string and long views") {
     val copy = java.nio.file.Files.createTempDirectory("graft-dvq-upd").toString
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir),
